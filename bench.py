@@ -125,23 +125,6 @@ def main() -> None:
     run_stage("search_topk", searches)
     timings["searches_per_sec"] = round(N_SEARCHES / timings["search_topk"], 3)
 
-    # 4a. approximate serving (sign-LSH bucket pruning over the cached
-    # view) -- round-2 stage, no baseline counterpart; compare against
-    # search_topk for the exact-vs-approx trade
-    coll.search("text", "warmup", limit=10, strategy="lsh").collect()
-
-    def searches_lsh():
-        for i in range(N_SEARCHES):
-            coll.search(
-                "text", f"spark join query window batch {i}", limit=10,
-                strategy="lsh",
-            ).collect()
-
-    run_stage("search_topk_lsh", searches_lsh, repeats=2)
-    timings["lsh_searches_per_sec"] = round(
-        N_SEARCHES / timings["search_topk_lsh"], 3
-    )
-
     # 4b. driver-local serving (the reference's single-node model): the
     # serve view collected once to RAM, each query one numpy matmul and
     # zero Spark jobs (search_rows)

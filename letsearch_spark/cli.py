@@ -20,6 +20,8 @@ import json
 import os
 import sys
 
+from letsearch_spark.config import SEARCH_STRATEGIES
+
 
 def _home(args) -> str:
     return args.home or os.environ.get(
@@ -523,18 +525,15 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument(
         "--strategy",
         default="join",
-        choices=[
-            "auto", "join", "inlist", "local", "lsh", "ivf", "hybrid",
-            "local_hybrid", "pq", "ivf_pq", "hamming",
-        ],
+        choices=SEARCH_STRATEGIES,
         help="serving strategy (see Collection.search); 'auto' picks "
         "from the indexed size via the measured crossovers",
     )
     s.add_argument(
         "--where",
         default=None,
-        help="SQL predicate over serve-view columns (strategy=join; "
-        "combine with --filter-columns)",
+        help="SQL predicate over serve-view columns (strategy join, "
+        "hamming or maxsim; combine with --filter-columns)",
     )
     s.add_argument(
         "--filter-columns",

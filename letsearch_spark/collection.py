@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from letsearch_spark.chunker import ChunkerConfig, MarkdownChunker
-from letsearch_spark.config import CollectionConfig
+from letsearch_spark.config import SEARCH_STRATEGIES, CollectionConfig
 from letsearch_spark.embedders import Embedder, get_embedder
 from letsearch_spark.keys import (
     KEY_COL,
@@ -42,7 +42,6 @@ from letsearch_spark.keys import (
     add_dense_key_with_count,
     next_key_start,
 )
-from letsearch_spark.operators.topk import cosine_topk
 
 _IDENT_RE = re.compile(r"^[A-Za-z0-9_]+$")
 
@@ -148,9 +147,6 @@ class Collection:
         # driver + executor footprint grows with N. Corpus-scale query
         # sets belong in operators/topk.knn_join over a query DataFrame.
         self.search_many_max_queries: int = 10_000
-        # centroids of built IVF indexes (strategy='ivf'); the presence
-        # of a key marks the on-disk index current -- cleared on writes
-        self._ivf_centroids: dict = {}
         # per-column (PQCodebook, cached codes DataFrame) for
         # strategy='pq'; cleared on writes
         self._pq_index: dict = {}
@@ -207,11 +203,9 @@ class Collection:
         self.lexical_idf_cache_max_terms: int = 1_000_000
         # strategy='auto' thresholds, from the measured crossovers in
         # SCALING.md: exact cosine beats every approximate path below
-        # ~200k rows (LSH bucket pruning only pays off once the probed
-        # fraction of a big cache undercuts one full scan; ADC's
-        # per-query overhead dominates small scans); past the cache
-        # ceiling the on-disk IVF-PQ index (codes ~32x smaller, probes
-        # partition-pruned) is the shape that still serves
+        # ~200k rows (ADC's per-query overhead dominates small scans);
+        # past the cache ceiling the on-disk IVF-PQ index (codes ~32x
+        # smaller, probes partition-pruned) is the shape that still serves
         self.auto_exact_max_rows: int = 200_000
         self.auto_cached_max_rows: int = 5_000_000
         # per-column serve-view row counts backing the auto policy;
@@ -382,7 +376,6 @@ class Collection:
         # stale deletion vectors would hide the NEW corpus's keys, and
         # old index partitions hold the replaced corpus's vectors
         self._fs_delete(self.tombstones_path)
-        self._fs_delete(os.path.join(self.home, "ivf"))
         self._fs_delete(os.path.join(self.home, "ivf_pq"))
         self._fs_delete(os.path.join(self.home, "hamming"))
         return self.count()
@@ -673,7 +666,7 @@ class Collection:
         deletion-vector sidecar (``tombstones_path``) -- an O(matches)
         write, NOT a rewrite of the corpus. Every read surface
         (:meth:`docs`, :meth:`embeddings`, the serve views, the on-disk
-        IVF / IVF-PQ probes) anti-joins the tombstones, so deleted rows
+        IVF-PQ probes) anti-joins the tombstones, so deleted rows
         are immediately unreachable; ANN indexes stay valid and are NOT
         rebuilt (probes filter instead -- the index refresh machinery
         treats tombstoned index keys as live-enough). The bytes persist
@@ -686,7 +679,7 @@ class Collection:
         the docs and embeddings tables minus the matching rows AND any
         previously tombstoned rows, published through the same
         crash-safe rename-aside swap as :meth:`compact`; on-disk
-        IVF/IVF-PQ index partitions are rewritten with the doomed keys
+        IVF-PQ and hamming index files are rewritten with the doomed keys
         anti-joined out (no deleted vector is retained anywhere), while
         the quantizer sidecars survive so the index stays current --
         no forced rebuild. Batch purge deletions into one call.
@@ -752,7 +745,7 @@ class Collection:
         return n_del
 
     def _purge_keys_from_indexes(self, doomed: DataFrame) -> None:
-        """Rewrite every on-disk index (IVF, IVF-PQ, hamming signatures)
+        """Rewrite every on-disk index (IVF-PQ, hamming signatures)
         with ``doomed`` keys anti-joined out, preserving the quantizer
         sidecar files -- the index stays current (refresh reports no
         drift), no rebuild, and no deleted vector/code/signature is
@@ -761,7 +754,6 @@ class Collection:
         via :meth:`_size_hinted` (broadcast only when it fits)."""
         for column in self.config.index_columns:
             for path, sidecars, part_cols in (
-                (self.ivf_path(column), ("_centroids.npy",), ["_list"]),
                 (
                     self.ivf_pq_path(column),
                     ("_centroids.npy", "_codebook.npz"),
@@ -1179,7 +1171,6 @@ class Collection:
                 f"__docs_{column}",
                 f"__serve_{column}",
                 f"__rawserve_{column}",
-                f"__lsh_{column}",
                 f"__lex_{column}",
                 f"__lexdf_{column}",
             ]
@@ -1196,7 +1187,6 @@ class Collection:
         if column is None:
             self._local_idx.clear()
             self._embeddings_ok.clear()
-            self._ivf_centroids.clear()
             self._lex_stats.clear()
             self._col_rows.clear()
             for cb, coded in self._pq_index.values():
@@ -1229,7 +1219,6 @@ class Collection:
             self._local_idx.pop(column, None)
             self._local_idx.pop(f"__lex_{column}", None)
             self._embeddings_ok.discard(column)
-            self._ivf_centroids.pop(column, None)
             self._col_rows.pop(column, None)
             self._lex_stats.pop(column, None)
             self._lex_dfmap.pop(column, None)
@@ -1283,17 +1272,14 @@ class Collection:
 
         * <= ``auto_exact_max_rows`` (default 200k): ``'join'`` --
           exact single-job top-k; every approximate path is SLOWER here
-          (LSH bucket pruning saves nothing on a scan this small, PQ's
-          per-query ADC overhead dominates -- the measured footgun this
-          policy exists to prevent);
+          (PQ's per-query ADC overhead dominates a scan this small --
+          the measured footgun this policy exists to prevent);
         * <= ``auto_cached_max_rows`` (default 5M): ``'hamming'`` --
           the sign-bit signature cache (1 bit/dim, 32x smaller than the
           float view) plus an exact cosine rescore of the top
           ``hamming_rescore`` candidates. Measured at 1M rows / dim 64:
-          1.11 s/query vs 1.61 s exact and 3.76 s LSH (lsh displaced
-          from this tier round 7 -- its bucket pruning lost to the
-          brute bit-scan at every size measured), with a one-pass
-          build (~7 s at 1M) vs PQ's ~50 s codebook train;
+          1.11 s/query vs 1.61 s exact, with a one-pass build (~7 s
+          at 1M) vs PQ's ~50 s codebook train;
         * above: ``'ivf_pq'`` -- codes-on-disk, partition-pruned
           probes; the hamming scan is O(rows) per query, so past the
           cache ceiling the sublinear index wins (measured 0.72
@@ -1386,35 +1372,12 @@ class Collection:
         <=100 hits against the docs table -- one declarative plan, the
         right shape when the result feeds further DataFrame work.
 
-        strategy='inlist': the reference's own P3/P4 shape
-        (collection_actor.rs:532-583) -- collect the top-k keys, fetch
-        content with an IN-list filter (pushed to the parquet scan),
-        re-order driver-side. Two tiny sequential jobs; lower latency
-        for interactive use.
-
         strategy='local': the reference's actual serving model -- the
         whole (key, vector, content) view collected ONCE into driver
         RAM (numpy matrix + content list, like usearch's in-memory
         graph + DuckDB's open table), each query a single matmul with
         no Spark job at all. Only for collections that fit on the
         driver; Spark remains the build/scale path.
-
-        strategy='lsh': approximate -- the serve view carries a sign-LSH
-        bucket column and is cached REPARTITIONED BY BUCKET, so each
-        query's bucket filter prunes whole cached batches via their
-        min/max stats (the in-memory analog of parquet partition
-        pruning); exact cosine runs only inside the probed buckets
-        (multiprobe radius 1). Recall < 1 by design; the usearch-HNSW
-        trade expressed Spark-first.
-
-        strategy='ivf': approximate -- an on-disk IVF-Flat index
-        (operators/ann.py) partitioned by nearest-centroid list; the
-        query probes its ``ivf_nprobe`` nearest lists and the
-        ``_list IN (...)`` filter prunes parquet partitions, so the
-        scan reads ~nprobe/nlist of the index. Built lazily on first
-        use, rebuilt after writes. The right strategy when the
-        collection is too big to cache but the index lives on fast
-        storage.
 
         strategy='hybrid': dense + lexical -- the exact cosine leg fused
         with a BM25 leg over the indexed column (operators/bm25.py) by
@@ -1460,10 +1423,7 @@ class Collection:
             raise ValueError(f"limit must be in [1, 100], got {limit}")
         if column not in self.config.index_columns:
             raise ValueError(f"column {column!r} is not indexed")
-        if strategy not in (
-            "auto", "join", "inlist", "local", "lsh", "ivf", "hybrid",
-            "local_hybrid", "pq", "ivf_pq", "hamming", "maxsim",
-        ):
+        if strategy not in SEARCH_STRATEGIES:
             raise ValueError(f"unknown strategy {strategy!r}")
         if where is not None and strategy == "auto":
             # a filter changes the top-k population; 'auto' promises
@@ -1515,30 +1475,10 @@ class Collection:
             rows_out = self._local_hybrid_rows(column, query, qvec, limit)
             return _rows_df(self.spark, rows_out, _RESULT_SCHEMA)
 
-        if strategy == "lsh":
-            return self._search_lsh(column, qvec, limit)
-
-        if strategy == "ivf":
-            return self._search_ivf(column, qvec, limit)
-
         if strategy == "local":
             rows_out = self._local_topk(self._local_bundle(column), qvec, limit)
             return _rows_df(self.spark, rows_out, _RESULT_SCHEMA)
         serve = self._serve_view(column)
-
-        if strategy == "inlist":
-            # the reference's literal P3/P4 shape: top-k keys first, then
-            # an IN-list fetch + driver-side reorder (two tiny jobs)
-            hits = cosine_topk(
-                serve.select(KEY_COL, "vector"),
-                qvec,
-                k=limit,
-                key_col=KEY_COL,
-                vec_col="vector",
-            ).collect()
-            scores = {int(r[KEY_COL]): float(r["score"]) for r in hits}
-            ordered = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
-            return self._fetch_ordered(serve, ordered)
 
         # single-job path: score + top-k + content projection in ONE
         # TakeOrderedAndProject over the cached serve view -- the Spark
@@ -2546,59 +2486,7 @@ class Collection:
                 rrf[k] = rrf.get(k, 0.0) + 1.0 / (60.0 + rank)
         return sorted(rrf.items(), key=lambda kv: (-kv[1], kv[0]))[:limit]
 
-    def _fetch_ordered(self, serve: DataFrame, ordered) -> DataFrame:
-        """Driver-side fetch-back shared by strategy='inlist' and
-        'hybrid': IN-list content fetch against the cached serve view +
-        reorder to the given (key, score) list, with the P6 null-content
-        drop."""
-        if not ordered:
-            return _rows_df(self.spark, [], _RESULT_SCHEMA)
-        fetched = (
-            serve.where(F.col(KEY_COL).isin(*[k for k, _ in ordered]))
-            .select(F.col(KEY_COL).alias("key"), "content")
-            .collect()
-        )
-        content = {int(r["key"]): r["content"] for r in fetched}
-        rows = [
-            (k, content[k], s)
-            for k, s in ordered
-            if content.get(k) is not None  # P6 null-content drop
-        ]
-        return _rows_df(self.spark, rows, _RESULT_SCHEMA)
-
-    _LSH_BITS = 8
-    _LSH_SEED = 42
-
-    def _search_lsh(self, column: str, qvec, limit: int) -> DataFrame:
-        import numpy as np
-
-        from letsearch_spark.operators.topk import (
-            _hyperplanes,
-            multiprobe_signatures,
-        )
-
-        indexed = self._lsh_view(column)
-        dim = len(qvec)
-        planes = _hyperplanes(dim, self._LSH_BITS, self._LSH_SEED)
-        q = np.asarray(qvec, dtype=np.float64)
-        sig = 0
-        for i, plane in enumerate(planes):
-            if float(plane @ q) >= 0:
-                sig |= 1 << i
-        probes = multiprobe_signatures(sig, self._LSH_BITS, radius=1)
-        return (
-            indexed.where(F.col("_bucket").isin(*[int(p) for p in probes]))
-            .where(F.col("content").isNotNull())
-            .select(
-                F.col(KEY_COL).alias("key"),
-                "content",
-                self._serve_score(qvec).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc("key"))
-            .limit(limit)
-        )
-
-    # IVF serving knobs (FAISS-style recall/latency trade)
+    # IVF-PQ coarse-quantizer knobs (FAISS-style recall/latency trade)
     ivf_nlist = 16
     ivf_nprobe = 2
     # 'sample': driver-side k-means on the bounded smallest-key sample;
@@ -2615,9 +2503,6 @@ class Collection:
     # but the frozen CENTER is statistical -- past this un-indexed
     # fraction the refresh recenters (full rebuild)
     hamming_recenter_fraction = 0.5
-
-    def ivf_path(self, column: str) -> str:
-        return os.path.join(self.home, "ivf", f"column={column}")
 
     def _index_serve_frame(self, column: str) -> DataFrame:
         # null-content rows never serve (P6 drop) -- exclude them at
@@ -2698,73 +2583,6 @@ class Collection:
         if n_new > rebuild_fraction * (n_idx + n_new):
             return "rebuild", None
         return "append", new
-
-    def build_ivf_index(self, column: str) -> None:
-        """Train + assign + persist the IVF-Flat index for ``column``
-        (operators/ann.py build_ivf) from the dequantized serve view;
-        partitioned by ``_list`` so probes prune parquet partitions.
-        Centroids persist beside the index (underscore file, invisible
-        to the parquet reader) so restarts and incremental refreshes
-        reuse them. Full (re)build -- prefer :meth:`refresh_ivf_index`,
-        which only falls back here when it must."""
-        import numpy as np
-
-        from letsearch_spark.operators.ann import build_ivf
-
-        import io
-
-        emb = self._index_serve_frame(column)
-        centroids = build_ivf(
-            emb,
-            self.ivf_path(column),
-            nlist=self.ivf_nlist,
-            key_col=KEY_COL,
-            train=self.ivf_train,
-        )
-        buf = io.BytesIO()
-        np.save(buf, centroids)
-        self._fs_write_bytes(
-            os.path.join(self.ivf_path(column), "_centroids.npy"),
-            buf.getvalue(),
-        )
-        self._ivf_centroids[column] = centroids
-
-    def refresh_ivf_index(self, column: str) -> str:
-        """Bring the on-disk IVF-Flat index up to date with the
-        embeddings at BATCH cost: no-op when current, append-assign
-        only the new keys under the frozen centroids while the
-        un-indexed fraction stays within ``ivf_rebuild_fraction``, full
-        retrain+rebuild otherwise (or when keys vanished / the
-        quantizer file is gone -- a full overwrite drops it on purpose,
-        see ``_drop_index_meta``). Returns the action taken:
-        'built' | 'current' | 'appended' | 'rebuilt'."""
-        import numpy as np
-
-        from letsearch_spark.operators.ann import append_ivf
-
-        import io
-
-        path = self.ivf_path(column)
-        cpath = os.path.join(path, "_centroids.npy")
-        action, new = self._plan_index_refresh(column, path)
-        cent = None
-        if action in ("current", "append"):
-            cent = self._ivf_centroids.get(column)
-            if cent is None:
-                raw = self._fs_read_bytes(cpath)
-                if raw is not None:
-                    cent = np.load(io.BytesIO(raw))
-            if cent is None:
-                action = "rebuild"  # index data without its quantizer
-        if action == "current":
-            self._ivf_centroids[column] = cent
-            return "current"
-        if action == "append":
-            append_ivf(new, path, cent)
-            self._ivf_centroids[column] = cent
-            return "appended"
-        self.build_ivf_index(column)
-        return "built" if action == "missing" else "rebuilt"
 
     # PQ serving knobs (memory/recall trade; 8x8 = 1 byte per 8 dims)
     pq_m = 8
@@ -2911,13 +2729,13 @@ class Collection:
     def refresh_hamming_index(self, column: str) -> str:
         """Bring the on-disk (key, sig) parquet at :meth:`hamming_path`
         up to date at BATCH cost -- the signature sibling of
-        :meth:`refresh_ivf_index`, but simpler: signatures are pure
+        :meth:`refresh_ivf_pq_index`, but simpler: signatures are pure
         per-row functions of the vector (no quantizer to freeze or
         drift), so incremental maintenance is EXACT at any fraction --
         'append' just computes the new keys' signatures. 'rebuild' only
         when indexed keys vanished outside the tombstone protocol (a
         full replace); a full re-embed deletes the directory outright
-        via ``_drop_index_meta`` (same stale-vector guard as IVF).
+        via ``_drop_index_meta`` (same stale-vector guard as IVF-PQ).
         Returns 'built' | 'current' | 'appended' | 'rebuilt'."""
         import io
 
@@ -2955,7 +2773,7 @@ class Collection:
             return "current"
         if action == "append":
             # new contains the fresh serve rows (key, vector); compute
-            # ONLY their signatures under the FROZEN center (like IVF's
+            # ONLY their signatures under the FROZEN center (like IVF-PQ's
             # frozen centroids -- the threshold must match the stored
             # signatures). The signatures themselves are exact at any
             # fraction, but the CENTER is statistical: once the
@@ -3294,7 +3112,7 @@ class Collection:
     def _fetch_back_hits(self, hits, column: str, limit: int) -> DataFrame:
         """Shared <=100-row fetch-back: broadcast the hit set against
         the docs table, drop null content (P6), serve in (score desc,
-        key asc) order -- used by the ivf / pq / ivf_pq strategies."""
+        key asc) order -- used by the pq / ivf_pq strategies."""
         docs = self.docs().select(
             F.col(KEY_COL), F.col(column).alias("content")
         )
@@ -3308,7 +3126,7 @@ class Collection:
         )
 
     def refresh_ivf_pq_index(self, column: str) -> str:
-        """:meth:`refresh_ivf_index`'s sibling for the compressed index:
+        """Bring the on-disk IVF-PQ index up to date at BATCH cost:
         append-assign + encode only the NEW keys under the frozen
         coarse centroids and codebook while the un-indexed fraction
         stays within ``ivf_rebuild_fraction``; retrain + re-encode
@@ -3378,17 +3196,14 @@ class Collection:
         which the refresh key-diff cannot see, so the quantizer-missing
         path forces the rebuild (the in-memory dicts only protect THIS
         process). Append-only writes skip this (drop_index_meta=False)
-        and let :meth:`refresh_ivf_index`/:meth:`refresh_ivf_pq_index`
-        top the index up at batch cost."""
-        for path, names in (
-            (self.ivf_pq_path(column), ("_centroids.npy", "_codebook.npz")),
-            (self.ivf_path(column), ("_centroids.npy",)),
-        ):
-            for name in names:
-                try:
-                    self._fs_delete(os.path.join(path, name))
-                except Exception:
-                    pass
+        and let :meth:`refresh_ivf_pq_index`/:meth:`refresh_hamming_index`
+        top the indexes up at batch cost."""
+        path = self.ivf_pq_path(column)
+        for name in ("_centroids.npy", "_codebook.npz"):
+            try:
+                self._fs_delete(os.path.join(path, name))
+            except Exception:
+                pass
         # the signature parquet has no quantizer file to drop, so the
         # same stale-vector guard deletes the directory itself (a full
         # re-embed changes vectors behind EXISTING keys, which the
@@ -3454,54 +3269,6 @@ class Collection:
         )
         return self._fetch_back_hits(hits, column, limit)
 
-    def _search_ivf(self, column: str, qvec, limit: int) -> DataFrame:
-        from letsearch_spark.operators.ann import ivf_topk
-
-        if column not in self._ivf_centroids:
-            self.refresh_ivf_index(column)
-        hits = ivf_topk(
-            self.spark,
-            self.ivf_path(column),
-            self._ivf_centroids[column],
-            qvec,
-            k=limit,
-            nprobe=self.ivf_nprobe,
-            key_col=KEY_COL,
-            exclude=self._tombstones_hinted(),
-        )
-        # <=100 hits: broadcast fetch-back, same shape as strategy='join'
-        return self._fetch_back_hits(hits, column, limit)
-
-    def _lsh_view(self, column: str) -> DataFrame:
-        """Serve view + sign-LSH bucket, repartitioned by bucket and
-        cached: cached batches then hold few distinct buckets each, so a
-        bucket filter skips whole batches via their min/max stats."""
-        view = self._emb_cache.get(f"__lsh_{column}")
-        if view is None:
-            from letsearch_spark.operators.topk import (
-                _hyperplanes,
-                lsh_signature_col,
-            )
-
-            serve = self._serve_view(column)
-            dim = len(serve.select("vector").first()[0])
-            planes = _hyperplanes(dim, self._LSH_BITS, self._LSH_SEED)
-            # repartition ALONE is not enough: a partition holds several
-            # buckets and un-sorted rows give every cached batch a wide
-            # min/max, defeating stats pruning; sorting within partitions
-            # makes batches bucket-runs so the filter skips whole batches
-            view = (
-                serve.withColumn(
-                    "_bucket", lsh_signature_col(F.col("vector"), planes)
-                )
-                .repartition("_bucket")
-                .sortWithinPartitions("_bucket")
-                .cache()
-            )
-            view.count()
-            self._emb_cache[f"__lsh_{column}"] = view
-        return view
-
     @staticmethod
     def _local_topk(bundle, qvec, limit: int, order_digits=None) -> list[tuple]:
         """``order_digits`` rounds the ordering key (scores returned stay
@@ -3546,7 +3313,7 @@ class Collection:
                     f"collection {self.config.name!r} column {column!r} has "
                     f"{n} rows -- above local_serve_max_rows="
                     f"{self.local_serve_max_rows} for driver-local serving; "
-                    f"use strategy='join' or strategy='lsh' (distributed), "
+                    f"use strategy='join' or strategy='hamming' (distributed), "
                     f"or raise collection.local_serve_max_rows explicitly"
                 )
             rows = view.collect()

@@ -13,6 +13,14 @@ import os
 import tempfile
 from dataclasses import asdict, dataclass, field
 
+# per-query serving strategies accepted by Collection.search (and the
+# CLI's ``search --strategy`` choices); kept here, pyspark-free, so the
+# two lists cannot drift apart
+SEARCH_STRATEGIES: tuple[str, ...] = (
+    "auto", "join", "local", "hybrid", "local_hybrid", "pq", "ivf_pq",
+    "hamming", "maxsim",
+)
+
 
 @dataclass
 class CollectionConfig:

@@ -1,20 +1,19 @@
-"""IVF (inverted-file) approximate nearest neighbor index.
-
-The second scale path for similarity search beside sign-LSH
-(operators/topk.py). Classic IVF-Flat, Spark-first:
+"""IVF (inverted-file) coarse quantizer: k-means centroids and list
+assignment, the shared first half of the IVF-PQ index
+(operators/pq.py) and of the k-means-based dedup/curation operators.
 
 * **train**: k-means centroids fitted driver-side with numpy on a
-  bounded sample (centroids are tiny: nlist x dim doubles);
+  bounded sample (centroids are tiny: nlist x dim doubles), or by
+  distributed Lloyd iterations over every vector
+  (:func:`kmeans_fit_full`);
 * **assign**: every vector gets its nearest-centroid id via a
   vectorized pandas UDF (one matmul per Arrow batch -- the bytes never
-  leave the executor); persisted partitioned by ``_list`` so parquet
-  partition pruning turns a probe into a scan of nprobe/nlist of the
-  data;
-* **probe**: exact cosine re-rank inside the probed lists only.
+  leave the executor); an index persisted partitioned by ``_list``
+  turns a probe into a parquet-pruned scan of nprobe/nlist of the data.
 
 Recall/latency trades off via nlist & nprobe exactly like FAISS IVF.
-At 100 TB: training samples ~1M rows (bounded collect), assignment is
-a single map-side pass, and every query touches nprobe partitions.
+At 100 TB: training samples ~1M rows (bounded collect) and assignment
+is a single map-side pass.
 """
 
 from __future__ import annotations
@@ -25,8 +24,6 @@ import numpy as np
 import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from letsearch_spark.operators.topk import cosine_topk
 
 
 def train_centroids(
@@ -150,7 +147,8 @@ def kmeans_fit_full(
     TakeOrderedAndProject), or the first ``nlist`` rows if ``key_col``
     is None (partition-order dependent -- pass a key for reproducibility).
     Returns the (nlist, dim) centroid matrix; feed it to
-    :func:`assign_lists` / :func:`build_ivf` for the final index.
+    :func:`assign_lists` (or operators/pq.py build_ivf_pq) for the
+    final index.
 
     ``pca`` (r9): optional pre-projection (int k or a fitted
     operators/pca.py PCAModel) -- every iteration's assign matmul and
@@ -223,89 +221,3 @@ def kmeans_fit_full_twin(
             new[c] = _unit(mean)
         cent = new
     return cent
-
-
-def build_ivf(
-    embeddings: DataFrame,
-    path: str,
-    nlist: int = 16,
-    vec_col: str = "vector",
-    key_col: str | None = None,
-    train: str = "sample",
-) -> np.ndarray:
-    """Train + assign + persist partitioned by list id; returns centroids
-    (caller persists them beside the index, e.g. np.save).
-
-    ``train='sample'`` (default): driver-side k-means on the bounded
-    smallest-key sample (:func:`train_centroids`). ``train='full'``:
-    distributed Lloyd iterations over every vector
-    (:func:`kmeans_fit_full`) -- for corpora whose head keys don't
-    represent the distribution."""
-    if train == "full":
-        centroids = kmeans_fit_full(
-            embeddings, nlist=nlist, vec_col=vec_col, key_col=key_col
-        )
-    elif train == "sample":
-        centroids = train_centroids(
-            embeddings, nlist=nlist, vec_col=vec_col, key_col=key_col
-        )
-    else:
-        raise ValueError(f"train must be sample|full, got {train!r}")
-    assigned = assign_lists(embeddings, centroids, vec_col=vec_col)
-    # static overwrite: under the session-wide dynamic mode embed_column
-    # sets, a rebuild would keep the files of any list absent from the
-    # new assignment -- stale vectors with the OLD centroid geometry
-    assigned.write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("_list").parquet(path)
-    return centroids
-
-
-def append_ivf(
-    new_embeddings: DataFrame,
-    path: str,
-    centroids: np.ndarray,
-    vec_col: str = "vector",
-) -> None:
-    """Assign ONLY the new vectors to the EXISTING (frozen) centroids
-    and append them into the partitioned index -- the K5 anti-join
-    shape applied to index maintenance. Appending a batch costs one
-    map-side assignment pass over the batch; at 100 TB a full rebuild
-    per append would dominate the ingest, so this is the default
-    maintenance path (Collection.refresh_ivf_index) with a rebuild
-    threshold bounding quantizer drift: frozen centroids lose recall
-    if the new data's distribution shifts, so callers rebuild once the
-    un-indexed fraction crosses ``ivf_rebuild_fraction``."""
-    assigned = assign_lists(new_embeddings, centroids, vec_col=vec_col)
-    assigned.write.mode("append").partitionBy("_list").parquet(path)
-
-
-def ivf_topk(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    query_vec: Sequence[float],
-    k: int = 10,
-    nprobe: int = 2,
-    key_col: str = "_key",
-    vec_col: str = "vector",
-    exclude: DataFrame | None = None,
-) -> DataFrame:
-    """Probe the nprobe nearest lists; exact cosine top-k inside them.
-    The ``_list IN (...)`` filter prunes parquet partitions, so the scan
-    reads ~nprobe/nlist of the index. ``exclude``: optional (key_col)
-    frame anti-joined BEFORE the top-k truncation -- the deletion-vector
-    probe filter (tombstoned keys must not consume result slots); pass
-    a broadcast-hinted frame when the set is known small (the
-    collection sizes the hint via tombstone_broadcast_max)."""
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    qn = np.linalg.norm(q)
-    if qn > 0:
-        q = q / qn
-    order = np.argsort(-(centroids @ q))[:nprobe]
-    df = spark.read.parquet(path).filter(
-        F.col("_list").isin(*[int(i) for i in order])
-    )
-    if exclude is not None:
-        df = df.join(exclude.select(key_col), key_col, "left_anti")
-    return cosine_topk(df, query_vec, k=k, key_col=key_col, vec_col=vec_col)

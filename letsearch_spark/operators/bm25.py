@@ -206,8 +206,11 @@ def bm25_scores_with_idf(
     # operator-for-operator, double literals round-trip exactly via
     # CAST('<repr>' AS DOUBLE), and multiplication commutes bitwise in
     # IEEE754 -- so scores are bit-identical (pinned by
-    # test_bm25_with_idf_sql_fast_path_matches_column_twin).
-    if all("'" not in t and "\\" not in t for t in terms):
+    # test_bm25_with_idf_sql_fast_path_matches_column_twin). Non-finite
+    # k1/b/avgdl/idf values take the Column path too: their repr
+    # ('inf', 'nan') would lean on Spark's special-string casts.
+    finite = all(math.isfinite(x) for x in (k1, b, avgdl, *idfs.values()))
+    if finite and all("'" not in t and "\\" not in t for t in terms):
         q = lambda t: "'" + t + "'"  # noqa: E731 -- charset checked above
         d = lambda x: f"CAST('{x!r}' AS DOUBLE)"  # noqa: E731
         map_sql = "map(" + ", ".join(

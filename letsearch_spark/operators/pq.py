@@ -287,7 +287,7 @@ def build_ivf_pq(
     float vectors are NOT stored, which is the point.
 
     Returns ``(centroids, codebook)``; persist them beside the index
-    (np.save / codebook.save) the same way build_ivf's caller does.
+    (np.save / codebook.save), as Collection.build_ivf_pq_index does.
 
     ``key_col`` only controls deterministic training-sample selection;
     the persisted index always carries EVERY input column except the
@@ -342,10 +342,9 @@ def append_ivf_pq(
     """Assign + encode ONLY the new vectors under the FROZEN coarse
     centroids and codebook, appending to the partitioned index --
     maintenance at batch cost instead of a full re-encode of the
-    collection (ann.append_ivf's sibling for the compressed index).
-    Same scan/compression geometry as :func:`build_ivf_pq`; quantizer
-    drift under distribution shift is bounded by the caller's rebuild
-    threshold (Collection.refresh_ivf_pq_index)."""
+    collection. Same scan/compression geometry as :func:`build_ivf_pq`;
+    quantizer drift under distribution shift is bounded by the caller's
+    rebuild threshold (Collection.refresh_ivf_pq_index)."""
     from letsearch_spark.operators.ann import assign_lists
 
     coded = encode_pq(

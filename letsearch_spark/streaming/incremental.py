@@ -170,7 +170,7 @@ def _validate_refresh_index(refresh_index: str | None) -> None:
     slipped past one of them into an opaque mid-stream
     AnalysisException). Raises ValueError up front; called by both
     streaming entry points AND the dispatcher."""
-    if refresh_index in (None, "ivf", "ivf_pq", "hamming"):
+    if refresh_index in (None, "ivf_pq", "hamming"):
         return
     if (
         isinstance(refresh_index, str)
@@ -179,25 +179,22 @@ def _validate_refresh_index(refresh_index: str | None) -> None:
     ):
         return
     raise ValueError(
-        "refresh_index must be None, 'ivf', 'ivf_pq', 'hamming' or "
+        "refresh_index must be None, 'ivf_pq', 'hamming' or "
         f"'maxsim_pool:<group_col>', got {refresh_index!r}"
     )
 
 
 def _maybe_refresh_index(coll, col: str, refresh_index: str | None) -> None:
     """Keep a serving index fresh at BATCH cost after an incremental
-    embed: the refresh paths (collection.py refresh_ivf_index /
-    refresh_ivf_pq_index / refresh_hamming_index /
-    refresh_maxsim_pool_index) append new keys under frozen
-    quantizers/centers (the pooled sidecar re-pools only touched
-    groups) and rebuild only past their drift thresholds -- a
+    embed: the refresh paths (collection.py refresh_ivf_pq_index /
+    refresh_hamming_index / refresh_maxsim_pool_index) append new keys
+    under frozen quantizers/centers (the pooled sidecar re-pools only
+    touched groups) and rebuild only past their drift thresholds -- a
     per-batch full rebuild would be quadratic in total ingested data
     (SCALING.md's ivf_append-vs-rebuild probe)."""
     if refresh_index is None:
         return
-    if refresh_index == "ivf":
-        coll.refresh_ivf_index(col)
-    elif refresh_index == "ivf_pq":
+    if refresh_index == "ivf_pq":
         coll.refresh_ivf_pq_index(col)
     elif refresh_index == "hamming":
         # r10: signature sidecar freshness at batch cost (append

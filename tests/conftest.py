@@ -59,6 +59,23 @@ def _suite_shards(files: list[str], n: int) -> list[list[str]]:
     return [members for _, members in buckets if members]
 
 
+def _passthrough_flags(invocation_args, suite_args) -> list[str]:
+    """The invocation's arguments minus the suite path(s) being
+    re-sharded. Raw strings are compared on purpose: ``os.path.abspath``
+    maps ``""`` to the cwd, so a path comparison also dropped the empty
+    value of ``-m ""`` and handed every worker a bare ``-m``."""
+    return [a for a in invocation_args if a not in suite_args]
+
+
+def _worker_driver_memory(workers: int, total_bytes: int) -> str:
+    """Spark driver heap per worker: half the machine's memory split
+    across the workers, capped at get_spark's 8g default. Every worker
+    is a local-mode JVM, so N workers at 8g each oversubscribe a small
+    host and the kernel OOM-kills one worker's JVM mid-suite."""
+    mb = total_bytes // 2 // workers // 2**20
+    return f"{min(8192, max(1024, mb))}m"
+
+
 def pytest_cmdline_main(config):
     if os.environ.get("LS_SUITE_WORKER") or os.environ.get("LS_SUITE_SERIAL"):
         return None
@@ -68,6 +85,12 @@ def pytest_cmdline_main(config):
         or getattr(opt, "keyword", "")
         or getattr(opt, "markexpr", "") not in ("", "not deep")
         or getattr(opt, "numprocesses", None)  # a real xdist showed up
+        # --lf/--ff/--sw read the test cache, which workers run without
+        # (-p no:cacheprovider): honour them serially instead
+        or getattr(opt, "lf", False)
+        or getattr(opt, "failedfirst", False)
+        or getattr(opt, "stepwise", False)
+        or getattr(opt, "stepwise_skip", False)
     ):
         return None
     tests_dir = os.path.dirname(os.path.abspath(__file__))
@@ -83,12 +106,15 @@ def pytest_cmdline_main(config):
     shards = _suite_shards(files, workers)
 
     # pass the original flags through (minus the suite path we re-shard)
-    flags = [
-        a for a in config.invocation_params.args
-        if os.path.abspath(a) not in (tests_dir, os.path.dirname(tests_dir))
-    ]
+    flags = _passthrough_flags(config.invocation_params.args, config.args)
     base_tmp = tempfile.mkdtemp(prefix="ls_suite_")
     env = dict(os.environ, LS_SUITE_WORKER="1")
+    env.setdefault(
+        "SPARK_DRIVER_MEMORY",
+        _worker_driver_memory(
+            len(shards), os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        ),
+    )
     t0 = time.time()
     print(
         f"[suite-shard] {len(files)} files -> {len(shards)} workers "

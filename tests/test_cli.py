@@ -1,10 +1,14 @@
 """CLI verb tests (A5/A6 surface) -- in-process (getOrCreate reuses the
 test session), covering index -> search -> add-docs round trip."""
 
+import argparse
 import json
 import os
 
+import pytest
+
 from letsearch_spark.cli import build_parser, cmd_add_docs, cmd_index, cmd_search
+from letsearch_spark.config import SEARCH_STRATEGIES
 
 
 def test_parser_defaults():
@@ -17,6 +21,59 @@ def test_parser_defaults():
     a = p.parse_args(["index", "--files", "x.parquet"])
     assert a.index_columns == "text"
     assert a.model == "stub://16"
+
+
+def _search_strategy_choices():
+    p = build_parser()
+    sub = next(a for a in p._actions if isinstance(a, argparse._SubParsersAction))
+    search = sub.choices["search"]
+    return next(a for a in search._actions if a.dest == "strategy").choices
+
+
+def test_cli_strategy_choices_match_search(spark, tmp_path):
+    """The CLI offers exactly the strategy names Collection.search
+    accepts: every choice passes search's strategy check (an empty
+    collection then fails later, for want of embeddings)."""
+    from letsearch_spark.collection import Collection
+
+    choices = _search_strategy_choices()
+    assert tuple(choices) == SEARCH_STRATEGIES
+    assert "maxsim" in choices
+    c = Collection.create(spark, str(tmp_path), name="s", model_name="stub://16")
+    for name in choices:
+        try:
+            c.search("text", "q", limit=1, strategy=name)
+        except Exception as e:  # no embeddings: fails past the check
+            assert "unknown strategy" not in str(e), name
+
+
+@pytest.mark.parametrize("name", ["lsh", "ivf", "inlist"])
+def test_retired_strategy_names_fail_loudly(spark, tmp_path, capsys, name):
+    """The retired lsh / ivf / inlist serving paths are gone from every
+    entry point: search raises, the CLI rejects the name, and a stream
+    asked to refresh such an index raises before it starts."""
+    import pyspark.sql.types as T
+
+    from letsearch_spark.collection import Collection
+    from letsearch_spark.streaming.incremental import stream_append_collection
+
+    c = Collection.create(spark, str(tmp_path), name="r", model_name="stub://16")
+    with pytest.raises(ValueError, match="unknown strategy"):
+        c.search("text", "q", strategy=name)
+
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(["search", "--query", "q", "--strategy", name])
+    assert "invalid choice" in capsys.readouterr().err
+
+    active = len(spark.streams.active)
+    schema = T.StructType([T.StructField("text", T.StringType())])
+    with pytest.raises(ValueError, match="refresh_index"):
+        stream_append_collection(
+            spark, c, str(tmp_path / "src"), schema, str(tmp_path / "ckpt"),
+            refresh_index=name,
+        )
+    assert len(spark.streams.active) == active
+    assert not (tmp_path / "ckpt").exists()
 
 
 def test_cli_roundtrip(spark, sf_dir, tmp_path, capsys):

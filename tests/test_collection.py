@@ -164,12 +164,11 @@ def test_reimport_resets_embeddings(spark, sf_dir, tmp_path):
 def test_search_strategies_equal(coll):
     coll.embed_column("text", incremental=True)  # no-op when already embedded
     a = [(r["key"], round(r["score"], 6)) for r in coll.search("text", "spark q", limit=5).collect()]
-    for strat in ("inlist", "local"):
-        b = [
-            (r["key"], round(r["score"], 6))
-            for r in coll.search("text", "spark q", limit=5, strategy=strat).collect()
-        ]
-        assert a == b, strat
+    b = [
+        (r["key"], round(r["score"], 6))
+        for r in coll.search("text", "spark q", limit=5, strategy="local").collect()
+    ]
+    assert a == b
     with pytest.raises(ValueError):
         coll.search("text", "q", strategy="bogus")
 
@@ -267,34 +266,6 @@ def test_quantized_variant_storage_and_search(spark, tmp_path, sf_dir):
         assert keys == f32_keys, variant
         for (_, s_q), (_, s_f) in zip(results[variant], results["f32"]):
             assert abs(s_q - s_f) < (1e-3 if variant == "f16" else 2e-2)
-
-
-def test_search_lsh_strategy(coll):
-    """Approximate serving: probed-bucket results are a subset of the
-    exact ranking, and an exact-text query still self-hits at rank 1
-    (its own vector shares its own bucket by construction)."""
-    # order-independent under pytest -k: ensure the fixture is embedded
-    coll.embed_column("text", incremental=True)
-    exact = [
-        (r["key"], round(r["score"], 6))
-        for r in coll.search("text", "spark q", limit=20).collect()
-    ]
-    approx = [
-        (r["key"], round(r["score"], 6))
-        for r in coll.search("text", "spark q", limit=20, strategy="lsh").collect()
-    ]
-    assert approx  # probed buckets are never empty (query bucket exists)
-    assert set(approx) <= set(exact) or len(approx) == 20
-    # scores must come from the same scoring function: any shared key
-    # carries the identical score
-    e = dict(exact)
-    for k, s in approx:
-        if k in e:
-            assert s == e[k]
-
-    probe = coll.docs().where("_key = 7").select("text").first()[0]
-    top = coll.search("text", probe, limit=1, strategy="lsh").first()
-    assert top["key"] == 7 and top["score"] > 0.999
 
 
 def test_search_many_matches_per_query(coll):
@@ -452,48 +423,6 @@ def test_compact_restores_file_count_and_content(spark, tmp_path, sf_dir):
     assert {(r["_key"], r["doc_id"]) for r in c.docs().collect()} == before
 
 
-def test_search_strategy_ivf(spark, tmp_path, sf_dir):
-    """strategy='ivf': lazily builds the on-disk IVF index, prunes the
-    scan to nprobe/nlist partitions (plan check), self-hit comes back
-    at rank 1, and results are a subset of the exact strategy='join'
-    candidates at full recall for the probed lists."""
-    import os
-
-    from letsearch_spark.collection import Collection
-
-    c = Collection.create(
-        spark, str(tmp_path), name="ivf", model_name="stub://16"
-    )
-    c.import_parquet(os.path.join(sf_dir, "documents.parquet"))
-    c.embed_column("text")
-
-    row = c.docs().select("_key", "text").first()
-    hits = c.search("text", row["text"], limit=5, strategy="ivf").collect()
-    assert hits and hits[0]["key"] == row["_key"]
-    assert abs(hits[0]["score"] - 1.0) < 1e-9
-    assert [h["key"] for h in hits] == [
-        h["key"]
-        for h in sorted(hits, key=lambda h: (-h["score"], h["key"]))
-    ]
-
-    # the index persisted partitioned by list -> probes prune partitions
-    assert os.path.isdir(c.ivf_path("text"))
-    lists = [
-        d for d in os.listdir(c.ivf_path("text")) if d.startswith("_list=")
-    ]
-    assert len(lists) > c.ivf_nprobe
-    df = c.search("text", "spark join", limit=5, strategy="ivf")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "_list" in plan
-
-    # writes invalidate: appending rebuilds on next ivf search
-    one = c.docs().limit(1).drop("_key")
-    c._append_df(one)
-    assert "text" not in c._ivf_centroids
-    c.embed_column("text", incremental=True)
-    assert len(c.search("text", "spark join", limit=3, strategy="ivf").collect()) == 3
-
-
 def test_pooled_embeddings_by_group(spark, tmp_path, sf_dir):
     """pooled_embeddings returns one unit vector per group whose member
     counts sum to the embedded corpus."""
@@ -517,12 +446,15 @@ def test_pooled_embeddings_by_group(spark, tmp_path, sf_dir):
         assert abs(float(np.linalg.norm(r["pooled"])) - 1.0) < 1e-9
 
 
-def test_search_strategy_ivf_full_training(spark, tmp_path, sf_dir):
-    """ivf_train='full' routes index training through the distributed
-    full-corpus k-means; serving behaves identically (self-hit rank 1)."""
+def test_search_strategy_ivf_pq_full_training(spark, tmp_path, sf_dir):
+    """ivf_train='full' routes the collection's IVF-PQ coarse quantizer
+    through the distributed full-corpus k-means (the persisted
+    centroids equal the sequential twin over the serve frame bitwise),
+    and the index serves (its hits overlap the exact top-10)."""
     import os
 
     from letsearch_spark.collection import Collection
+    from letsearch_spark.operators.ann import kmeans_fit_full_twin
 
     c = Collection.create(
         spark, str(tmp_path), name="ivff", model_name="stub://16"
@@ -531,10 +463,17 @@ def test_search_strategy_ivf_full_training(spark, tmp_path, sf_dir):
     c.import_parquet(os.path.join(sf_dir, "documents.parquet"))
     c.embed_column("text")
     row = c.docs().select("_key", "text").first()
-    hits = c.search("text", row["text"], limit=5, strategy="ivf").collect()
-    assert hits and hits[0]["key"] == row["_key"]
-    assert abs(hits[0]["score"] - 1.0) < 1e-9
-    assert os.path.isdir(c.ivf_path("text"))
+    hits = c.search("text", row["text"], limit=5, strategy="ivf_pq").collect()
+    exact10 = {
+        h["key"]
+        for h in c.search("text", row["text"], limit=10, strategy="join").collect()
+    }
+    assert len({h["key"] for h in hits} & exact10) >= 2
+
+    frame = sorted(c._index_serve_frame("text").collect(), key=lambda r: r["_key"])
+    x = np.array([r["vector"] for r in frame], dtype=np.float64)
+    saved = np.load(os.path.join(c.ivf_pq_path("text"), "_centroids.npy"))
+    assert (saved == kmeans_fit_full_twin(x, nlist=c.ivf_nlist)).all()
 
 
 def test_collection_full_lifecycle(spark, tmp_path, sf_dir):
@@ -1470,36 +1409,29 @@ def test_ivf_pq_incremental_refresh(spark, tmp_path, sf_dir):
     assert coll.refresh_ivf_pq_index("text") == "rebuilt"
 
 
-def test_ivf_incremental_refresh_and_replace_guard(spark, tmp_path, sf_dir):
-    """The IVF-Flat twin of the test above, plus the full-replace path:
-    import_df nukes the embeddings, and the refresh detects vanished
-    keys and rebuilds instead of serving the stale index."""
+def test_ivf_pq_refresh_restart_and_replace_guard(spark, tmp_path, sf_dir):
+    """The refresh paths beyond test_ivf_pq_incremental_refresh: a
+    fresh Collection object reloads the persisted quantizers and
+    reports 'current'; a full replace (import_df) deletes the index
+    tree, so refresh builds fresh; and the vanished-keys guard rebuilds
+    when index data drifts from the serve view by any other route."""
     coll = Collection.create(
-        spark, str(tmp_path / "root"), name="incivf",
+        spark, str(tmp_path / "root"), name="incivfpq",
         index_columns=["text"], model_name="stub://16",
     )
     coll.import_parquet(os.path.join(sf_dir, "documents.parquet"))
     coll.embed_column("text")
-    assert coll.refresh_ivf_index("text") == "built"
-    path = coll.ivf_path("text")
-    idx_n0 = spark.read.parquet(path).count()
-
-    target = "unique prose about glacier meltwater chemistry"
-    coll.add_chunks([target], column="text")
-    coll.embed_column("text", incremental=True)
-    assert coll.refresh_ivf_index("text") == "appended"
-    assert spark.read.parquet(path).count() == idx_n0 + 1
-    hit = coll.search("text", target, limit=1, strategy="ivf").first()
-    assert hit["content"] == target
+    assert coll.refresh_ivf_pq_index("text") == "built"
+    path = coll.ivf_pq_path("text")
 
     # survives a process restart: a fresh Collection object reloads the
-    # persisted centroids instead of retraining
-    coll2 = Collection.load(spark, str(tmp_path / "root"), "incivf")
-    assert coll2.refresh_ivf_index("text") == "current"
+    # persisted centroids + codebook instead of retraining
+    coll2 = Collection.load(spark, str(tmp_path / "root"), "incivfpq")
+    assert coll2.refresh_ivf_pq_index("text") == "current"
 
-    # full replace (r7): import_df now DELETES the stale index trees
-    # outright (the replaced corpus's vectors must not linger on disk),
-    # so refresh sees 'missing' and builds fresh
+    # full replace (r7): import_df DELETES the stale index tree outright
+    # (the replaced corpus's codes must not linger on disk), so refresh
+    # sees 'missing' and builds fresh
     import pyspark.sql.types as T
 
     schema = T.StructType([T.StructField("text", T.StringType())])
@@ -1508,18 +1440,19 @@ def test_ivf_incremental_refresh_and_replace_guard(spark, tmp_path, sf_dir):
     )
     assert not os.path.exists(path)
     coll.embed_column("text")
-    assert coll.refresh_ivf_index("text") == "built"
+    assert coll.refresh_ivf_pq_index("text") == "built"
     assert spark.read.parquet(path).count() == 8
 
     # vanished-keys guard still fires when index data drifts from the
     # serve view by any OTHER route: plant a bogus key in the index
     spark.createDataFrame(
-        [(999_999,)], "`_key` long"
-    ).withColumn("vector", F.expr("array_repeat(CAST(0.5 AS float), 16)")).withColumn(
-        "_list", F.lit(0)
-    ).write.mode("append").partitionBy("_list").parquet(path)
+        [(999_999, bytearray(coll.pq_m))], "`_key` long, pq_code binary"
+    ).withColumn("_list", F.lit(0)).write.mode("append").partitionBy(
+        "_list"
+    ).parquet(path)
     coll._invalidate_cache(drop_index_meta=False)
-    assert coll.refresh_ivf_index("text") == "rebuilt"
+    assert coll.refresh_ivf_pq_index("text") == "rebuilt"
+    assert spark.read.parquet(path).where("_key = 999999").count() == 0
 
 
 def test_search_many_pq_matches_per_query(coll):
@@ -1726,11 +1659,11 @@ def test_delete_tombstone_auto_compact(spark, tmp_path, sf_dir):
 
 
 def test_delete_tombstone_ivf_probe_filter_no_rebuild(spark, tmp_path, sf_dir):
-    """A tombstone delete must NOT invalidate the on-disk IVF/IVF-PQ
-    indexes (VERDICT r6 #2): refresh stays 'current', probes filter the
-    doomed keys instead, and the purge path rewrites the index
-    partitions minus the doomed keys while keeping the quantizer
-    sidecars (ADVICE r6: no deleted vector retained anywhere)."""
+    """A tombstone delete must NOT invalidate the on-disk IVF-PQ index
+    (VERDICT r6 #2): refresh stays 'current', probes filter the doomed
+    keys instead, and the purge path rewrites the index partitions
+    minus the doomed keys while keeping the quantizer sidecars (ADVICE
+    r6: no deleted vector retained anywhere)."""
     import os
 
     from letsearch_spark.collection import Collection
@@ -1739,36 +1672,31 @@ def test_delete_tombstone_ivf_probe_filter_no_rebuild(spark, tmp_path, sf_dir):
     c.import_parquet(os.path.join(sf_dir, "documents.parquet"))
     c.embed_column("text")
     victim = c.docs().orderBy(F.desc("_key")).first()
-    # build both on-disk indexes BEFORE the delete
-    assert c.refresh_ivf_index("text") == "built"
+    # build the on-disk index BEFORE the delete
     assert c.refresh_ivf_pq_index("text") in ("built", "rebuilt")
 
     n = c.delete_where(f"_key = {victim['_key']}")
     assert n == 1
     # the index is NOT dropped or rebuilt -- the delete is deferred
-    assert c.refresh_ivf_index("text") == "current"
     assert c.refresh_ivf_pq_index("text") == "current"
     # probes never surface the tombstoned key, even for a verbatim query
-    for strat in ("ivf", "ivf_pq"):
-        hits = c.search("text", victim["text"], limit=10, strategy=strat).collect()
-        assert all(h["key"] != victim["_key"] for h in hits), strat
-    # the doomed vector is still INSIDE the index partitions (deferred)
-    ivf_raw = spark.read.parquet(c.ivf_path("text"))
-    assert ivf_raw.where(F.col("_key") == victim["_key"]).count() == 1
+    hits = c.search("text", victim["text"], limit=10, strategy="ivf_pq").collect()
+    assert all(h["key"] != victim["_key"] for h in hits)
+    # the doomed code is still INSIDE the index partitions (deferred)
+    raw = spark.read.parquet(c.ivf_pq_path("text"))
+    assert raw.where(F.col("_key") == victim["_key"]).count() == 1
 
     # purge: physical removal from tables AND index partitions,
     # quantizer sidecars kept -> still no rebuild
     assert c.delete_where(f"_key = {victim['_key'] - 1}", mode="purge") == 1
-    for path in (c.ivf_path("text"), c.ivf_pq_path("text")):
-        raw = spark.read.parquet(path)
-        doomed = {victim["_key"], victim["_key"] - 1}
-        assert raw.where(F.col("_key").isin(*doomed)).count() == 0, path
-    assert os.path.exists(os.path.join(c.ivf_path("text"), "_centroids.npy"))
+    raw = spark.read.parquet(c.ivf_pq_path("text"))
+    doomed = {victim["_key"], victim["_key"] - 1}
+    assert raw.where(F.col("_key").isin(*doomed)).count() == 0
+    assert os.path.exists(os.path.join(c.ivf_pq_path("text"), "_centroids.npy"))
     assert os.path.exists(os.path.join(c.ivf_pq_path("text"), "_codebook.npz"))
     assert not os.path.exists(c.tombstones_path)  # backlog folded in
-    assert c.refresh_ivf_index("text") == "current"
     assert c.refresh_ivf_pq_index("text") == "current"
-    hits = c.search("text", victim["text"], limit=10, strategy="ivf").collect()
+    hits = c.search("text", victim["text"], limit=10, strategy="ivf_pq").collect()
     assert all(h["key"] != victim["_key"] for h in hits)
 
 

@@ -601,9 +601,9 @@ def test_stream_prep_html_stage(spark, tmp_path):
 
 
 def test_stream_refresh_index(spark, tmp_path):
-    """refresh_index='ivf' (round 6): every embedded micro-batch tops
-    the IVF index up at batch cost (append under frozen centroids;
-    rebuild only past the drift threshold), so strategy='ivf' serves
+    """refresh_index='ivf_pq' (round 6): every embedded micro-batch tops
+    the IVF-PQ index up at batch cost (append under frozen quantizers;
+    rebuild only past the drift threshold), so strategy='ivf_pq' serves
     fresh data between batches without a manual rebuild step."""
     import pyspark.sql.types as T
 
@@ -619,17 +619,21 @@ def test_stream_refresh_index(spark, tmp_path):
     )
     process = _make_prep_batch_processor(
         spark, coll, str(tmp_path / "state"), "text",
-        quality=None, dedup=None, embed=True, refresh_index="ivf",
+        quality=None, dedup=None, embed=True, refresh_index="ivf_pq",
     )
     b0 = [(f"first batch doc {i} about spark and joins and windows",) for i in range(6)]
     b1 = [(f"second batch doc {i} on packing and dedup and tokens",) for i in range(6)]
     process(spark.createDataFrame(b0, schema), 0)
-    assert os.path.isdir(coll.ivf_path("text"))
+    path = coll.ivf_pq_path("text")
+    assert spark.read.parquet(path).count() == 6
     process(spark.createDataFrame(b1, schema), 1)
-    # all 12 docs are searchable through the refreshed IVF index
-    probe = coll.docs().where("_key = 10").select("text").first()[0]
-    top = coll.search("text", probe, limit=1, strategy="ivf").first()
-    assert top["key"] == 10 and top["score"] > 0.999
+    # all 12 docs are indexed by the refreshed IVF-PQ index, which
+    # serves without a manual rebuild (refresh reports it current)
+    indexed = {r["_key"] for r in spark.read.parquet(path).collect()}
+    assert indexed == {r["_key"] for r in coll.docs().collect()}
+    assert len(indexed) == 12
+    assert coll.refresh_ivf_pq_index("text") == "current"
+    assert len(coll.search("text", b1[0][0], limit=3, strategy="ivf_pq").collect()) == 3
 
     import pytest as _pytest
 

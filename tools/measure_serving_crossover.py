@@ -4,12 +4,12 @@ at growing corpus sizes -- the evidence behind resolve_strategy's
 
 Round 7: the hamming tier was reworked to be cache-light (signature
 cache only; rescore is an IN-list parquet fetch), so its crossover vs
-'join'/'lsh'/'ivf_pq' must be re-measured and slotted into the auto
+'join'/'ivf_pq' must be re-measured and slotted into the auto
 policy instead of being an unreachable opt-in knob (VERDICT r6 #3).
 
 Usage:
     python tools/measure_serving_crossover.py --sizes 100000,1000000 \
-        --strategies join,lsh,hamming,ivf_pq --queries 10
+        --strategies join,hamming,ivf_pq --queries 10
 
 Prints one JSON line per (size, strategy): build time, mean/min
 per-query seconds over N queries after a warmup, plus the hamming
@@ -49,7 +49,7 @@ def synth_docs(spark, n: int):
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sizes", default="100000,1000000")
-    ap.add_argument("--strategies", default="join,lsh,hamming,pq,ivf_pq")
+    ap.add_argument("--strategies", default="join,hamming,pq,ivf_pq")
     ap.add_argument("--queries", type=int, default=10)
     ap.add_argument("--dim", type=int, default=64)
     args = ap.parse_args()

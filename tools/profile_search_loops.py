@@ -5,7 +5,7 @@ embed) vs execution (collect), then cProfile a 20-query loop to rank
 driver-side costs (py4j round-trips, analysis, embed) against executor
 time.
 
-Usage: python tools/profile_search_loops.py [--strategies join,lsh,...]
+Usage: python tools/profile_search_loops.py [--strategies join,hamming,...]
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
-        "--strategies", default="join,lsh,pq,hamming,hybrid"
+        "--strategies", default="join,pq,hamming,hybrid"
     )
     ap.add_argument("--n", type=int, default=20)
     ap.add_argument("--profile", action="store_true")

@@ -632,37 +632,45 @@ def main() -> None:
             )
 
         # incremental index maintenance: append a FIXED 200-vector
-        # batch under frozen centroids vs a full rebuild of base+batch.
-        # Append cost must track the BATCH (near-flat as the base
+        # batch under frozen quantizers vs a full rebuild of base+batch
+        # (IVF-PQ, the index the collection serves beyond the cache
+        # tier). Append cost must track the BATCH (near-flat as the base
         # grows); rebuild tracks the BASE -- the widening gap is the
-        # 100 TB argument for refresh_ivf_index over rebuild-per-append
+        # 100 TB argument for refresh_ivf_pq_index over rebuild-per-append
         if only is None or {"ivf_append", "ivf_rebuild"} & only:
             import shutil
             import tempfile
 
-            from letsearch_spark.operators.ann import append_ivf, build_ivf
+            from letsearch_spark.operators.pq import (
+                append_ivf_pq,
+                build_ivf_pq,
+            )
 
             newb = emb.limit(200).select(
                 (F.col("_key") + 900_000_000).alias("_key"), "vector"
             )
             idx_dir = tempfile.mkdtemp(prefix="ivf_probe_")
             try:
-                centroids = build_ivf(
+                centroids, codebook = build_ivf_pq(
                     emb, os.path.join(idx_dir, "base"), nlist=16,
                     key_col="_key",
                 )
+
                 def _append():
-                    append_ivf(newb, os.path.join(idx_dir, "base"), centroids)
+                    append_ivf_pq(
+                        newb, os.path.join(idx_dir, "base"), centroids,
+                        codebook,
+                    )
                     return 200
 
                 def _rebuild():
                     return len(
-                        build_ivf(
+                        build_ivf_pq(
                             emb.unionByName(newb),
                             os.path.join(idx_dir, "rebuild"),
                             nlist=16,
                             key_col="_key",
-                        )
+                        )[0]
                     )
 
                 timeit("ivf_append", _append)
