@@ -255,8 +255,8 @@ def main() -> None:
         .collect(),
     )
 
-    # 5. batched k-NN join: 100 queries in ONE job, both scoring paths
-    # (Catalyst expression vs per-partition numpy matmul)
+    # 5. batched k-NN join: 100 queries in ONE job (per-partition BLAS
+    # candidates + exact sequential rescore)
     from letsearch_spark.operators.topk import knn_join
 
     emb = load(spark, SF_DIR, "embeddings")
@@ -268,25 +268,20 @@ def main() -> None:
     )
     run_stage(
         "knn_batch100",
-        lambda: knn_join(knn_base, knn_q, k=10, method="expr").count(),
-    )
-    run_stage(
-        "knn_batch100_numpy",
-        lambda: knn_join(knn_base, knn_q, k=10, method="numpy").count(),
+        lambda: knn_join(knn_base, knn_q, k=10).count(),
     )
 
     # 5b. hard-negative mining (round 5): rank-1 positives + margin-
-    # denoised negatives for the same 100 queries, production numpy path
+    # denoised negatives for the same 100 queries
     from letsearch_spark.operators.mining import mine_hard_negatives
 
     def _mine_stage():
-        nn1 = knn_join(knn_base, knn_q, k=1, method="numpy", exclude_self=True)
+        nn1 = knn_join(knn_base, knn_q, k=1, exclude_self=True)
         pairs = knn_q.join(
             nn1.select("query_id", F.col("_key").alias("pos_key")), "query_id"
         )
         return mine_hard_negatives(
-            knn_base, pairs, k=20, num_negatives=5, margin=0.05,
-            method="numpy",
+            knn_base, pairs, k=20, num_negatives=5, margin=0.05
         ).count()
 
     run_stage("mine_negatives100", _mine_stage)

@@ -1507,9 +1507,9 @@ class Collection:
         """Batched search: every query scored in ONE plan instead of one
         job per query -- the serving-throughput path. Queries embed
         driver-side into a small frame; the candidate-only knn_join plan
-        (operators/topk.py, numpy method) lets each serve-view partition
-        emit only its local top-k per query, and the tiny hit set
-        broadcasts back against the view for content.
+        (operators/topk.py) lets each serve-view partition emit only its
+        local top-k per query, and the tiny hit set broadcasts back
+        against the view for content.
 
         strategy='hybrid' adds the batched BM25 leg (one pass over the
         cached postings for the union of all queries' terms) and fuses
@@ -1542,9 +1542,9 @@ class Collection:
         ivf_pq->ivf_pq).
 
         Returns (query_idx, rank, key, content, score) ordered by
-        (query_idx, rank). Dense scores differ from :meth:`search` only
-        in float summation order (pairwise vs sequential); hybrid scores
-        are RRF scores as in :meth:`search` strategy='hybrid'.
+        (query_idx, rank). Dense scores equal :meth:`search`
+        strategy='join' scores bit for bit; hybrid scores are RRF scores
+        as in :meth:`search` strategy='hybrid'.
 
         ``where`` (strategy='dense' only, same contract as
         :meth:`search`): a Spark SQL predicate over the serve view's
@@ -1753,7 +1753,6 @@ class Collection:
                 vec_col="vector",
                 query_key_col="query_idx",
                 query_vec_col="qvec",
-                method="numpy",
             )
             if strategy == "hybrid":
                 hits = self._fuse_many(column, queries, hits, limit)

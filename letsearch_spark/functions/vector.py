@@ -12,10 +12,10 @@ participate in whole-stage planning. All arithmetic is promoted to
 double so results are deterministic and match a DuckDB double-precision
 oracle bit-for-bit after rounding.
 
-For very wide vectors in throughput-critical scans there is also a
-vectorized numpy path in :mod:`letsearch_spark.operators.topk`
-(matmul over Arrow batches); the expression forms below are the
-correctness reference.
+Batched k-NN (:func:`letsearch_spark.operators.topk.knn_join`) scores
+Arrow batches in numpy instead: a BLAS matmul picks candidates, then
+each candidate is rescored with this module's sequential double fold,
+so its scores equal :func:`cosine_similarity` bit for bit.
 
 r10 optimization (guide §4, the Python boundary -- at PLAN-BUILD time):
 composing these expressions Column-by-Column costs hundreds of py4j

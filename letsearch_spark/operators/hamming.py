@@ -41,6 +41,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from letsearch_spark.operators.topk import boundary_topk
+
 
 def pack_signbits(vec: Sequence[float], word_bits: int = 32) -> list[int]:
     """Single-process twin of :func:`signbits_col`: little-endian words,
@@ -239,19 +241,15 @@ def hamming_knn_join(
                 qs = qsigs[q0 : q0 + 512]
                 x = (sigs[:, None, :] ^ qs[None, :, :]).view(np.uint8)
                 D = pop8[x].reshape(len(sigs), len(qs), -1).sum(axis=2)
-                top = min(rr, D.shape[0])
-                part = np.argpartition(D, top - 1, axis=0)[:top]
-                for j in range(D.shape[1]):
-                    thresh = D[part[:, j], j].max()
-                    rows = np.nonzero(D[:, j] <= thresh)[0]
-                    out_q.extend([qids[q0 + j]] * len(rows))
-                    out_k.extend(keys[rows])
-                    out_d.extend(D[rows, j])
+                qi, ri = boundary_topk(-D, rr)  # smallest distances
+                out_q.append(qids[q0 + qi])
+                out_k.append(keys[ri])
+                out_d.append(D[ri, qi])
             yield pd.DataFrame(
                 {
-                    query_key_col: out_q,
-                    key_col: out_k,
-                    hamming_col: out_d,
+                    query_key_col: np.concatenate(out_q),
+                    key_col: np.concatenate(out_k),
+                    hamming_col: np.concatenate(out_d),
                 }
             )
 

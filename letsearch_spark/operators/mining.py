@@ -25,11 +25,11 @@ Spark-first shape, per stage:
    (score desc, key asc — FIXTURES.md §2 tie order) and cut to
    ``num_negatives``.
 
-At 100 TB: the corpus is scanned once by ``knn_join``'s mapInPandas /
-broadcast-window plan; the pairs table (training queries) is the small
-side of every join and is broadcast. No shuffle touches the corpus
-rows themselves — only (query, candidate, score) triples, bounded by
-|queries| x k per scan partition.
+At 100 TB: the corpus is scanned once by ``knn_join``'s mapInPandas
+kernel; the pairs table (training queries) is the small side of every
+join and is broadcast. No shuffle touches the corpus rows themselves —
+only (query, candidate, score) triples, bounded by |queries| x k per
+scan partition.
 """
 
 from __future__ import annotations
@@ -51,22 +51,21 @@ def mine_hard_negatives(
     query_key_col: str = "query_id",
     query_vec_col: str = "qvec",
     pos_key_col: str = "pos_key",
-    method: str = "numpy",
     exclude_self: bool = True,
 ) -> DataFrame:
     """Mine up to ``num_negatives`` hard negatives per training pair.
 
     ``emb``    -- corpus embeddings: (key_col, vec_col).
     ``pairs``  -- training pairs: (query_key_col, query_vec_col,
-                  pos_key_col); must be the SMALL side (collected by the
-                  numpy knn_join path, broadcast everywhere else).
+                  pos_key_col); must be the SMALL side (collected by
+                  knn_join, broadcast everywhere else).
     ``margin`` -- if set, drop candidates with
                   score > pos_score - margin (false-negative
-                  denoising). ``margin=0.0`` keeps only candidates
-                  strictly less similar than the positive.
-    ``method`` -- 'numpy' (production: one matmul per scan partition) or
-                  'expr' (Catalyst-only twin whose sequential-double dot
-                  product is bit-identical to the DuckDB oracle's).
+                  denoising). ``margin=0.0`` drops only candidates MORE
+                  similar than the positive: a candidate that ties the
+                  positive's score (e.g. a duplicate of it under another
+                  key) survives. Both scores come from the same
+                  sequential-double cosine fold, so such ties are exact.
 
     Returns (query_key_col, neg_key, score, neg_rank): ``neg_rank`` is
     dense per query over the surviving candidates, ``score`` the raw
@@ -101,7 +100,6 @@ def mine_hard_negatives(
         vec_col=vec_col,
         query_key_col=query_key_col,
         query_vec_col=query_vec_col,
-        method=method,
         exclude_self=exclude_self,
     ).select(query_key_col, key_col, "score")
 
@@ -114,7 +112,7 @@ def mine_hard_negatives(
     cand = cand.join(F.broadcast(gold), [query_key_col, key_col], "left_anti")
 
     if margin is not None:
-        from letsearch_spark.functions.vector import dot_product, l2_norm
+        from letsearch_spark.functions.vector import cosine_similarity
 
         # exact positive score: stream the corpus once against the
         # broadcast pairs (corpus stays the big probe side)
@@ -123,9 +121,7 @@ def mine_hard_negatives(
             F.col(query_vec_col).alias("__qv"),
             F.col(pos_key_col).alias("__pk"),
         )
-        pos_sim = dot_product(F.col(vec_col), F.col("__qv")) / (
-            l2_norm(F.col(vec_col)) * l2_norm(F.col("__qv"))
-        )
+        pos_sim = cosine_similarity(vec_col, "__qv")
         pos_scores = (
             emb.join(F.broadcast(pos_side), F.col(key_col) == F.col("__pk"))
             .select(F.col(query_key_col), pos_sim.alias("__pos_score"))

@@ -37,6 +37,8 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from letsearch_spark.operators.topk import boundary_topk
+
 __all__ = [
     "PQCodebook",
     "train_pq",
@@ -398,12 +400,12 @@ def pq_knn_join(
     PQ index (feed the result and an exact knn_join into
     operators/evaluate.py).
 
-    Same candidate-only geometry as topk.knn_join(method='numpy'):
-    queries collect driver-side (they are the small side), ONE stacked
-    LUT tensor (q x m x ksub subspace inner products) ships in the
-    closure, each partition scores its codes against every query with m
-    fancy-index adds and emits only its local top-k per query
-    (boundary-tie-complete); a final per-query window ranks the
+    Same candidate-only geometry as topk.knn_join: queries collect
+    driver-side (they are the small side), ONE stacked LUT tensor
+    (q x m x ksub subspace inner products) ships in the closure, each
+    partition scores its codes against every query with m fancy-index
+    adds and emits only its local top-k per query (boundary-tie-complete,
+    topk.boundary_topk); a final per-query window ranks the
     (partitions x k) survivors. No float vectors are read anywhere.
 
     Output: (query_key_col, key_col, score, rank), rank 1..k per query.
@@ -443,17 +445,9 @@ def pq_knn_join(
             S = np.zeros((len(pdf), len(qids)))
             for s in range(m):
                 S += luts[:, s, codes[:, s]].T  # (rows, queries)
-            top = min(kk, S.shape[0])
-            part = np.argpartition(-S, top - 1, axis=0)[:top]
-            out_q, out_k, out_s = [], [], []
-            for j in range(S.shape[1]):
-                thresh = S[part[:, j], j].min()
-                rows = np.nonzero(S[:, j] >= thresh)[0]
-                out_q.extend([qids[j]] * len(rows))
-                out_k.extend(keys[rows])
-                out_s.extend(S[rows, j])
+            qi, ri = boundary_topk(S, kk)
             yield pd.DataFrame(
-                {query_key_col: out_q, key_col: out_k, "score": out_s}
+                {query_key_col: qids[qi], key_col: keys[ri], "score": S[ri, qi]}
             )
 
     candidates = coded.select(key_col, code_col).mapInPandas(

@@ -11,6 +11,12 @@ to the driver -- no global sort, no full shuffle. At 100 TB this is a
 single scan with a few KB of network traffic; it parallelizes perfectly
 and is the oracle against which approximate methods are judged.
 
+Batched query sets go through :func:`knn_join`, the one exact k-NN
+kernel: a BLAS matmul picks each partition's candidates and only those
+are rescored with the sequential double fold of
+:func:`cosine_similarity`, so its scores equal the per-query expression
+bit for bit.
+
 Tie-breaking is ``key ASC`` (declared semantics -- the reference's usearch
 tie order is unspecified; FIXTURES.md §2).
 
@@ -55,6 +61,37 @@ def cosine_topk(
     )
 
 
+def boundary_topk(
+    S: np.ndarray, k: int, slack: float = 0.0
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-query local top-k of a (rows x queries) score block, larger
+    is better, keeping EVERY row at or above the query's k-th score
+    minus ``slack``. Boundary ties are therefore left to the caller's
+    final (score, key) window rather than to argpartition's arbitrary
+    pick. ``-inf`` marks an excluded entry and is never kept (a query
+    with fewer than k live rows keeps all of them).
+
+    Returns (query index, row index) arrays, ordered by query then row.
+    Shared by every candidate-only batched scan: knn_join, pq_knn_join
+    and hamming_knn_join (which passes negated distances)."""
+    top = min(k, S.shape[0])
+    part = np.argpartition(-S, top - 1, axis=0)[:top]
+    thresh = np.take_along_axis(S, part, axis=0).min(axis=0) - slack
+    return np.nonzero(((S >= thresh) & (S > -np.inf)).T)
+
+
+def _seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two float64 (n x d) arrays, summed one
+    dimension at a time from 0.0: the exact double arithmetic of the
+    ``aggregate(zip_with(x * y), 0.0, acc + v)`` fold in
+    functions/vector.py, so results equal the Column expressions bit
+    for bit."""
+    acc = np.zeros(A.shape[0])
+    for j in range(A.shape[1]):
+        acc += A[:, j] * B[:, j]
+    return acc
+
+
 def knn_join(
     base: DataFrame,
     queries: DataFrame,
@@ -63,89 +100,69 @@ def knn_join(
     vec_col: str = "vector",
     query_key_col: str = "query_id",
     query_vec_col: str = "qvec",
-    method: str = "numpy",
     exclude_self: bool = False,
 ) -> DataFrame:
-    """Batched k-NN join: top-k neighbors in ``base`` for every query row.
+    """Batched exact k-NN join: top-k neighbors in ``base`` for every
+    query row, scored exactly as :func:`cosine_similarity` (bit for
+    bit, 0.0 when either norm is 0).
 
-    method='numpy' (default -- the 100-TB shape): queries are collected
-    (they must be the small side), normalized into one matrix, and each
-    base partition scores itself with a single float64 matmul +
-    argpartition, emitting only its LOCAL top-k per query (<= k rows per
-    partition per query, plus boundary ties). A final window reduces the
-    (partitions x k) candidates per query. The all-pairs score matrix
-    never materializes and nothing but candidates crosses the network --
-    the batched analog of TakeOrderedAndProject.
+    Queries are collected (they must be the small side). Each base
+    partition scores itself in one ``mapInPandas`` kernel, per Arrow
+    batch:
 
-    method='expr' -- the Catalyst-only correctness twin: broadcast the
-    queries, score each (row, query) pair with the dot-product
-    expression, then reduce in two stages: a LOCAL window keyed by
-    (query, scan partition id) bounds every reducer at one scan
-    partition's pairs, and the global window then ranks only the
-    (partitions x k) surviving candidates. Scores differ from the numpy
-    path only in float summation order (sequential vs pairwise).
+    1. one float64 BLAS matmul gives approximate cosine scores;
+    2. :func:`boundary_topk` keeps, per query, every row within a
+       proven rounding margin of the k-th BLAS score;
+    3. only those rows are rescored with the sequential fold of
+       functions/vector.py (``_seq_dot``), and the exact scores leave
+       the partition.
+
+    A final (score DESC, key ASC) window reduces the (partitions x k)
+    candidates per query. The all-pairs score matrix never crosses the
+    network -- the batched analog of TakeOrderedAndProject -- and the
+    scores served are the ones the DuckDB oracle computes.
+
+    A NaN/inf query vector raises ``ValueError`` here, at plan build; a
+    NaN/inf base vector fails the scan task with a message naming it.
 
     ``exclude_self`` drops pairs where the base key equals the query id
     (self-matches when the queries are drawn from the base table).
     """
-    from letsearch_spark.functions.vector import dot_product, l2_norm
-
-    if method == "expr":
-        q = queries.select(
-            F.col(query_key_col),
-            F.col(query_vec_col).alias("__qv"),
-            l2_norm(F.col(query_vec_col)).alias("__qn"),
-        )
-        b = base.select(
-            F.col(key_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("__n")
-        )
-        sim = dot_product(F.col(vec_col), F.col("__qv")) / (
-            F.col("__n") * F.col("__qn")
-        )
-        pairs = b.crossJoin(F.broadcast(q))
-        if exclude_self:
-            pairs = pairs.where(F.col(key_col) != F.col(query_key_col))
-        # stage 1: local top-k per (query, scan partition). The broadcast
-        # join is map-side, so spark_partition_id() here IS the scan
-        # partition; the window's exchange spreads the pairs over
-        # |queries| x |partitions| reducers instead of collapsing the
-        # whole dataset into |queries|.
-        scored = pairs.select(
-            query_key_col,
-            key_col,
-            sim.alias("score"),
-            F.spark_partition_id().alias("__pid"),
-        )
-        wl = Window.partitionBy(query_key_col, "__pid").orderBy(
-            F.desc("score"), F.asc(key_col)
-        )
-        candidates = (
-            scored.withColumn("__lrank", F.row_number().over(wl))
-            .where(F.col("__lrank") <= k)
-            .drop("__pid", "__lrank")
-        )
-        # stage 2: global rank over candidates only (<= k per partition
-        # per query survive stage 1)
-        w = Window.partitionBy(query_key_col).orderBy(F.desc("score"), F.asc(key_col))
-        return candidates.withColumn(
-            "rank", F.row_number().over(w).cast("long")
-        ).where(F.col("rank") <= k)
-
-    if method != "numpy":
-        raise ValueError(f"unknown method {method!r}; expected expr|numpy")
-
     import pandas as pd
 
+    if k <= 0:
+        raise ValueError(f"k must be positive, got {k}")
     qrows = queries.select(query_key_col, query_vec_col).collect()
+    if not qrows:
+        raise ValueError("queries frame is empty")
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    Qn = (Q / qn).T  # dim x n_queries
+    finite = np.isfinite(Q).all(axis=1)
+    if not finite.all():
+        raise ValueError(
+            f"knn_join: query vectors hold NaN/inf values (query ids "
+            f"{qids[~finite][:5].tolist()})"
+        )
+    dim = Q.shape[1]
+    q_sqrt = np.sqrt(_seq_dot(Q, Q))
+    # Rounding margin. With u = 2**-53 and g(n) = n*u / (1 - n*u), any
+    # d-term dot product, in any summation order (sequential, blocked
+    # BLAS, with or without FMA), is within g(d) * |x| * |q| of the
+    # true value. Both scores divide by the SAME denominator
+    # sqrt(fold(x, x)) * sqrt(fold(q, q)) >= |x| * |q| * (1 - g(d+3)),
+    # and each division rounds once, so a BLAS score B and the exact
+    # score E of one pair differ by at most
+    #     (2 g(d) + 2u (1 + g(d))) / (1 - g(d+3)) <= eps = 4 g(d+3).
+    # If t is a query's k-th largest B in a batch, k rows have
+    # E >= t - eps, so the k-th largest E is >= t - eps and every row
+    # at or above it has B >= t - 2 eps: keeping B >= t - 2 eps keeps
+    # the exact local top-k, boundary ties included. The bound assumes
+    # no product under- or overflows, which holds for any float32
+    # input (embedding columns are float32).
+    g = (dim + 3) * 2.0**-53 / (1 - (dim + 3) * 2.0**-53)
+    slack = 8 * g
 
     schema = f"{query_key_col} long, {key_col} long, score double"
-    kk = k
-    excl = exclude_self
 
     def score_partition(batches):
         for pdf in batches:
@@ -153,29 +170,27 @@ def knn_join(
                 continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             keys = pdf[key_col].values
-            n = np.linalg.norm(X, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            S = (X / n) @ Qn  # rows x queries
-            if excl:
+            finite = np.isfinite(X).all(axis=1)
+            if not finite.all():
+                raise ValueError(
+                    f"knn_join: base column {vec_col!r} holds NaN/inf "
+                    f"values (keys {keys[~finite][:5].tolist()})"
+                )
+            x_sqrt = np.sqrt(_seq_dot(X, X))
+            den = x_sqrt[:, None] * q_sqrt[None, :]
+            # step 1: BLAS scores, 0.0 where a norm is 0 (the
+            # cosine_similarity rule)
+            S = np.divide(X @ Q.T, den, out=np.zeros_like(den), where=den != 0)
+            if exclude_self:
                 S[keys[:, None] == qids[None, :]] = -np.inf
-            top = min(kk, S.shape[0])
-            part = np.argpartition(-S, top - 1, axis=0)[:top]  # top x queries
-            out_q, out_k, out_s = [], [], []
-            for j in range(S.shape[1]):
-                # keep EVERY candidate >= the kth score so boundary ties
-                # are resolved by the final (score desc, key asc) window,
-                # not by argpartition's arbitrary pick
-                thresh = S[part[:, j], j].min()
-                if not np.isfinite(thresh):
-                    thresh = -np.inf  # all-excluded partition: emit nothing
-                    rows = np.nonzero(S[:, j] > thresh)[0]
-                else:
-                    rows = np.nonzero(S[:, j] >= thresh)[0]
-                out_q.extend([qids[j]] * len(rows))
-                out_k.extend(keys[rows])
-                out_s.extend(S[rows, j])
+            # step 2: every row within the margin of the k-th BLAS score
+            qi, ri = boundary_topk(S, k, slack)
+            # step 3: exact rescore of those rows only
+            num = _seq_dot(X[ri], Q[qi])
+            den = x_sqrt[ri] * q_sqrt[qi]
+            score = np.divide(num, den, out=np.zeros_like(den), where=den != 0)
             yield pd.DataFrame(
-                {query_key_col: out_q, key_col: out_k, "score": out_s}
+                {query_key_col: qids[qi], key_col: keys[ri], "score": score}
             )
 
     local = base.select(key_col, vec_col).mapInPandas(score_partition, schema=schema)

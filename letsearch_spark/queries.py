@@ -384,15 +384,13 @@ def q_k1_topk_label_filtered(spark, sf_dir):
 
 def q_knn_join(spark, sf_dir):
     """Batched k-NN join: top-3 neighbors for each of 5 query vectors
-    (operators/topk.py knn_join). The oracle-gated entry runs
-    method='expr', whose sequential-double dot product is bit-identical
-    to DuckDB's -- the numpy path's pairwise summation differs by ULPs,
-    which could nondeterministically flip near-tied ranks at other
-    scales. The numpy production default is plan-gated separately
-    (test_knn_join_shuffles_candidates_only) and equivalence-tested
-    against expr (test_knn_join_numpy_matches_expr). Both shapes shuffle
-    candidates only: a local per-partition top-k bounds what crosses the
-    network before the global per-query window ranks it."""
+    (operators/topk.py knn_join) -- the same kernel that serves
+    search_many. Its BLAS-picked candidates are rescored with the
+    sequential-double cosine fold, bit-identical to DuckDB's, so ranks
+    cannot flip on ulp-level near-ties. The plan shuffles candidates
+    only: a local per-partition top-k bounds what crosses the network
+    before the global per-query window ranks it
+    (test_knn_join_shuffles_candidates_only)."""
     from letsearch_spark.operators.topk import knn_join
 
     emb = load(spark, sf_dir, "embeddings")
@@ -405,7 +403,6 @@ def q_knn_join(spark, sf_dir):
         k=3,
         key_col="vec_id",
         vec_col="embedding",
-        method="expr",
         exclude_self=True,
     ).select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
 
@@ -2243,7 +2240,7 @@ def q_eval_lsh_recall(spark, sf_dir):
     because a vector lives in exactly ONE bucket. Oracle: the whole
     thing in SQL (rank windows over the same double cosine, bucket
     CASE-sum signatures, LEFT-join recall and min-rank MRR)."""
-    from letsearch_spark.functions.vector import dot_product, l2_norm
+    from letsearch_spark.functions.vector import cosine_similarity
     from letsearch_spark.operators.evaluate import mrr_at_k, recall_at_k
     from letsearch_spark.operators.topk import (
         _hyperplanes,
@@ -2257,7 +2254,7 @@ def q_eval_lsh_recall(spark, sf_dir):
     queries = emb.where(F.col("_key") < _EVAL_NQ).select(
         F.col("_key").alias("query_id"), F.col("vector").alias("qvec")
     )
-    exact = knn_join(emb, queries, k=_EVAL_K, method="expr")
+    exact = knn_join(emb, queries, k=_EVAL_K)
 
     planes = _hyperplanes(_EMB_DIM, _LSH_BITS, seed=42)
     base_b = emb.withColumn(
@@ -2278,9 +2275,7 @@ def q_eval_lsh_recall(spark, sf_dir):
             )
         ).alias("_bucket"),
     )
-    sim = dot_product(F.col("vector"), F.col("qvec")) / (
-        l2_norm(F.col("vector")) * l2_norm(F.col("qvec"))
-    )
+    sim = cosine_similarity("vector", "qvec")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("_key"))
     approx = (
         base_b.join(probes, "_bucket")
@@ -2317,7 +2312,7 @@ def q_eval_hamming_recall(spark, sf_dir):
     hamming tier (SCALING.md round-7 crossover table carries the
     latency half). Oracle: a computed-literal Python twin (pack_signbits
     + popcount + the same sequential-double cosine)."""
-    from letsearch_spark.functions.vector import dot_product, l2_norm
+    from letsearch_spark.functions.vector import cosine_similarity
     from letsearch_spark.operators.evaluate import mrr_at_k, recall_at_k
     from letsearch_spark.operators.hamming import (
         build_signbit_index,
@@ -2331,13 +2326,11 @@ def q_eval_hamming_recall(spark, sf_dir):
     queries = emb.where(F.col("_key") < _EVAL_NQ).select(
         F.col("_key").alias("query_id"), F.col("vector").alias("qvec")
     )
-    exact = knn_join(emb, queries, k=_EVAL_K, method="expr")
+    exact = knn_join(emb, queries, k=_EVAL_K)
 
     idx = build_signbit_index(emb, dim=_EMB_DIM)
     cand = hamming_knn_join(idx, queries, rescore=_HAM_RESCORE)
-    sim = dot_product(F.col("vector"), F.col("qvec")) / (
-        l2_norm(F.col("vector")) * l2_norm(F.col("qvec"))
-    )
+    sim = cosine_similarity("vector", "qvec")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("_key"))
     approx = (
         cand.select("query_id", "_key")
@@ -2366,8 +2359,8 @@ def q_eval_hamming_recall(spark, sf_dir):
 def _eval_hamming_recall_oracle(sf_dir: str) -> str:
     """Computed-literal twin of q_eval_hamming_recall: pack_signbits +
     popcount candidate ranks, sequential-double cosine (the exact
-    arithmetic of the expr knn_join / dot_product fold), recall@k +
-    first-hit MRR, HALF_UP round-6."""
+    arithmetic of knn_join's rescore and cosine_similarity),
+    recall@k + first-hit MRR, HALF_UP round-6."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -2461,11 +2454,11 @@ def q_mine_hard_negatives(spark, sf_dir):
     candidate outranks a random positive), candidate depth 10,
     margin-denoised at 0.05, 5 negatives kept — 48-58 survivors
     pre-cut at sf0.001-0.1, so the entry exercises both the filter and
-    the partial-fill case. The staged entry runs method='expr'
-    (sequential-double cosine, bit-identical to DuckDB — the knn_join
-    precedent); the numpy production path is equivalence-tested in
-    tests/test_mining.py. Scores round to 6 for hash stability (k1
-    pattern), ranks are computed on raw doubles."""
+    the partial-fill case. Candidates come from the production knn_join
+    kernel and the positive score from cosine_similarity -- one
+    sequential-double cosine fold, bit-identical to DuckDB's. Scores
+    round to 6 for hash stability (k1 pattern), ranks are computed on
+    raw doubles."""
     from letsearch_spark.operators.mining import mine_hard_negatives
     from letsearch_spark.operators.topk import knn_join
 
@@ -2475,7 +2468,7 @@ def q_mine_hard_negatives(spark, sf_dir):
     queries = emb.where(F.col("_key") < _HN_NQ).select(
         F.col("_key").alias("query_id"), F.col("vector").alias("qvec")
     )
-    nn1 = knn_join(emb, queries, k=1, method="expr", exclude_self=True)
+    nn1 = knn_join(emb, queries, k=1, exclude_self=True)
     pairs = queries.join(
         nn1.select("query_id", F.col("_key").alias("pos_key")), "query_id"
     )
@@ -2485,7 +2478,6 @@ def q_mine_hard_negatives(spark, sf_dir):
         k=_HN_K,
         num_negatives=_HN_NNEG,
         margin=_HN_MARGIN,
-        method="expr",
     )
     return out.select(
         "query_id",
@@ -2521,7 +2513,7 @@ def q_training_pairs(spark, sf_dir):
     queries = emb.where(F.col("_key") < _HN_NQ).select(
         F.col("_key").alias("query_id"), F.col("vector").alias("qvec")
     )
-    nn1 = knn_join(emb, queries, k=1, method="expr", exclude_self=True)
+    nn1 = knn_join(emb, queries, k=1, exclude_self=True)
     pairs = queries.join(
         nn1.select("query_id", F.col("_key").alias("pos_key")), "query_id"
     )
@@ -2531,7 +2523,6 @@ def q_training_pairs(spark, sf_dir):
         k=_HN_K,
         num_negatives=_HN_NNEG,
         margin=_HN_MARGIN,
-        method="expr",
     )
     docs = load(spark, sf_dir, "documents")
     tp = build_training_pairs(negs, docs, pairs, key_col="doc_id")

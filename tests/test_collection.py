@@ -269,17 +269,22 @@ def test_quantized_variant_storage_and_search(spark, tmp_path, sf_dir):
 
 
 def test_search_many_matches_per_query(coll):
+    """Dense batched search runs knn_join, per-query 'join' the
+    cosine_with_norm expression: one fold, so ranks AND scores agree
+    bit for bit."""
     coll.embed_column("text", incremental=True)  # no-op when already embedded
-    qs = [f"spark join query window batch {i}" for i in range(5)]
+    qs = [f"spark join query window batch {i}" for i in range(5)] + [""]
     batched = {}
-    for r in coll.search_many("text", qs, limit=5).collect():
+    for r in coll.search_many("text", qs, limit=5, strategy="dense").collect():
         batched.setdefault(r["query_idx"], []).append(
-            (r["rank"], r["key"], r["content"], round(r["score"], 6))
+            (r["rank"], r["key"], r["content"], r["score"].hex())
         )
     for i, q in enumerate(qs):
         single = [
-            (j + 1, r["key"], r["content"], round(r["score"], 6))
-            for j, r in enumerate(coll.search("text", q, limit=5).collect())
+            (j + 1, r["key"], r["content"], r["score"].hex())
+            for j, r in enumerate(
+                coll.search("text", q, limit=5, strategy="join").collect()
+            )
         ]
         assert sorted(batched[i]) == single, i
 

@@ -1,12 +1,14 @@
 """Hard-negative mining (operators/mining.py).
 
 The staged DuckDB oracle in test_rotated_contract.py covers the
-method='expr' end-to-end shape at sf0.001; these tests pin the
-semantics the oracle can't see: numpy==expr equivalence, gold/self
-exclusion, the margin denoiser's direction, the training-pair
-assembly, and the plan shape (broadcast joins only — the corpus is
-never shuffled).
+end-to-end shape at sf0.001; these tests pin the semantics the oracle
+can't see: scores equal to a single-process sequential-fold twin,
+gold/self exclusion, the margin denoiser's direction and tie rule,
+zero vectors, the training-pair assembly, and the plan shape
+(broadcast joins only — the corpus is never shuffled).
 """
+
+import math
 
 import numpy as np
 import pytest
@@ -30,16 +32,27 @@ def _toy_frames(spark):
     return emb, pairs
 
 
+def _fold_cosine(x, q):
+    """Cosine with the engine's sequential double fold (acc from 0.0,
+    one term at a time; 0.0 when a norm is 0), in plain Python."""
+    dot = xx = qq = 0.0
+    for a, b in zip(x, q):
+        dot += float(a) * float(b)
+        xx += float(a) * float(a)
+        qq += float(b) * float(b)
+    den = math.sqrt(xx) * math.sqrt(qq)
+    return 0.0 if den == 0.0 else dot / den
+
+
 def _numpy_mine(base, qid, qvec, pos_key, k, num_neg, margin):
-    """Single-process reference: brute-force cosine, same stage order."""
-    X = np.asarray(base, dtype=np.float64)
-    q = np.asarray(qvec, dtype=np.float64)
-    sims = X @ q / (np.linalg.norm(X, axis=1) * np.linalg.norm(q))
-    order = sorted(range(len(X)), key=lambda i: (-sims[i], i))
+    """Single-process reference: brute-force cosine, same stage order.
+    Returns [(key, score)] in rank order."""
+    sims = [_fold_cosine(x, qvec) for x in base]
+    order = sorted(range(len(base)), key=lambda i: (-sims[i], i))
     order = [i for i in order if i != qid][:k]
     pos_score = sims[pos_key]
     out = [
-        i
+        (i, sims[i])
         for i in order
         if i != pos_key and (margin is None or sims[i] <= pos_score - margin)
     ]
@@ -51,13 +64,13 @@ def test_margin_drops_false_negative(spark):
 
     emb, pairs = _toy_frames(spark)
     no_margin = mine_hard_negatives(
-        emb, pairs, k=10, num_negatives=5, margin=None, method="expr"
+        emb, pairs, k=10, num_negatives=5, margin=None
     )
     keys = [r.neg_key for r in no_margin.orderBy("neg_rank").collect()]
     assert keys[0] == 2  # the near-dup of the positive leads unfiltered
 
     denoised = mine_hard_negatives(
-        emb, pairs, k=10, num_negatives=5, margin=0.05, method="expr"
+        emb, pairs, k=10, num_negatives=5, margin=0.05
     )
     dkeys = [r.neg_key for r in denoised.orderBy("neg_rank").collect()]
     assert 2 not in dkeys  # ...and the margin filter removes it
@@ -79,19 +92,20 @@ def test_matches_single_process_reference(spark):
     pairs = spark.createDataFrame(
         prows, "query_id long, qvec array<double>, pos_key long"
     )
-    got = mine_hard_negatives(
-        emb, pairs, k=8, num_negatives=4, margin=0.02, method="expr"
-    )
+    got = mine_hard_negatives(emb, pairs, k=8, num_negatives=4, margin=0.02)
     got_map = {}
     for r in got.collect():
         got_map.setdefault(r.query_id, []).append((r.neg_rank, r.neg_key))
     for qid, qvec, pk in prows:
         want = _numpy_mine(base, qid, qvec, pk, k=8, num_neg=4, margin=0.02)
         have = [k for _, k in sorted(got_map.get(qid, []))]
-        assert have == want, f"query {qid}: {have} != {want}"
+        assert have == [k for k, _ in want], f"query {qid}: {have} != {want}"
 
 
-def test_numpy_matches_expr(spark):
+def test_scores_match_single_process_twin(spark):
+    """Keys, ranks AND scores (bit for bit) equal the sequential-fold
+    twin: the kernel's candidate scores and the positive's margin score
+    share one cosine fold."""
     from letsearch_spark.operators.mining import mine_hard_negatives
 
     rng = np.random.RandomState(23)
@@ -102,12 +116,67 @@ def test_numpy_matches_expr(spark):
     pairs = spark.createDataFrame(
         prows, "query_id long, qvec array<double>, pos_key long"
     )
-    kw = dict(k=12, num_negatives=6, margin=0.05)
-    a = mine_hard_negatives(emb, pairs, method="expr", **kw)
-    b = mine_hard_negatives(emb, pairs, method="numpy", **kw)
-    ra = sorted((r.query_id, r.neg_rank, r.neg_key) for r in a.collect())
-    rb = sorted((r.query_id, r.neg_rank, r.neg_key) for r in b.collect())
-    assert ra == rb
+    got = mine_hard_negatives(emb, pairs, k=12, num_negatives=6, margin=0.05)
+    have = sorted(
+        (r.query_id, r.neg_rank, r.neg_key, r.score.hex()) for r in got.collect()
+    )
+    want = sorted(
+        (qid, rank, key, score.hex())
+        for qid, qvec, pk in prows
+        for rank, (key, score) in enumerate(
+            _numpy_mine(base, qid, qvec, pk, k=12, num_neg=6, margin=0.05), 1
+        )
+    )
+    assert have == want
+
+
+def test_margin_zero_keeps_positive_ties(spark):
+    """margin=0.0 drops only candidates MORE similar than the positive:
+    a duplicate of the positive under another key ties it exactly and
+    survives, with score == the positive's score bit for bit."""
+    from letsearch_spark.operators.mining import mine_hard_negatives
+
+    rng = np.random.RandomState(5)
+    base = rng.normal(size=(20, 8))
+    base[1] = base[0] + rng.normal(scale=0.3, size=8)  # the positive
+    base[2] = base[1]  # key 2 duplicates the positive
+    base[3] = base[1] * 0.5 + base[0] * 0.5  # more similar than key 1
+    rows = [(int(i), [float(x) for x in base[i]]) for i in range(len(base))]
+    emb = spark.createDataFrame(rows, "_key long, vector array<double>")
+    pairs = spark.createDataFrame(
+        [(0, rows[0][1], 1)], "query_id long, qvec array<double>, pos_key long"
+    )
+    pos_score = _fold_cosine(base[1], base[0])
+    assert _fold_cosine(base[3], base[0]) > pos_score
+    got = {
+        r.neg_key: r.score
+        for r in mine_hard_negatives(
+            emb, pairs, k=10, num_negatives=10, margin=0.0
+        ).collect()
+    }
+    assert got[2].hex() == pos_score.hex()
+    assert 3 not in got and 1 not in got
+    assert all(s <= pos_score for s in got.values())
+
+
+def test_zero_vectors_score_zero(spark):
+    """A zero corpus row and a zero positive score 0.0 (the
+    cosine_similarity rule) instead of failing the margin filter's
+    positive-score division under ANSI mode."""
+    from letsearch_spark.operators.mining import mine_hard_negatives
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
+        "_key long, vector array<float>",
+    )
+    pairs = spark.createDataFrame(
+        [(0, [1.0, 0.0], 1)], "query_id long, qvec array<float>, pos_key long"
+    )
+    got = mine_hard_negatives(emb, pairs, k=3, num_negatives=3, margin=0.0)
+    # pos_score is 0.0: key 3 (cos 0.707) is dropped, key 2 ties it
+    assert [(r.neg_key, r.score) for r in got.orderBy("neg_rank").collect()] == [
+        (2, 0.0)
+    ]
 
 
 def test_num_negatives_validation(spark):
@@ -128,7 +197,7 @@ def test_corpus_never_shuffled(spark):
 
     emb, pairs = _toy_frames(spark)
     out = mine_hard_negatives(
-        emb, pairs, k=10, num_negatives=5, margin=0.05, method="numpy"
+        emb, pairs, k=10, num_negatives=5, margin=0.05
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
@@ -163,7 +232,7 @@ def test_build_training_pairs(spark):
         [(int(i), f"doc-{i}") for i in range(30)], "_key long, text string"
     )
     negs = mine_hard_negatives(
-        emb, pairs, k=10, num_negatives=3, margin=0.05, method="expr"
+        emb, pairs, k=10, num_negatives=3, margin=0.05
     )
     mined = {r.neg_rank: r.neg_key for r in negs.collect()}
     out = build_training_pairs(negs, docs, pairs).collect()
@@ -223,7 +292,7 @@ def test_multi_positive_pairs(spark):
         "query_id long, qvec array<double>, pos_key long",
     )
     negs = mine_hard_negatives(
-        emb, pairs, k=10, num_negatives=8, margin=None, method="expr"
+        emb, pairs, k=10, num_negatives=8, margin=None
     ).collect()
     keys = [r.neg_key for r in sorted(negs, key=lambda r: r.neg_rank)]
     assert len(keys) == len(set(keys)), "duplicate negatives from pair fan-out"
@@ -238,7 +307,7 @@ def test_multi_positive_pairs(spark):
     sims = X @ q / (np.linalg.norm(X, axis=1) * np.linalg.norm(q))
     min_pos = min(sims[1], sims[5])
     denoised = mine_hard_negatives(
-        emb, pairs, k=10, num_negatives=8, margin=0.05, method="expr"
+        emb, pairs, k=10, num_negatives=8, margin=0.05
     ).collect()
     assert denoised, "margin filter emptied the candidate list"
     for r in denoised:

@@ -205,9 +205,39 @@ def test_multiprobe_signature_counts():
         assert len(multiprobe_signatures(0b1010, bits, r)) == expected
 
 
-def test_knn_join_numpy_ties_match_expr(spark):
-    # duplicate vectors straddling the k boundary: the numpy path must
-    # keep all boundary ties and let the window break them by key asc
+def _knn_rows(df):
+    """knn_join output as {(query_id, rank): (key, score bits)}."""
+    return {
+        (r["query_id"], r["rank"]): (r["_key"], r["score"].hex())
+        for r in df.collect()
+    }
+
+
+def _cosine_twin(emb, queries, k, exclude_self=False):
+    """Column twin of knn_join: cosine_similarity over every
+    (base, query) pair, ranked by (score desc, key asc) -- same output
+    shape as :func:`_knn_rows`."""
+    from pyspark.sql import Window
+
+    from letsearch_spark.functions.vector import cosine_similarity
+
+    pairs = emb.crossJoin(queries)
+    if exclude_self:
+        pairs = pairs.where(F.col("_key") != F.col("query_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("_key"))
+    ranked = (
+        pairs.select(
+            "query_id", "_key", cosine_similarity("vector", "qvec").alias("score")
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+    return _knn_rows(ranked)
+
+
+def test_knn_join_ties_match_cosine_twin(spark):
+    # duplicate vectors straddling the k boundary: the kernel must keep
+    # all boundary ties and let the window break them by key asc
     rows = [(i, [1.0, 0.0]) for i in range(6)] + [(6, [0.0, 1.0])]
     emb = spark.createDataFrame(rows, "_key long, vector array<float>")
     queries = spark.createDataFrame(
@@ -215,12 +245,12 @@ def test_knn_join_numpy_ties_match_expr(spark):
     )
     from letsearch_spark.operators.topk import knn_join
 
-    e = [(r["rank"], r["_key"]) for r in knn_join(emb, queries, k=3, method="expr").collect()]
-    n = [(r["rank"], r["_key"]) for r in knn_join(emb, queries, k=3, method="numpy").collect()]
-    assert sorted(e) == sorted(n) == [(1, 0), (2, 1), (3, 2)]
+    got = _knn_rows(knn_join(emb, queries, k=3))
+    assert got == _cosine_twin(emb, queries, k=3)
+    assert [got[(0, r)][0] for r in (1, 2, 3)] == [0, 1, 2]
 
 
-def test_knn_join_numpy_matches_expr(spark, sf_dir):
+def test_knn_join_scores_match_cosine_twin(spark, sf_dir):
     import os
 
     from letsearch_spark.operators.topk import knn_join
@@ -228,17 +258,15 @@ def test_knn_join_numpy_matches_expr(spark, sf_dir):
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         F.col("vec_id").alias("_key"), F.col("embedding").alias("vector")
     )
-    queries = emb.where(F.col("_key") < 5).select(
+    queries = emb.where(F.col("_key") < 20).select(
         F.col("_key").alias("query_id"), F.col("vector").alias("qvec")
     )
-    expr = knn_join(emb, queries, k=5, method="expr")
-    npy = knn_join(emb, queries, k=5, method="numpy")
-    e = {(r["query_id"], r["rank"]): r["_key"] for r in expr.collect()}
-    n = {(r["query_id"], r["rank"]): r["_key"] for r in npy.collect()}
-    assert e == n  # identical neighbors and ranks (no near-ties in data)
-
-    with pytest.raises(ValueError):
-        knn_join(emb, queries, k=5, method="bogus")
+    # k=5: candidate selection + rescore; k=corpus size: every pair is
+    # rescored, so every score is compared bit for bit
+    for k in (5, emb.count()):
+        assert _knn_rows(knn_join(emb, queries, k=k)) == _cosine_twin(
+            emb, queries, k
+        ), k
 
 
 def test_knn_join_exclude_self(spark, sf_dir):
@@ -252,13 +280,123 @@ def test_knn_join_exclude_self(spark, sf_dir):
     queries = emb.where(F.col("_key") < 3).select(
         F.col("_key").alias("query_id"), F.col("vector").alias("qvec")
     )
-    for method in ("expr", "numpy"):
-        out = knn_join(
-            emb, queries, k=3, method=method, exclude_self=True
-        ).collect()
-        assert all(r["_key"] != r["query_id"] for r in out)
-        assert len(out) == 9  # 3 queries x k=3, self removed, rank dense
-        assert sorted(r["rank"] for r in out) == [1, 1, 1, 2, 2, 2, 3, 3, 3]
+    got = _knn_rows(knn_join(emb, queries, k=3, exclude_self=True))
+    assert got == _cosine_twin(emb, queries, k=3, exclude_self=True)
+    assert all(key != qid for (qid, _), (key, _) in got.items())
+    assert sorted(got) == [(q, r) for q in range(3) for r in (1, 2, 3)]
+
+
+def test_knn_join_near_ties_property(spark):
+    """Adversarial near-ties, where BLAS and the sequential fold can
+    order rows differently around the k-th score: exact duplicates,
+    rows 1 double ulp away from a pivot row, and permutations of the
+    pivot (against the constant query every permutation has the same
+    true cosine, but its fold rounds differently). Across partition
+    counts the kernel must return the Column twin's ranks and scores
+    bit for bit."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from letsearch_spark.operators.topk import knn_join
+
+    @settings(
+        max_examples=20,
+        deadline=None,
+        derandomize=True,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(
+        seed=st.integers(0, 2**31 - 1),
+        dim=st.integers(2, 48),
+        k=st.integers(1, 8),
+        parts=st.sampled_from([1, 2, 3, 7]),
+        n_dup=st.integers(0, 4),
+        n_ulp=st.integers(0, 6),
+        n_perm=st.integers(4, 16),
+        qids=st.sampled_from([(102,), (100, 101, 102)]),
+    )
+    def check(seed, dim, k, parts, n_dup, n_ulp, n_perm, qids):
+        rng = np.random.RandomState(seed)
+        # positive components: the constant query ranks the permutation
+        # cluster first, so the k-th score falls inside it
+        pivot = np.abs(rng.normal(size=dim))
+        rows = [pivot] * (1 + n_dup)
+        for _ in range(n_ulp):
+            v = pivot.copy()
+            j = rng.randint(dim)
+            v[j] = np.nextafter(v[j], np.inf if rng.rand() < 0.5 else -np.inf)
+            rows.append(v)
+        rows += [pivot[rng.permutation(dim)] for _ in range(n_perm)]
+        rows += list(rng.normal(size=(8, dim)))
+        keys = rng.permutation(len(rows))
+        emb = spark.createDataFrame(
+            [(int(key), [float(x) for x in v]) for key, v in zip(keys, rows)],
+            "_key long, vector array<double>",
+        ).repartition(parts)
+        # one query scores through BLAS gemv, several through gemm:
+        # the two sum in different orders
+        qvecs = {
+            100: pivot,
+            101: pivot + rng.normal(scale=1e-3, size=dim),
+            102: np.full(dim, 0.37),
+        }
+        queries = spark.createDataFrame(
+            [(q, [float(x) for x in qvecs[q]]) for q in qids],
+            "query_id long, qvec array<double>",
+        )
+        assert _knn_rows(knn_join(emb, queries, k=k)) == _cosine_twin(
+            emb, queries, k
+        )
+
+    check()
+
+
+def test_knn_join_zero_vectors_score_zero(spark):
+    """A zero base row or zero query scores 0.0 (the cosine_similarity
+    rule) instead of failing with a division by zero."""
+    from letsearch_spark.operators.topk import knn_join
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.0, 1.0])],
+        "_key long, vector array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [0.0, 0.0])], "query_id long, qvec array<float>"
+    )
+    got = _knn_rows(knn_join(emb, queries, k=3))
+    assert got == _cosine_twin(emb, queries, k=3)
+    assert got[(10, 2)] == (1, (0.0).hex())
+    assert {got[(11, r)] for r in (1, 2, 3)} == {
+        (key, (0.0).hex()) for key in (0, 1, 2)
+    }
+
+
+def test_knn_join_rejects_non_finite_vectors(spark):
+    from letsearch_spark.operators.topk import knn_join
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "_key long, vector array<float>"
+    )
+    for bad in (float("nan"), float("inf")):
+        queries = spark.createDataFrame(
+            [(10, [1.0, 0.0]), (11, [bad, 1.0])],
+            "query_id long, qvec array<float>",
+        )
+        # queries are collected on the driver: fails at plan build
+        with pytest.raises(ValueError, match=r"NaN/inf.*\[11\]"):
+            knn_join(emb, queries, k=1)
+
+    queries = spark.createDataFrame(
+        [(10, [1.0, 0.0])], "query_id long, qvec array<float>"
+    )
+    bad_emb = emb.union(
+        spark.createDataFrame(
+            [(2, [float("nan"), 0.0])], "_key long, vector array<float>"
+        )
+    )
+    # base vectors are only seen by the scan task
+    with pytest.raises(Exception, match=r"holds NaN/inf values \(keys \[2\]\)"):
+        knn_join(bad_emb, queries, k=1).collect()
 
 
 def test_lsh_topk_self_hit(spark, sf_dir):

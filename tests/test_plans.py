@@ -129,26 +129,6 @@ def test_knn_join_shuffles_candidates_only(spark, sf_dir):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_knn_join_expr_never_collapses_into_queries(spark, sf_dir):
-    """The expr path's first exchange must key on (query_id, scan
-    partition id): collapsing all scored pairs into |queries| reducers
-    is the 100-TB scale-killer this guards against."""
-    from letsearch_spark.operators.topk import knn_join
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    qs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    df = knn_join(emb, qs, k=3, key_col="vec_id", vec_col="embedding", method="expr")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    first = plan.split("Exchange hashpartitioning")
-    # the LOWEST exchange (last in toString order) carries the full scored
-    # stream; it must include __pid in its keys
-    assert "__pid" in first[-1].split("\n")[0]
-    # the candidate exchange above it keys on query_id alone
-    assert first[1].split("\n")[0].startswith("(query_id")
-
-
 def test_search_is_single_takeordered_over_cache(spark, sf_dir, tmp_path):
     from letsearch_spark.collection import Collection
 
@@ -178,27 +158,7 @@ def test_no_accidental_cartesian_in_contract_queries(spark, sf_dir):
     embedding dedup was demoted to a test-only verification twin in
     round 3). A new query that accidentally plans a cartesian fails
     here before it ships."""
-    from letsearch_spark.queries import QUERIES
-
-    # knn_join's oracle-gated entry runs method='expr', which broadcasts
-    # the (tiny, driver-bounded) query batch and scores it map-side
-    # against every scan partition -- a deliberate BroadcastNestedLoopJoin
-    # whose broadcast side is |queries| rows, not an accidental all-pairs
-    # shuffle. The production numpy path has its own candidates-only gate
-    # (test_knn_join_shuffles_candidates_only).
-    # eval_lsh_recall's exact leg IS knn_join(method='expr') -- the same
-    # deliberate tiny-broadcast shape; mine_hard_negatives and
-    # training_pairs route their candidate stage through
-    # knn_join(method='expr') too (the broadcast side is the
-    # driver-bounded training-pair batch, not corpus data)
-    ALLOWED: set[str] = {
-        "knn_join",
-        "eval_lsh_recall",
-        "eval_hamming_recall",  # r7: same exact-leg tiny-query broadcast
-        "mine_hard_negatives",
-        "training_pairs",
-    }
-    from letsearch_spark.queries import STAGED_QUERIES
+    from letsearch_spark.queries import QUERIES, STAGED_QUERIES
 
     flagged = {}
     for name, fn in {**QUERIES, **STAGED_QUERIES}.items():
@@ -209,7 +169,7 @@ def test_no_accidental_cartesian_in_contract_queries(spark, sf_dir):
             for k in ("CartesianProduct", "BroadcastNestedLoopJoin")
             if k in plan
         ]
-        if hits and name not in ALLOWED:
+        if hits:
             flagged[name] = hits
     assert not flagged, flagged
 

@@ -301,7 +301,7 @@ def test_pq_knn_join_matches_per_query_loop(spark, sf_dir, pq_cb8):
         assert sorted(got[qr["query_id"]]) == want
 
     # one-plan recall measurement against the exact join
-    exact = knn_join(emb, queries, k=10, method="numpy")
+    exact = knn_join(emb, queries, k=10)
     approx = pq_knn_join(coded, cb, queries, k=10)
     r = mean_recall_at_k(approx, exact, k=10)
     assert 0.5 < r <= 1.0  # plain-PQ recall measured ~0.73 on this table

@@ -200,7 +200,7 @@ def main() -> None:
         )
         timeit(
             "knn100_numpy",
-            lambda: knn_join(emb, queries, k=10, method="numpy").count(),
+            lambda: knn_join(emb, queries, k=10).count(),
         )
 
         from letsearch_spark.operators.mining import mine_hard_negatives
@@ -213,16 +213,13 @@ def main() -> None:
         # corpus scans, the candidate set staying |queries| x k
         # regardless of corpus size
         def _mine():
-            nn1 = knn_join(
-                emb, queries, k=1, method="numpy", exclude_self=True
-            )
+            nn1 = knn_join(emb, queries, k=1, exclude_self=True)
             pairs = queries.join(
                 nn1.select("query_id", F.col("_key").alias("pos_key")),
                 "query_id",
             )
             return mine_hard_negatives(
-                emb, pairs, k=20, num_negatives=5, margin=0.05,
-                method="numpy",
+                emb, pairs, k=20, num_negatives=5, margin=0.05
             ).count()
 
         timeit("mine_negatives100", _mine)
