@@ -969,6 +969,23 @@ class Collection:
     def _embedder(self) -> Embedder:
         return get_embedder(self.config.model_name, self.config.model_variant)
 
+    def _embed_queries(self, texts: Sequence[str]) -> list[list[float]]:
+        """Embed query strings driver-side -- the one query-vector
+        intake of every serving entry point. A NaN/inf vector raises
+        ``ValueError`` naming the query indexes before any plan is
+        built: no strategy can rank it (it would score NaN, None or
+        nothing, depending on the plan)."""
+        import numpy as np
+
+        vecs = np.asarray(self._embedder().embed(list(texts)), np.float64)
+        bad = np.nonzero(~np.isfinite(vecs).all(axis=1))[0]
+        if len(bad):
+            raise ValueError(
+                f"query vectors hold NaN/inf values (query indexes "
+                f"{bad[:5].tolist()})"
+            )
+        return vecs.tolist()
+
     def _fs_nonempty(self, path: str) -> bool:
         """True if ``path`` exists and holds at least one non-hidden entry.
 
@@ -1457,7 +1474,7 @@ class Collection:
         self._require_embeddings(column)
         if strategy == "auto":
             strategy = self.resolve_strategy(column)
-        qvec = self._embedder().embed([query])[0].tolist()
+        qvec = self._embed_queries([query])[0]
 
         if strategy == "pq":
             return self._search_pq(column, qvec, limit)
@@ -1518,10 +1535,10 @@ class Collection:
         searches for roughly the cost of one.
 
         strategy='pq' scores every query against the compressed coded
-        view in one batched ADC plan (operators/pq.py pq_knn_join, one
-        stacked LUT tensor in the closure) -- the bulk form of
-        :meth:`search` strategy='pq', reading m bytes per vector
-        instead of the float vectors.
+        view in one batched ADC plan (operators/pq.py pq_knn_join,
+        reading m bytes per vector instead of the float vectors) -- the
+        bulk form of :meth:`search` strategy='pq', whose scores it
+        equals bit for bit.
 
         strategy='hamming' (r7) runs one batched signature scan
         (operators/hamming.py hamming_knn_join -- vectorized XOR +
@@ -1542,8 +1559,9 @@ class Collection:
         ivf_pq->ivf_pq).
 
         Returns (query_idx, rank, key, content, score) ordered by
-        (query_idx, rank). Dense scores equal :meth:`search`
-        strategy='join' scores bit for bit; hybrid scores are RRF scores
+        (query_idx, rank). Rows and scores equal :meth:`search` bit for
+        bit: dense against strategy='join', and pq, hamming and ivf_pq
+        against the same-named strategy; hybrid scores are RRF scores
         as in :meth:`search` strategy='hybrid'.
 
         ``where`` (strategy='dense' only, same contract as
@@ -1593,9 +1611,9 @@ class Collection:
             }[self.resolve_strategy(column)]
         from letsearch_spark.operators.topk import knn_join
 
-        vecs = self._embedder().embed(list(queries))
+        vecs = self._embed_queries(queries)
         qdf = self.spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            list(enumerate(vecs)),
             "query_idx long, qvec array<float>",
         )
         if strategy == "ivf_pq":
@@ -1665,14 +1683,10 @@ class Collection:
                 query_key_col="query_idx",
                 query_vec_col="qvec",
             )
-            qnorms = [
-                (i, math.sqrt(sum(float(x) * float(x) for x in v)))
-                for i, v in enumerate(vecs)
-            ]
             qn_df = self.spark.createDataFrame(
                 [
-                    (i, [float(x) for x in v], qn)
-                    for (i, qn), v in zip(qnorms, vecs)
+                    (i, v, math.sqrt(sum(x * x for x in v)))
+                    for i, v in enumerate(vecs)
                 ],
                 "query_idx long, qvec array<float>, qnorm double",
             )
@@ -1726,9 +1740,9 @@ class Collection:
         if strategy == "pq":
             # batched ADC: one pq_knn_join plan over the coded view
             # (operators/pq.py) -- N compressed searches for one scan of
-            # the codes; scores/ranks match per-query strategy='pq',
-            # null-content keys drop in the fetch-back (P6), which like
-            # _search_pq happens after ranking
+            # the codes. build_pq_index left null-content rows out of
+            # that view, so ranks and scores equal per-query
+            # strategy='pq' (pq_topk) bit for bit
             from letsearch_spark.operators.pq import pq_knn_join
 
             if column not in self._pq_index:
@@ -1837,9 +1851,7 @@ class Collection:
         )
         if prefilter_k == "auto":
             prefilter_k = self.resolve_maxsim_prefilter(column, group_col)
-        qvecs = [
-            [float(x) for x in v] for v in self._embedder().embed(list(queries))
-        ]
+        qvecs = self._embed_queries(queries)
         if prefilter_k is not None:
             base = self._maxsim_prefilter(
                 column,
@@ -2148,9 +2160,7 @@ class Collection:
             prefilter_k = self.resolve_maxsim_prefilter(column, group_col)
         # ONE embed call for the whole batch (K3), then unflatten
         texts = [q for qs in sets for q in qs]
-        vecs = iter(
-            [float(x) for x in v] for v in self._embedder().embed(texts)
-        )
+        vecs = iter(self._embed_queries(texts))
         qvec_sets = [[next(vecs) for _ in qs] for qs in sets]
         if prefilter_k is not None:
             # candidate generation over the UNION of every query's
@@ -2669,10 +2679,8 @@ class Collection:
         frozen as the ``_center.npy`` sidecar that both the stored
         signatures and every query read back -- internal consistency
         comes from the sidecar, not from the aggregation order."""
-        cached = self._emb_cache.get(f"__serve_{column}")
-        base = cached if cached is not None else self._raw_serve_frame(column)
         rows = (
-            base.where(F.col("content").isNotNull())
+            self._index_serve_frame(column)
             .select(F.posexplode("vector").alias("pos", "x"))
             .groupBy("pos")
             .agg(F.avg(F.col("x").cast("double")).alias("c"))
@@ -2694,15 +2702,11 @@ class Collection:
         return signbits_col(centered, len(center))
 
     def _hamming_sig_frame(self, column: str, center: list[float]) -> DataFrame:
-        """(key, _sig) computed straight off the parquet tables (reusing
-        the float serve view only when some OTHER strategy already
-        cached it): the point of the signature tier is serving a
-        collection whose float view does NOT fit in cluster memory, so
-        building signatures must not materialize that float cache."""
-        cached = self._emb_cache.get(f"__serve_{column}")
-        base = cached if cached is not None else self._raw_serve_frame(column)
-        emb = base.where(F.col("content").isNotNull())
-        return emb.select(
+        """(key, _sig) over :meth:`_index_serve_frame`: building
+        signatures must not materialize the float serve cache (the
+        signature tier serves collections whose float view does not
+        fit in cluster memory)."""
+        return self._index_serve_frame(column).select(
             KEY_COL, self._centered_sig_col(center).alias("_sig")
         )
 
@@ -2855,21 +2859,16 @@ class Collection:
 
     def _maxsim_pool_live_frame(self, column: str, group_col: str) -> DataFrame:
         """(group_col, vector) rows the pooled sidecar summarizes -- the
-        SAME population the exact grouped serving path scores (serve
-        rows with non-null content, minus tombstones via the docs
-        join), WITHOUT materializing the float serve cache (the hamming
-        build invariant: index maintenance must not pay for a cache
-        only the exact tier needs). Null/empty vectors are excluded so
+        SAME population the exact grouped serving path scores
+        (:meth:`_index_serve_frame`, minus tombstones via the docs
+        join), so index maintenance never pays for the float cache
+        only the exact tier needs. Null/empty vectors are excluded so
         the refresh count diff and the pooled ``n_vecs`` agree by
         construction (the pooling explode drops them anyway)."""
-        cached = self._emb_cache.get(f"__serve_{column}")
-        base = cached if cached is not None else self._raw_serve_frame(column)
-        base = base.where(F.col("content").isNotNull()).select(
-            KEY_COL, "vector"
-        )
         groups = self.docs().select(KEY_COL, group_col)
         return (
-            base.join(groups, KEY_COL)
+            self._index_serve_frame(column)
+            .join(groups, KEY_COL)
             .where(F.coalesce(F.size("vector"), F.lit(0)) > 0)
             .select(group_col, "vector")
         )
@@ -3524,7 +3523,7 @@ class Collection:
             if column not in self.config.index_columns:
                 raise ValueError(f"column {column!r} is not indexed")
             self._require_embeddings(column)
-            qvec = self._embedder().embed([query])[0].tolist()
+            qvec = self._embed_queries([query])[0]
             if strategy == "local":
                 rows = self._local_topk(
                     self._local_bundle(column), qvec, limit

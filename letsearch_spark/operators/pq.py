@@ -95,13 +95,26 @@ def _normalize(x: np.ndarray) -> np.ndarray:
 
 
 def _unit_query(query_vec: Sequence[float], dim: int | None = None) -> np.ndarray:
-    """Driver-side query prep shared by pq_topk/ivf_pq_topk (safe to
-    live at module level: it never ships inside a UDF)."""
+    """Driver-side query prep of every ADC entry point (pq_topk,
+    ivf_pq_topk and the batched kernel); a NaN/inf value raises
+    ``ValueError`` instead of scoring every row NaN."""
     q = np.asarray(list(query_vec), dtype=np.float64)
     if dim is not None and q.shape[0] != dim:
         raise ValueError(f"query dim {q.shape[0]} != codebook dim {dim}")
+    if not np.isfinite(q).all():
+        raise ValueError("query vector holds NaN/inf values")
     qn = np.linalg.norm(q)
     return q / qn if qn > 0 else q
+
+
+def _adc_lut(codebook: "PQCodebook", q: np.ndarray) -> np.ndarray:
+    """(m x ksub) ADC lookup table of a unit query, one gemv per
+    subspace: LUT[s, c] = <q_s, codeword_{s,c}>, so
+    score(x) = sum_s LUT[s, code_s(x)]."""
+    d = codebook.dsub
+    return np.stack(
+        [cb @ q[s * d : (s + 1) * d] for s, cb in enumerate(codebook.codebooks)]
+    )
 
 
 def _nearest(sub: np.ndarray, cent: np.ndarray) -> np.ndarray:
@@ -250,11 +263,8 @@ def pq_topk(
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     q = _unit_query(query_vec, codebook.dim)
-    m, dsub = codebook.m, codebook.dsub
-    # LUT[s, c] = <q_s, codeword_{s,c}>; score(x) = sum_s LUT[s, code_s(x)]
-    lut = np.stack(
-        [codebook.codebooks[s] @ q[s * dsub : (s + 1) * dsub] for s in range(m)]
-    )
+    m = codebook.m
+    lut = _adc_lut(codebook, q)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -385,6 +395,95 @@ def ivf_pq_topk(
     return pq_topk(df, codebook, query_vec, k=k, key_col=key_col)
 
 
+def _unit_queries(
+    queries: DataFrame,
+    k: int,
+    dim: int,
+    query_key_col: str,
+    query_vec_col: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-side intake of a batched ADC call: validate ``k`` and
+    collect the query frame (the small side) into (query ids, unit
+    query matrix), each row prepared by :func:`_unit_query`."""
+    if k <= 0:
+        raise ValueError(f"k must be positive, got {k}")
+    qrows = queries.select(query_key_col, query_vec_col).collect()
+    if not qrows:
+        raise ValueError("queries frame is empty")
+    qids = np.array([r[0] for r in qrows], dtype=np.int64)
+    return qids, np.stack([_unit_query(r[1], dim) for r in qrows])
+
+
+def _adc_knn_join(
+    frame: DataFrame,
+    codebook: PQCodebook,
+    qids: np.ndarray,
+    Qn: np.ndarray,
+    probers: dict[int, np.ndarray],
+    k: int,
+    key_col: str,
+    code_col: str,
+    query_key_col: str,
+) -> DataFrame:
+    """The one batched ADC kernel behind :func:`pq_knn_join` and
+    :func:`ivf_pq_knn_join`.
+
+    ``frame`` carries (key_col, code_col, ``_list``); ``probers`` maps
+    each list id to the positions (rows of ``Qn``) of the queries that
+    probe it. Each query gets the LUT of :func:`pq_topk`. Per Arrow
+    batch and list, every row is scored only against that list's
+    probers with pq_topk's gather + ``sum(axis=1)``, so scores equal
+    the per-query path bit for bit; :func:`topk.boundary_topk` keeps
+    each query's local top-k with its boundary ties, and a final
+    per-query window ranks the survivors. No float vectors are read
+    anywhere.
+
+    Output: (query_key_col, key_col, score, rank), rank 1..k per query.
+    """
+    from pyspark.sql import Window
+
+    luts = np.stack([_adc_lut(codebook, q) for q in Qn])
+    m = codebook.m
+    marange = np.arange(m)[None, :]
+
+    def score_partition(batches):
+        for pdf in batches:
+            codes = np.frombuffer(
+                b"".join(pdf[code_col].tolist()), dtype=np.uint8
+            ).reshape(len(pdf), m)
+            keys = pdf[key_col].values
+            lists = pdf["_list"].values
+            for lst in np.unique(lists):
+                qpos = probers.get(int(lst))
+                if qpos is None:
+                    continue
+                rows = np.nonzero(lists == lst)[0]
+                sub = codes[rows]
+                S = np.stack(
+                    [luts[qj][marange, sub].sum(axis=1) for qj in qpos],
+                    axis=1,
+                )  # (rows, probers)
+                qi, ri = boundary_topk(S, k)
+                yield pd.DataFrame(
+                    {
+                        query_key_col: qids[qpos[qi]],
+                        key_col: keys[rows[ri]],
+                        "score": S[ri, qi],
+                    }
+                )
+
+    candidates = frame.select(key_col, code_col, "_list").mapInPandas(
+        score_partition,
+        schema=f"{query_key_col} long, {key_col} long, score double",
+    )
+    w = Window.partitionBy(query_key_col).orderBy(
+        F.desc("score"), F.asc(key_col)
+    )
+    return candidates.withColumn(
+        "rank", F.row_number().over(w).cast("long")
+    ).where(F.col("rank") <= k)
+
+
 def pq_knn_join(
     coded: DataFrame,
     codebook: PQCodebook,
@@ -395,70 +494,31 @@ def pq_knn_join(
     query_key_col: str = "query_id",
     query_vec_col: str = "qvec",
 ) -> DataFrame:
-    """Batched ADC search: top-k (by compressed-code score) for every
-    query row in ONE plan -- the shape for bulk recall evaluation of a
-    PQ index (feed the result and an exact knn_join into
-    operators/evaluate.py).
+    """Batched ADC search, the bulk form of :func:`pq_topk`: top-k (by
+    compressed-code score) for every query row in ONE plan -- the
+    shape for bulk recall evaluation of a PQ index (feed the result
+    and an exact knn_join into operators/evaluate.py).
 
-    Same candidate-only geometry as topk.knn_join: queries collect
-    driver-side (they are the small side), ONE stacked LUT tensor
-    (q x m x ksub subspace inner products) ships in the closure, each
-    partition scores its codes against every query with m fancy-index
-    adds and emits only its local top-k per query (boundary-tie-complete,
-    topk.boundary_topk); a final per-query window ranks the
-    (partitions x k) survivors. No float vectors are read anywhere.
+    Runs the kernel of :func:`ivf_pq_knn_join` with the whole coded
+    frame as one list that every query probes, so scores equal
+    :func:`pq_topk`'s bit for bit.
 
     Output: (query_key_col, key_col, score, rank), rank 1..k per query.
     """
-    from pyspark.sql import Window
-
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    qrows = queries.select(query_key_col, query_vec_col).collect()
-    if not qrows:
-        raise ValueError("queries frame is empty")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    if Q.shape[1] != codebook.dim:
-        raise ValueError(
-            f"query dim {Q.shape[1]} != codebook dim {codebook.dim}"
-        )
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    Qn = Q / qn
-    m, dsub = codebook.m, codebook.dsub
-    # luts[qi, s, c] = <query_qi restricted to subspace s, codeword c>
-    Qsub = Qn.reshape(len(Qn), m, dsub)
-    luts = np.einsum("mkd,qmd->qmk", codebook.codebooks, Qsub)
-    kk = k
-
-    schema = f"{query_key_col} long, {key_col} long, score double"
-
-    def score_partition(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf[code_col].tolist()), dtype=np.uint8
-            ).reshape(len(pdf), m)
-            keys = pdf[key_col].values
-            S = np.zeros((len(pdf), len(qids)))
-            for s in range(m):
-                S += luts[:, s, codes[:, s]].T  # (rows, queries)
-            qi, ri = boundary_topk(S, kk)
-            yield pd.DataFrame(
-                {query_key_col: qids[qi], key_col: keys[ri], "score": S[ri, qi]}
-            )
-
-    candidates = coded.select(key_col, code_col).mapInPandas(
-        score_partition, schema=schema
+    qids, Qn = _unit_queries(
+        queries, k, codebook.dim, query_key_col, query_vec_col
     )
-    w = Window.partitionBy(query_key_col).orderBy(
-        F.desc("score"), F.asc(key_col)
+    return _adc_knn_join(
+        coded.select(key_col, code_col, F.lit(0).alias("_list")),
+        codebook,
+        qids,
+        Qn,
+        {0: np.arange(len(qids))},
+        k,
+        key_col,
+        code_col,
+        query_key_col,
     )
-    return candidates.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).where(F.col("rank") <= k)
 
 
 def ivf_pq_knn_join(
@@ -475,9 +535,9 @@ def ivf_pq_knn_join(
     query_vec_col: str = "qvec",
     exclude: DataFrame | None = None,
 ) -> DataFrame:
-    """Batched IVF-PQ search: top-k (by ADC score) for every query row
-    in ONE plan over the on-disk coded index -- the bulk form of
-    :func:`ivf_pq_topk`, and the batched shape for the biggest serving
+    """Batched IVF-PQ search, the bulk form of :func:`ivf_pq_topk`:
+    top-k (by ADC score) for every query row in ONE plan over the
+    on-disk coded index -- the batched shape for the biggest serving
     tier (codes on disk, no cache at all). ``exclude``: optional
     (key_col) frame anti-joined BEFORE the top-k truncation (the
     deletion-vector probe filter -- same contract as
@@ -487,102 +547,35 @@ def ivf_pq_knn_join(
     driver-side; the scan reads only the UNION of probed ``_list``
     parquet partitions (partition pruning still applies -- at nprobe=2
     and 100 distinct queries that is at most 200 of nlist partitions,
-    typically far fewer once probes overlap). Each partition scores a
-    row ONLY against the queries that probed its list (a list -> query
-    indices table ships in the closure with the stacked LUT tensor),
-    emits local top-k per query, and a final per-query window ranks
-    the survivors. Scores and candidate sets match per-query
-    :func:`ivf_pq_topk` exactly.
+    typically far fewer once probes overlap), and the shared kernel
+    scores a row ONLY against the queries that probed its list.
+    Scores and candidate sets match per-query :func:`ivf_pq_topk`
+    exactly; with ``nprobe >= nlist`` the result equals
+    :func:`pq_knn_join` over the same codes.
 
     Output: (query_key_col, key_col, score, rank), rank 1..k per query.
     """
-    from pyspark.sql import Window
-
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    qrows = queries.select(query_key_col, query_vec_col).collect()
-    if not qrows:
-        raise ValueError("queries frame is empty")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    # normalize each query EXACTLY like the per-query path (_unit_query
-    # uses the 1-D BLAS norm; an axis-reduction norm differs by ulps and
-    # would break bit-parity with ivf_pq_topk) -- and compute each
-    # query's probe order with the same matrix-VECTOR product (gemv)
-    # the per-query path uses: a gemm over the stacked queries can
+    qids, Qn = _unit_queries(
+        queries, k, codebook.dim, query_key_col, query_vec_col
+    )
+    # each query's probe order from the same matrix-VECTOR product
+    # (gemv) ivf_pq_topk uses: a gemm over the stacked queries can
     # accumulate in a different order and flip near-tied probe choices
-    Qn = np.stack([_unit_query(r[1], codebook.dim) for r in qrows])
-    order = np.stack(
-        [np.argsort(-(centroids @ Qn[i]))[:nprobe] for i in range(len(Qn))]
-    )  # (q, nprobe)
-    # list -> positions of the queries that probe it
     probers: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        for lst in order[qi]:
+    for qi, q in enumerate(Qn):
+        for lst in np.argsort(-(centroids @ q))[:nprobe]:
             probers.setdefault(int(lst), []).append(qi)
-    probers_arr = {lst: np.array(v) for lst, v in probers.items()}
-    m, dsub = codebook.m, codebook.dsub
-    # per-(query, subspace) matmuls, NOT one einsum: this is exactly how
-    # pq_topk builds its LUT, so batched ADC sums are bit-identical to
-    # the per-query path (einsum's accumulation order differs by ulps)
-    luts = np.stack(
-        [
-            np.stack(
-                [
-                    codebook.codebooks[s] @ Qn[qi, s * dsub : (s + 1) * dsub]
-                    for s in range(m)
-                ]
-            )
-            for qi in range(len(Qn))
-        ]
-    )
-    kk = k
-
-    df = spark.read.parquet(path).filter(
-        F.col("_list").isin(*[int(x) for x in probers])
-    )
+    df = spark.read.parquet(path).filter(F.col("_list").isin(*probers))
     if exclude is not None:
         df = df.join(exclude.select(key_col), key_col, "left_anti")
-    schema = f"{query_key_col} long, {key_col} long, score double"
-
-    def score_partition(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf[code_col].tolist()), dtype=np.uint8
-            ).reshape(len(pdf), m)
-            keys = pdf[key_col].values
-            lists = pdf["_list"].values
-            out_q, out_k, out_s = [], [], []
-            marange = np.arange(m)[None, :]
-            for lst in np.unique(lists):
-                qpos = probers_arr.get(int(lst))
-                if qpos is None:
-                    continue
-                rows = np.nonzero(lists == lst)[0]
-                sub = codes[rows]
-                for qj in qpos:
-                    # gather + sum(axis=1): the EXACT summation pq_topk's
-                    # _adc uses (numpy pairwise), so batched scores are
-                    # bit-identical to the per-query path
-                    scores = luts[qj][marange, sub].sum(axis=1)
-                    top = min(kk, len(scores))
-                    part = np.argpartition(-scores, top - 1)[:top]
-                    thresh = scores[part].min()
-                    hit = np.nonzero(scores >= thresh)[0]
-                    out_q.extend([qids[qj]] * len(hit))
-                    out_k.extend(keys[rows[hit]])
-                    out_s.extend(scores[hit])
-            yield pd.DataFrame(
-                {query_key_col: out_q, key_col: out_k, "score": out_s}
-            )
-
-    candidates = df.select(key_col, code_col, "_list").mapInPandas(
-        score_partition, schema=schema
+    return _adc_knn_join(
+        df,
+        codebook,
+        qids,
+        Qn,
+        {lst: np.array(v) for lst, v in probers.items()},
+        k,
+        key_col,
+        code_col,
+        query_key_col,
     )
-    w = Window.partitionBy(query_key_col).orderBy(
-        F.desc("score"), F.asc(key_col)
-    )
-    return candidates.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).where(F.col("rank") <= k)

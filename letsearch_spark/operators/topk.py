@@ -72,8 +72,9 @@ def boundary_topk(
     with fewer than k live rows keeps all of them).
 
     Returns (query index, row index) arrays, ordered by query then row.
-    Shared by every candidate-only batched scan: knn_join, pq_knn_join
-    and hamming_knn_join (which passes negated distances)."""
+    Shared by every candidate-only batched scan: knn_join, the ADC
+    kernel behind pq_knn_join / ivf_pq_knn_join, and hamming_knn_join
+    (which passes negated distances)."""
     top = min(k, S.shape[0])
     part = np.argpartition(-S, top - 1, axis=0)[:top]
     thresh = np.take_along_axis(S, part, axis=0).min(axis=0) - slack

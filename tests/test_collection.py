@@ -913,7 +913,10 @@ def test_search_strategy_hamming(spark, tmp_path, sf_dir):
     (1 bit/dim), ranks by bit_count Hamming, exact-rescores the top
     candidates. With hamming_rescore >= corpus rows the results must be
     BIT-IDENTICAL to strategy='join' (the scan keeps everything and the
-    rescore reuses the serve-view cosine); writes invalidate."""
+    rescore reuses the serve-view cosine) on each of the three rescore
+    branches: the cached float view, the collected IN-list, and the
+    broadcast join taken when depth > hamming_inlist_max. Writes
+    invalidate."""
     import os
 
     from letsearch_spark.collection import Collection
@@ -927,12 +930,22 @@ def test_search_strategy_hamming(spark, tmp_path, sf_dir):
     row = c.docs().select("_key", "text").first()
     # full-rescore == exact (scores included: same _vnorm serve score)
     c.hamming_rescore = c.count()
-    hits = c.search("text", row["text"], limit=5, strategy="hamming").collect()
     exact = c.search("text", row["text"], limit=5, strategy="join").collect()
-    assert [(h["key"], h["score"]) for h in hits] == [
-        (h["key"], h["score"]) for h in exact
-    ]
-    assert hits[0]["key"] == row["_key"] and hits[0]["score"] > 0.999
+    want = [(h["key"], h["score"].hex()) for h in exact]
+    assert exact[0]["key"] == row["_key"] and exact[0]["score"] > 0.999
+
+    def hamming_bits():
+        hits = c.search("text", row["text"], limit=5, strategy="hamming")
+        return [(h["key"], h["score"].hex()) for h in hits.collect()]
+
+    assert "__serve_text" in c._emb_cache  # branch 1: cached float view
+    assert hamming_bits() == want
+    c._emb_cache.pop("__serve_text").unpersist()
+    assert hamming_bits() == want  # branch 2: collected IN-list
+    c.hamming_inlist_max = 0
+    assert hamming_bits() == want  # branch 3: broadcast join
+    assert "__serve_text" not in c._emb_cache
+    del c.hamming_inlist_max
 
     # partial rescore still overlaps the exact top-10 well
     c.hamming_rescore = 60
@@ -1462,19 +1475,19 @@ def test_ivf_pq_refresh_restart_and_replace_guard(spark, tmp_path, sf_dir):
 
 def test_search_many_pq_matches_per_query(coll):
     """strategy='pq' (round 6): the batched ADC plan must reproduce the
-    per-query strategy='pq' results exactly -- same keys, same
-    compressed-code scores -- and reject where= (the coded view has no
-    filter columns)."""
+    per-query strategy='pq' results bit for bit -- same keys, same
+    compressed-code score bits (float.hex, unrounded) -- and reject
+    where= (the coded view has no filter columns)."""
     coll.embed_column("text", incremental=True)
     qs = [f"spark join query window batch {i}" for i in range(4)]
     batched = {}
     for r in coll.search_many("text", qs, limit=5, strategy="pq").collect():
         batched.setdefault(r["query_idx"], []).append(
-            (r["rank"], r["key"], round(r["score"], 6))
+            (r["rank"], r["key"], r["score"].hex())
         )
     for i, q in enumerate(qs):
         single = [
-            (j + 1, r["key"], round(r["score"], 6))
+            (j + 1, r["key"], r["score"].hex())
             for j, r in enumerate(
                 coll.search("text", q, limit=5, strategy="pq").collect()
             )

@@ -165,6 +165,9 @@ def test_pq_topk_query_validation(spark, sf_dir, pq_cb8):
         pq_topk(coded, cb, [1.0, 2.0], k=5)
     with pytest.raises(ValueError, match="k must be"):
         pq_topk(coded, cb, [0.0] * 64, k=0)
+    for bad in (float("nan"), float("inf")):
+        with pytest.raises(ValueError, match="NaN/inf"):
+            pq_topk(coded, cb, [bad] + [0.0] * 63, k=5)
 
 
 @pytest.mark.deep  # auditor tier (pytest.ini): full-probe equivalence sweep; ivf_pq behavior tests stay default
@@ -268,12 +271,15 @@ def test_ivf_pq_default_keeps_key_columns(spark, sf_dir, tmp_path):
         spark, path, centroids, cb, [0.1] * 64, k=5, nprobe=2
     ).collect()
     assert len(hits) == 5
+    with pytest.raises(ValueError, match="NaN/inf"):
+        ivf_pq_topk(spark, path, centroids, cb, [float("inf")] + [0.1] * 63)
 
 
 def test_pq_knn_join_matches_per_query_loop(spark, sf_dir, pq_cb8):
-    """Batched ADC equals the per-query pq_topk loop exactly (same
-    codes, same LUT arithmetic, same tie-break), and recall against
-    exact knn_join is measurable through evaluate.py in one plan."""
+    """Batched ADC equals the per-query pq_topk loop bit for bit (same
+    codes, same LUT and sum arithmetic, same tie-break; scores compared
+    as float.hex, unrounded), and recall against exact knn_join is
+    measurable through evaluate.py in one plan."""
     from letsearch_spark.operators.evaluate import mean_recall_at_k
     from letsearch_spark.operators.pq import pq_knn_join
     from letsearch_spark.operators.topk import knn_join
@@ -289,13 +295,13 @@ def test_pq_knn_join_matches_per_query_loop(spark, sf_dir, pq_cb8):
     got = {}
     for r in batched:
         got.setdefault(r["query_id"], []).append(
-            (r["rank"], r["_key"], round(r["score"], 10))
+            (r["rank"], r["_key"], r["score"].hex())
         )
     qrows = queries.collect()
     for qr in qrows:
         loop = pq_topk(coded, cb, qr["qvec"], k=10).collect()
         want = [
-            (i + 1, r["_key"], round(r["score"], 10))
+            (i + 1, r["_key"], r["score"].hex())
             for i, r in enumerate(loop)
         ]
         assert sorted(got[qr["query_id"]]) == want
@@ -312,6 +318,39 @@ def test_pq_knn_join_matches_per_query_loop(spark, sf_dir, pq_cb8):
         pq_knn_join(coded, cb, queries.where(F.lit(False)), k=5)
     with pytest.raises(ValueError, match="k must be"):
         pq_knn_join(coded, cb, queries, k=0)
+    nan_q = queries.select(
+        "query_id",
+        F.concat(
+            F.array(F.lit(float("nan")).cast("float")), F.slice("qvec", 2, 63)
+        ).alias("qvec"),
+    )
+    with pytest.raises(ValueError, match="NaN/inf"):
+        pq_knn_join(coded, cb, nan_q, k=5)
+
+
+def test_ivf_pq_knn_join_full_probe_equals_pq_knn_join(spark, sf_dir, tmp_path):
+    """One ADC kernel: with nprobe == nlist every query probes every
+    list, so batched IVF-PQ equals batched plain PQ over the same codes
+    -- keys, ranks and score bits."""
+    from letsearch_spark.operators.pq import build_ivf_pq, ivf_pq_knn_join, pq_knn_join
+
+    emb = _emb(spark, sf_dir)
+    path = str(tmp_path / "ivfpq_full")
+    centroids, cb = build_ivf_pq(emb, path, nlist=4, m=8, nbits=4, key_col="_key")
+    queries = emb.where(F.col("_key") < 8).select(
+        F.col("_key").alias("query_id"), F.col("vector").alias("qvec")
+    )
+
+    def bits(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["_key"], r["score"].hex())
+            for r in df.collect()
+        )
+
+    ivf = bits(ivf_pq_knn_join(spark, path, centroids, cb, queries, k=7, nprobe=4))
+    plain = bits(pq_knn_join(spark.read.parquet(path), cb, queries, k=7))
+    assert len(plain) == 8 * 7
+    assert ivf == plain
 
 
 def test_search_many_ivf_pq_matches_per_query(spark, tmp_path, sf_dir):

@@ -5,7 +5,15 @@ embed) vs execution (collect), then cProfile a 20-query loop to rank
 driver-side costs (py4j round-trips, analysis, embed) against executor
 time.
 
+``--n1-reps R`` instead times, per strategy, the N queries as N
+per-query ``search`` calls against N one-query ``search_many`` calls
+(the N=1 batched form), interleaved for R reps after one untimed warm
+pass of each, and prints one JSON line per strategy with every rep's
+seconds.
+
 Usage: python tools/profile_search_loops.py [--strategies join,hamming,...]
+       python tools/profile_search_loops.py --n1-reps 3 \
+           --strategies join,hamming,hybrid,pq,ivf_pq
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ def main() -> None:
     )
     ap.add_argument("--n", type=int, default=20)
     ap.add_argument("--profile", action="store_true")
+    ap.add_argument("--n1-reps", type=int, default=0)
     args = ap.parse_args()
 
     from letsearch_spark.collection import Collection
@@ -50,6 +59,11 @@ def main() -> None:
     )
     coll.import_parquet(os.path.join(SF_DIR, "documents.parquet"))
     coll.embed_column("text")
+
+    if args.n1_reps:
+        time_n1_batched(coll, args.strategies.split(","), args.n, args.n1_reps)
+        spark.stop()
+        return
 
     for strategy in args.strategies.split(","):
         strategy = strategy.strip()
@@ -87,6 +101,34 @@ def main() -> None:
             print(s.getvalue())
 
     spark.stop()
+
+
+# search strategy -> the search_many strategy with the same results
+BATCHED = {"join": "dense", "hamming": "hamming", "hybrid": "hybrid",
+           "pq": "pq", "ivf_pq": "ivf_pq"}
+
+
+def time_n1_batched(coll, strategies, n: int, reps: int) -> None:
+    import json
+
+    qs = [f"spark join query window batch {i}" for i in range(n)]
+    forms = {
+        "search": lambda s, q: coll.search("text", q, limit=10, strategy=s),
+        "search_many_n1": lambda s, q: coll.search_many(
+            "text", [q], limit=10, strategy=BATCHED[s]
+        ),
+    }
+    for strategy in strategies:
+        strategy = strategy.strip()
+        secs = {name: [] for name in forms}
+        for rep in range(reps + 1):  # rep 0 warms both forms, untimed
+            for name, form in forms.items():
+                t0 = time.time()
+                for q in qs:
+                    form(strategy, q).collect()
+                if rep:
+                    secs[name].append(round(time.time() - t0, 3))
+        print(json.dumps({"strategy": strategy, "queries": n, **secs}), flush=True)
 
 
 if __name__ == "__main__":
