@@ -211,12 +211,18 @@ class Collection:
         # per-column serve-view row counts backing the auto policy;
         # cleared on writes
         self._col_rows: dict[str, int] = {}
-        # tri-state tombstone-existence probe cache (None = re-check the
-        # FS on next read); cleared on writes
+        # tombstone memo: tri-state existence probe (None = re-check the
+        # FS on next read), the sidecar frame, and the deletion-backlog
+        # row count backing the broadcast decision below (computed
+        # lazily). Kept across appends and embeds; reset only by the
+        # writes that change the sidecar (_reset_tombstones)
         self._tomb_flag: bool | None = None
-        # deletion-backlog row count backing the broadcast decision
-        # below; computed lazily, cleared on writes
+        self._tomb_df: DataFrame | None = None
         self._tomb_count: int | None = None
+        # key watermark: the next _key an append assigns (None = derive
+        # max(_key) + 1 from the raw docs table on the next append);
+        # each append advances it by its batch count (_key_watermark)
+        self._next_key: int | None = None
         # anti-join hint ceiling: a tombstone set at or below this many
         # keys broadcasts (a ~8 B/key table, cheap everywhere); a larger
         # backlog falls back to a shuffled join -- force-broadcasting an
@@ -300,10 +306,10 @@ class Collection:
         The analyzed plan (including the parquet file listing) is
         cached: serving paths reference it per query, and rebuilding it
         each time costs ~80 ms of py4j + analysis round-trips (measured
-        in the search_topk_pq A/B). Every write path runs
-        ``_invalidate_cache``, which drops this along with the serve
-        caches, so appended files (and new tombstones) are never
-        missed."""
+        in the search_topk_pq A/B). Every write to the docs table or its
+        tombstones runs ``_invalidate_cache``, which drops this along
+        with the serve caches, so appended files (and new tombstones)
+        are never missed; an embed keeps it."""
         df = getattr(self, "_docs_df", None)
         if df is None:
             df = self._docs_raw()
@@ -322,15 +328,25 @@ class Collection:
 
     def _tombstones(self) -> DataFrame | None:
         """(``_key``) DataFrame of deleted keys, or None when the
-        collection has no pending deletions. The existence probe is one
-        Hadoop FS call, cached until a write invalidates it."""
-        flag = self._tomb_flag
-        if flag is None:
-            flag = self._fs_nonempty(self.tombstones_path)
-            self._tomb_flag = flag
-        if not flag:
-            return None
-        return self.spark.read.parquet(self.tombstones_path).select(KEY_COL)
+        collection has no pending deletions. The existence probe (one
+        Hadoop FS call) and the frame are memoized until a write that
+        changes the sidecar calls :meth:`_reset_tombstones`."""
+        if self._tomb_flag is None:
+            self._tomb_flag = self._fs_nonempty(self.tombstones_path)
+            self._tomb_df = (
+                self.spark.read.parquet(self.tombstones_path).select(KEY_COL)
+                if self._tomb_flag
+                else None
+            )
+        return self._tomb_df
+
+    def _reset_tombstones(self) -> None:
+        """Drop the tombstone memo (existence flag, frame, row count).
+        Only the writes that change the sidecar call this: import_df,
+        delete_where (both modes) and compact."""
+        self._tomb_flag = None
+        self._tomb_df = None
+        self._tomb_count = None
 
     def _tombstones_hinted(self) -> DataFrame | None:
         """The tombstone frame with the right join hint for its size:
@@ -369,6 +385,9 @@ class Collection:
         otherwise collide with the new dense keys and poison incremental
         embedding and search), so they are removed along with the
         serve-path caches."""
+        # dropped before the write: an overwrite that fails midway
+        # leaves a table whose max key no memo can know
+        self._next_key = None
         keyed = add_dense_key(df, KEY_COL, start=1)
         keyed.write.mode("overwrite").parquet(self.docs_path)
         self._invalidate_cache()
@@ -376,6 +395,7 @@ class Collection:
         # stale deletion vectors would hide the NEW corpus's keys, and
         # old index partitions hold the replaced corpus's vectors
         self._fs_delete(self.tombstones_path)
+        self._reset_tombstones()
         self._fs_delete(os.path.join(self.home, "ivf_pq"))
         self._fs_delete(os.path.join(self.home, "hamming"))
         return self.count()
@@ -408,12 +428,28 @@ class Collection:
 
         return resolve_data_path(path)
 
-    def _keyed_batch(self, df: DataFrame) -> tuple[DataFrame, int | None, bool]:
+    def _key_watermark(self) -> int:
+        """The next ``_key`` an append assigns: max(_key) + 1 over the
+        RAW docs table (a tombstoned max key must stay reserved, or the
+        new row would inherit the dead key's tombstone and its
+        still-on-disk embeddings). Derived by one key scan, then
+        memoized -- the DuckDB sequence that "keeps counting"
+        (collection_actor.rs:222-291): each successful append advances
+        it by its batch count, so an append costs the same at any
+        corpus size. import_df, compact, a purge, append_staged and a
+        failed append drop it. Single-writer, like every write here: an
+        append through another Collection object is not seen."""
+        if self._next_key is None:
+            self._next_key = next_key_start(self._docs_raw(), KEY_COL)
+        return self._next_key
+
+    def _keyed_batch(self, df: DataFrame) -> tuple[DataFrame, int, bool]:
         """Schema-aligned, densely-keyed batch ready to land in the docs
-        table: ``(keyed, n, bootstrap)``. ``bootstrap`` means no docs
-        table exists yet (the batch's schema becomes the table schema,
-        keys start at 1). Shared by :meth:`_append_df` (direct write)
-        and :meth:`append_staged` (crash-idempotent staged publish)."""
+        table: ``(keyed, n, bootstrap)``. Keys run from
+        :meth:`_key_watermark` -- or from 1 when ``bootstrap``: no docs
+        table exists yet, and the batch's schema becomes the table
+        schema. Shared by :meth:`_append_df` (direct write) and
+        :meth:`append_staged` (crash-idempotent staged publish)."""
         if not self._docs_exist():
             # the first batch's schema BECOMES the table schema; a batch
             # missing an index column would mint a docs table that only
@@ -436,10 +472,9 @@ class Collection:
             return keyed, n, True
         existing = self.docs()
         cols = [c for c in existing.columns if c != KEY_COL]
-        # key continuation scans the RAW table: a tombstoned max key
-        # must stay reserved, or the new row would inherit the dead
-        # key's tombstone (and its still-on-disk embeddings)
-        start = next_key_start(self._docs_raw(), KEY_COL)
+        # key continuation from the memoized watermark: one raw-table
+        # key scan on the first append, the previous batch count after
+        start = self._key_watermark()
         # cast to the EXISTING column types: a bare lit(None) writes a
         # void-typed parquet column that the vectorized reader cannot
         # reconcile with the table's real type on a later scan, and a
@@ -478,15 +513,23 @@ class Collection:
         import) degenerates to the import path: the batch's schema
         becomes the table schema, keys start at 1."""
         keyed, n, bootstrap = self._keyed_batch(df)
-        keyed.write.mode("overwrite" if bootstrap else "append").parquet(
-            self.docs_path
-        )
+        start = 1 if bootstrap else self._key_watermark()
+        try:
+            keyed.write.mode("overwrite" if bootstrap else "append").parquet(
+                self.docs_path
+            )
+        except BaseException:
+            # a failed write may still have published some files: drop
+            # the watermark (the next append re-derives it from the
+            # table) and the cached plans pinning the old file listing
+            self._next_key = None
+            self._invalidate_cache(drop_index_meta=False)
+            raise
+        self._next_key = start + n
         # append-only: embeddings (and their indexes) are untouched --
         # the refresh paths can top indexes up incrementally
         self._invalidate_cache(drop_index_meta=False)
-        if n is not None:
-            return n
-        return self.count() if bootstrap else keyed.count()
+        return n
 
     def append_staged(self, df: DataFrame, staging_dir: str, tag: str) -> None:
         """Crash-idempotent append for replayed writers (the streaming
@@ -553,6 +596,9 @@ class Collection:
             for st in fs.listStatus(p(staging_dir))
             if not st.getPath().getName().startswith(("_", "."))
         )
+        # published keys come from the staged files, not the watermark
+        # (a replay reuses them as is), and a publish may stop midway
+        self._next_key = None
         fs.mkdirs(p(self.docs_path))
         for name in parts:
             dest = os.path.join(self.docs_path, f"{tag}-{name}")
@@ -649,6 +695,9 @@ class Collection:
             # lose the doomed keys (quantizers kept), sidecar cleared
             self._purge_keys_from_indexes(tomb)
             self._fs_delete(self.tombstones_path)
+        self._reset_tombstones()
+        # a purged max key is free again: re-derive from the raw table
+        self._next_key = None
         # identical rows in fewer files: indexes stay valid, refresh
         # will report 'current'
         self._invalidate_cache(drop_index_meta=False)
@@ -696,6 +745,8 @@ class Collection:
 
         if mode == "tombstone":
             doomed.write.mode("append").parquet(self.tombstones_path)
+            # tombstoned keys stay in the raw table: the watermark holds
+            self._reset_tombstones()
             # serve caches rebuild against the shrunken live view; the
             # index quantizers stay (probes tombstone-filter instead)
             self._invalidate_cache(drop_index_meta=False)
@@ -741,6 +792,8 @@ class Collection:
         # either (ADVICE r6) -- rewrite them, keeping the quantizers
         self._purge_keys_from_indexes(all_doomed)
         self._fs_delete(self.tombstones_path)
+        self._reset_tombstones()
+        self._next_key = None  # the purged keys may include the max
         self._invalidate_cache(drop_index_meta=False)
         return n_del
 
@@ -1154,11 +1207,12 @@ class Collection:
         )
         # incremental -> append new keys; full -> replace ONLY this column's
         # partition (dynamic partition overwrite, so other columns' indexes
-        # survive -- the analog of rebuilding one usearch index, K4)
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # survive -- the analog of rebuilding one usearch index, K4). A
+        # per-write option: the caller's session setting stays untouched
         mode = "append" if incremental else "overwrite"
         (
             result.write.mode(mode)
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("column_name")
             .parquet(self.embeddings_path)
         )
@@ -1176,12 +1230,23 @@ class Collection:
         full index rebuild on next use -- required when existing keys
         may carry DIFFERENT data (full re-embed / re-import); pass
         False for append-only writes so the refresh paths can top the
-        indexes up incrementally instead."""
-        # the cached docs plan pins the parquet file listing; any write
-        # (import, append, embed bookkeeping) must refresh it
-        self._docs_df = None
-        self._tomb_flag = None
-        self._tomb_count = None
+        indexes up incrementally instead.
+
+        ``column`` names the one indexed column whose embeddings an
+        embed rewrote: only that column's caches drop, and the cached
+        docs plan (:meth:`docs`) stays -- an embed writes no docs or
+        tombstone file. Every other write passes None and drops it all.
+
+        Two write-path memos live outside this reset, and each write
+        clears only the one it changes:
+
+        * the tombstone memo (:meth:`_tombstones`): cleared by
+          import_df, delete_where (both modes) and compact; appends,
+          append_staged and embed_column keep it;
+        * the key watermark (:meth:`_key_watermark`): advanced by each
+          successful append; dropped by import_df, compact, a purge,
+          append_staged and a failed append; tombstone deletes and
+          embed_column keep it."""
         cols = (
             [
                 column,
@@ -1202,6 +1267,10 @@ class Collection:
                 except Exception:
                     pass
         if column is None:
+            # the cached docs plan pins the parquet file listing; every
+            # docs or tombstone write (import, append, delete, compact)
+            # must refresh it
+            self._docs_df = None
             self._local_idx.clear()
             self._embeddings_ok.clear()
             self._lex_stats.clear()

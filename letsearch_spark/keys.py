@@ -81,9 +81,11 @@ def add_dense_key_with_count(
     mid = F.monotonically_increasing_id()
     tagged = df.withColumn("__pid", pid).withColumn("__mid", mid)
 
-    # tiny: one row per partition; collected + broadcast as a literal map
-    counts = (
-        tagged.groupBy("__pid").count().orderBy("__pid").collect()
+    # tiny: one row per partition; collected + broadcast as a literal map.
+    # Sorted driver-side: a global orderBy would add a range-sampling job
+    # and a second shuffle to order a handful of rows
+    counts = sorted(
+        tagged.groupBy("__pid").count().collect(), key=lambda r: r["__pid"]
     )
     if not counts:  # empty input: just type the key column
         return df.withColumn(key_col, F.lit(start).cast("long")), 0

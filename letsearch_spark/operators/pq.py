@@ -333,7 +333,7 @@ def build_ivf_pq(
         assign_lists(embeddings, centroids, vec_col=vec_col), codebook,
         vec_col=vec_col,
     ).drop(vec_col)
-    # STATIC overwrite, explicitly: a session that ran embed_column has
+    # STATIC overwrite, explicitly: the caller's session may set
     # partitionOverwriteMode=dynamic, under which a rebuild would only
     # replace lists present in the NEW assignment -- a coarse list that
     # comes back empty after retraining would keep its previous files,

@@ -6,7 +6,8 @@ not multiplied), then times the operators whose shuffle geometry
 matters. Results go to SCALING.md -- the evidence that the plan shapes
 hold as data grows, which no single-SF bench can show.
 
-Usage: python tools/scale_probe.py [--scales 1,4,16]
+Usage: python tools/scale_probe.py [--scales 1,4,16] [--ops a,b]
+(e.g. ``--ops add_docs`` for the add-docs cost per op alone)
 """
 
 from __future__ import annotations
@@ -88,6 +89,83 @@ def scaled_events(spark, n_copies: int):
     )
 
 
+def _job_group_cost(spark, group: str) -> tuple[int, int]:
+    """(Spark jobs, stage input bytes) of one job group, read from the
+    status store after the group's work finished."""
+    from py4j.protocol import Py4JJavaError
+
+    tracker = spark.sparkContext.statusTracker()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = set()
+    for jid in jobs:
+        info = tracker.getJobInfo(jid)
+        stages.update(info.stageIds if info else [])
+    read = 0
+    for sid in stages:
+        try:
+            read += store.lastStageAttempt(sid).inputBytes()
+        except Py4JJavaError:  # skipped stage: never ran
+            pass
+    return len(jobs), read
+
+
+def add_docs_probe(spark, n_copies: int) -> dict:
+    """The add-docs verb at corpus scale: each op appends one 50-doc
+    parquet batch and embeds it incrementally, into a collection built
+    from the xN docs with a tombstone delete pending (so the live-view
+    anti-joins are in play, as in a serving collection). An append
+    continues a sequence, so jobs per op must stay flat in corpus size
+    and input bytes per op must track the batch, not the corpus; only
+    the embed's anti-join still scans the key columns."""
+    import shutil
+    import statistics
+    import tempfile
+
+    from letsearch_spark.collection import Collection
+
+    ops, batch = 6, 50
+    sc = spark.sparkContext
+    root = tempfile.mkdtemp(prefix=f"add_docs_x{n_copies}_")
+    c = Collection.create(spark, root, "probe", ["text"], "stub://16")
+    n_docs = c.import_df(scaled_docs(spark, n_copies).select("doc_id", "text"))
+    c.embed_column("text")
+    c.delete_where("doc_id % 997 = 3")
+    paths = []
+    for j in range(ops):
+        path = os.path.join(root, "batches", str(j))
+        spark.createDataFrame(
+            [(90_000_000 + j * batch + i, f"added doc {j} {i} spark join window")
+             for i in range(batch)],
+            "doc_id long, text string",
+        ).coalesce(1).write.parquet(path)
+        paths.append(path)
+    ms, jobs, read = [], [], []
+    for j, path in enumerate(paths):
+        group = f"add_docs_x{n_copies}_{j}"
+        sc.setJobGroup(group, group)
+        t0 = time.time()
+        c.append_parquet(path)
+        c.embed_column("text", incremental=True)
+        ms.append(round(1000 * (time.time() - t0)))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs, n_read = _job_group_cost(spark, group)
+        jobs.append(n_jobs)
+        read.append(n_read)
+    shutil.rmtree(root, ignore_errors=True)
+    return {
+        "probe": "add_docs",
+        "copies": n_copies,
+        "docs": n_docs,
+        "op_ms_p50": statistics.median(ms),
+        "jobs_per_op_p50": statistics.median(jobs),
+        "input_bytes_per_op_p50": statistics.median(read),
+        "op_ms": ms,
+        "jobs_per_op": jobs,
+        "input_bytes_per_op": read,
+    }
+
+
 def skewed_range_join_probe(spark) -> None:
     """One hot key, both sides too big to broadcast: the geometry the
     binned range join exists for. The naive key-join sends the whole
@@ -164,6 +242,17 @@ def main() -> None:
         "scale-probe", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS)
     )
     spark.sparkContext.setLogLevel("ERROR")
+
+    # add_docs builds its own collection per scale; run alone it skips
+    # the shared xN tables the other probes cache
+    if only is None or "add_docs" in only:
+        for n in scales:
+            print(json.dumps(add_docs_probe(spark, n)), flush=True)
+        if only is not None:
+            only.discard("add_docs")
+            if not only:
+                spark.stop()
+                return
 
     results = []
     for n in scales:
