@@ -3,13 +3,20 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...per-stage sec...}, "sf": ...}
+   "queries": {...per-stage sec...}, "rates": {...per-stage per-sec...},
+   "methodology_rev": N, "dropped_stages": [...], "sf": ...}
+
+"queries" holds seconds only and "value" is their sum (less the
+``prep_stage_*`` breakdown); "rates" restates a search loop as
+queries per second and is not a timing. ``methodology_rev`` counts
+changes to what "value" sums: compare totals across revisions only
+over the stages both ran.
 
 Stage set mirrors BASELINE.md's protocol: the reference's own pipeline
 stages (ingest+key, chunk, stub-embed, top-k search) plus the relational
 and dedup headliners that exercise real data volume (lineitem 600k rows
-at sf0.1). Stage names are stable across rounds so BENCH_r{N}.json is
-comparable.
+at sf0.1). Stage names are stable within a ``methodology_rev`` so
+BENCH_r{N}.json is comparable.
 """
 
 from __future__ import annotations
@@ -35,6 +42,15 @@ N_SEARCHES = int(os.environ.get("BENCH_SEARCHES", "20"))
 # repeat) run min-of-2 instead -- each repeat is already an N-query
 # aggregate, and min-of-5 would double the bench wall again.
 REPEATS = int(os.environ.get("BENCH_REPEATS", "5"))
+
+# rev 2: the *_per_sec rates moved out of "queries" into "rates", and
+# the stages of three retired contract queries were dropped
+METHODOLOGY_REV = 2
+DROPPED_STAGES = (
+    "window_top_orders_per_customer",
+    "events_sessionize",
+    "events_attribution_join",
+)
 
 
 def calibrate() -> float:
@@ -79,6 +95,7 @@ def main() -> None:
         else None
     )
     timings: dict[str, float] = {}
+    rates: dict[str, float] = {}
     root = tempfile.mkdtemp(prefix="ls_bench_")
     cal_start = calibrate()
 
@@ -123,7 +140,7 @@ def main() -> None:
     # was also the only search loop still measured at 2 repeats -- the
     # flagship latency number gets the full contention filter
     run_stage("search_topk", searches)
-    timings["searches_per_sec"] = round(N_SEARCHES / timings["search_topk"], 3)
+    rates["searches_per_sec"] = round(N_SEARCHES / timings["search_topk"], 3)
 
     # 4b. driver-local serving (the reference's single-node model): the
     # serve view collected once to RAM, each query one numpy matmul and
@@ -135,7 +152,7 @@ def main() -> None:
             coll.search_rows("text", f"local {i}", limit=10)
 
     run_stage("search_topk_local", searches_local, repeats=2)
-    timings["local_searches_per_sec"] = round(
+    rates["local_searches_per_sec"] = round(
         50 * N_SEARCHES / timings["search_topk_local"], 3
     )
 
@@ -153,7 +170,7 @@ def main() -> None:
             )
 
     run_stage("search_topk_local_hybrid", searches_local_hybrid, repeats=2)
-    timings["local_hybrid_searches_per_sec"] = round(
+    rates["local_hybrid_searches_per_sec"] = round(
         10 * N_SEARCHES / timings["search_topk_local_hybrid"], 3
     )
 
@@ -170,7 +187,7 @@ def main() -> None:
             ).collect()
 
     run_stage("search_topk_pq", searches_pq, repeats=2)
-    timings["pq_searches_per_sec"] = round(
+    rates["pq_searches_per_sec"] = round(
         N_SEARCHES / timings["search_topk_pq"], 3
     )
 
@@ -188,7 +205,7 @@ def main() -> None:
             ).collect()
 
     run_stage("search_topk_hamming", searches_hamming, repeats=2)
-    timings["hamming_searches_per_sec"] = round(
+    rates["hamming_searches_per_sec"] = round(
         N_SEARCHES / timings["search_topk_hamming"], 3
     )
 
@@ -287,28 +304,19 @@ def main() -> None:
     run_stage("mine_negatives100", _mine_stage)
 
     # benched stages keep their rows across window rotations -- the
-    # registry a query lives in (window / rotated / staged) is a
+    # registry a query lives in (window / off-window) is a
     # correctness-gate concern, not a performance one, so resolve the
-    # name against all three
-    from letsearch_spark.queries import ROTATED_OUT_QUERIES, STAGED_QUERIES
+    # name against both
+    from letsearch_spark.queries import OFF_WINDOW_QUERIES
 
     def resolve_query(name):
-        q = (
-            QUERIES.get(name)
-            or STAGED_QUERIES.get(name)
-            or ROTATED_OUT_QUERIES.get(name)
-        )
+        q = QUERIES.get(name) or OFF_WINDOW_QUERIES.get(name)
         if q is None:
             raise KeyError(f"bench stage {name!r} found in no query registry")
         return q
 
-    # 6-9. relational volume queries over lineitem/orders/events
-    for name in (
-        "agg_pricing_summary",
-        "join_top_orders",
-        "window_top_orders_per_customer",
-        "events_sessionize",
-    ):
+    # 6-7. relational volume queries over lineitem/orders
+    for name in ("agg_pricing_summary", "join_top_orders"):
         run_stage(
             name, lambda name=name: resolve_query(name)(spark, SF_DIR).count()
         )
@@ -325,14 +333,12 @@ def main() -> None:
             name, lambda name=name: resolve_query(name)(spark, SF_DIR).count()
         )
 
-    # 14a. round-5+ operator stages (oracle parity in the driver window,
-    # tests/test_rotated_contract.py, or the staged gate): C4 cleaning
-    # (map-side array expressions), the event-time attribution join
-    # (100k events), CCNet perplexity bucketing (LM train + score + one
+    # 14a. round-5+ operator stages (oracle parity in the driver window
+    # or tests/test_rotated_contract.py): C4 cleaning (map-side array
+    # expressions), CCNet perplexity bucketing (LM train + score + one
     # percentile agg), and the round-6/7 additions below
     for name in (
         "c4_page_filter",
-        "events_attribution_join",
         "perplexity_buckets",
         # round 6: scan-only HTML extraction, hash-join snapshot diff,
         # seeded global shuffle rank (no baseline rows yet -- compare
@@ -509,7 +515,7 @@ def main() -> None:
             ).collect()
 
     run_stage("search_topk_hybrid", searches_hybrid, repeats=2)
-    timings["hybrid_searches_per_sec"] = round(
+    rates["hybrid_searches_per_sec"] = round(
         n_hybrid / timings["search_topk_hybrid"], 3
     )
 
@@ -528,7 +534,7 @@ def main() -> None:
         ).count(),
         repeats=2,
     )
-    timings["many_hybrid_queries_per_sec"] = round(
+    rates["many_hybrid_queries_per_sec"] = round(
         len(many_qs) / timings["search_many_hybrid"], 3
     )
 
@@ -549,7 +555,7 @@ def main() -> None:
             "text", many_qs, limit=10, strategy="hamming"
         ).count(),
     )
-    timings["many_hamming_queries_per_sec"] = round(
+    rates["many_hamming_queries_per_sec"] = round(
         len(many_qs) / timings["search_many_hamming"], 3
     )
 
@@ -567,7 +573,7 @@ def main() -> None:
         "search_many_maxsim",
         lambda: coll.search_many_multi("text", many_sets, limit=10).count(),
     )
-    timings["many_maxsim_queries_per_sec"] = round(
+    rates["many_maxsim_queries_per_sec"] = round(
         len(many_sets) / timings["search_many_maxsim"], 3
     )
 
@@ -598,11 +604,7 @@ def main() -> None:
     )
 
     total = round(
-        sum(
-            v
-            for k, v in timings.items()
-            if not k.endswith("_per_sec") and not k.startswith("prep_stage_")
-        ),
+        sum(v for k, v in timings.items() if not k.startswith("prep_stage_")),
         3,
     )
     print(
@@ -612,6 +614,9 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                "rates": rates,
+                "methodology_rev": METHODOLOGY_REV,
+                "dropped_stages": list(DROPPED_STAGES),
                 "sf": sf,
                 # run provenance (r9): pinned numpy matmul before/after
                 # the stage loop; compare to BASELINE.md

@@ -61,11 +61,6 @@ def _cents(col):
     return F.round(col * 100).cast("long")
 
 
-def _md5_60(col):
-    """60-bit integer hash from md5 hex (parity with DuckDB's 0x-cast)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 _MD5_60_SQL = "CAST(('0x' || substr(md5({x}), 1, 15)) AS UBIGINT)::BIGINT"
 
 
@@ -103,74 +98,8 @@ def q_s2_ingest_dense_key(spark, sf_dir):
     )
 
 
-def q_s3_append_key_continuation(spark, sf_dir):
-    """S3/S4 append semantics (collection_actor.rs:222-291): second batch's
-    keys continue densely from the first batch's max."""
-    docs = load(spark, sf_dir, "documents")
-    base = docs.where(F.col("doc_id") < 400)
-    extra = docs.where(F.col("doc_id") >= 400)
-    w = Window.orderBy("doc_id")
-    base_keyed = base.select(F.row_number().over(w).cast("long").alias("_key"), "doc_id")
-    start = base_keyed.agg(F.max("_key")).collect()[0][0] or 0
-    extra_keyed = extra.select(
-        (F.row_number().over(w) + F.lit(start)).cast("long").alias("_key"), "doc_id"
-    )
-    return base_keyed.unionByName(extra_keyed)
-
-
-def q_s1_jsonl_ingest(spark, sf_dir):
-    """S1 schema-on-read JSONL ingest (collection_actor.rs:166-192):
-    round-trip the documents table through JSONL and read it back with
-    the JSON reader; values must match the parquet original exactly."""
-    import tempfile
-
-    docs = load(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="ls_jsonl_") + "/docs"
-    docs.write.mode("overwrite").json(path)
-    back = spark.read.json(path)
-    return back.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "text",
-        "lang",
-        "source",
-        F.col("n_chars").cast("long").alias("n_chars"),
-    )
-
-
-def q_p5_schema_introspection(spark, sf_dir):
-    """P5 schema introspection (information_schema queries,
-    collection_actor.rs:176-181 etc.): sorted column names of the
-    documents table via the catalog/schema API."""
-    docs = load(spark, sf_dir, "documents")
-    names = sorted(docs.schema.fieldNames())
-    return spark.createDataFrame([(n,) for n in names], "column_name string")
-
-
-def q_p1_projection(spark, sf_dir):
-    """P1 batch projection with null->'' coalescing (collection_actor.rs:426-461),
-    sans the OFFSET loop (partitioning replaces pagination)."""
-    docs = load(spark, sf_dir, "documents")
-    return docs.select(
-        F.col("doc_id").alias("_key"),
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-    )
-
-
-def q_p2_rowcount(spark, sf_dir):
-    """P2 row count -- COUNT(*), deliberately not the reference's
-    COUNT('<literal>') quirk (collection_actor.rs:380-389)."""
-    return load(spark, sf_dir, "documents").agg(F.count(F.lit(1)).alias("n"))
-
-
-def q_p3_key_lookup(spark, sf_dir):
-    """P3 key-set semi-join fetch (collection_actor.rs:532-546)."""
-    keys = [3, 17, 42, 99, 123, 256, 404, 499]
-    docs = load(spark, sf_dir, "documents")
-    return docs.where(F.col("doc_id").isin(keys)).select("doc_id", "text")
-
-
 # ======================================================================
-# Relational substrate: aggregation / join / window / set ops / JSON
+# Relational substrate: aggregation and join
 # (the reference delegates these to embedded DuckDB; our engine exposes
 # them natively via Spark SQL -- SURVEY.md §2.7)
 # ======================================================================
@@ -209,146 +138,6 @@ def q_join_top_orders(spark, sf_dir):
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
         .limit(10)
     )
-
-
-def q_join_nation_volume(spark, sf_dir):
-    """TPC-H Q5-shaped 5-way join; dims broadcast, facts co-shuffled."""
-    region = load(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = load(spark, sf_dir, "nation")
-    cust = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg((F.sum(rev) / 100.0).alias("revenue"))
-        .orderBy("n_name")
-    )
-
-
-def q_agg_rollup(spark, sf_dir):
-    """ROLLUP aggregation (orders by status x priority with subtotals);
-    grouping-set machinery the reference has no analog for (§2.7)."""
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.sum(_cents(F.col("o_totalprice"))) / 100.0).alias("total"),
-        )
-        .select(
-            F.coalesce(F.col("o_orderstatus"), F.lit("ALL")).alias("status"),
-            F.coalesce(F.col("o_orderpriority"), F.lit("ALL")).alias("priority"),
-            "n",
-            "total",
-        )
-        .orderBy("status", "priority")
-    )
-
-
-def q_scalar_functions(spark, sf_dir):
-    """Scalar-function battery: string/date/math/conditional expressions
-    over orders -- the function library a reference user gets from
-    embedded DuckDB SQL, exposed natively (§2.7)."""
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.where(F.col("o_orderkey") <= 2000)
-        .select(
-            "o_orderkey",
-            F.upper(F.substring("o_orderpriority", 1, 3)).alias("prio3"),
-            F.length("o_orderstatus").alias("status_len"),
-            F.concat_ws("-", "o_orderstatus", "o_orderpriority").alias("tag"),
-            F.year("o_orderdate").alias("yr"),
-            F.month("o_orderdate").alias("mo"),
-            F.dayofmonth("o_orderdate").alias("dom"),
-            F.round(F.sqrt(F.col("o_totalprice")), 6).alias("sqrt_price"),
-            F.round(F.log(F.col("o_totalprice") + 1.0), 6).alias("log_price"),
-            F.abs(F.col("o_totalprice") - 1000.0).alias("abs_diff"),
-            (F.col("o_orderkey") % 7).alias("mod7"),
-            F.when(F.col("o_totalprice") > 1000, "high")
-            .otherwise("low")
-            .alias("bucket"),
-        )
-        .orderBy("o_orderkey")
-    )
-
-
-def q_window_top_orders_per_customer(spark, sf_dir):
-    """Window top-N per group (row_number, deterministic tie-break)."""
-    orders = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= 3)
-        .select("o_custkey", "rnk", "o_orderkey")
-    )
-
-
-def q_setop_customers_without_orders(spark, sf_dir):
-    """Anti-join set operation: customers that never ordered."""
-    cust = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .select("c_custkey")
-    )
-
-
-def q_events_json_extract(spark, sf_dir):
-    """JSON scalar extraction (the reference only parses JSON at ingest,
-    S1; we expose it as a function)."""
-    ev = load(spark, sf_dir, "events")
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.sum(k).alias("sum_k"),
-            F.count(k).alias("n_k"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def sessionize_counts(ev: DataFrame, gap_seconds: float = 1800) -> DataFrame:
-    """Sessions per user from a gap rule: a new session starts when the
-    gap to the previous event exceeds ``gap_seconds``. The gap compares
-    epoch MICROseconds (unix_timestamp would truncate to whole seconds
-    and misjudge sub-second boundary gaps)."""
-    gap_us = int(round(gap_seconds * 1_000_000))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    # cast to TIMESTAMP first: unix_micros rejects the TIMESTAMP_NTZ the
-    # parquet reader infers from naive timestamps (wall-clock identity
-    # under the pinned UTC session timezone)
-    new_s = F.when(
-        prev.isNull()
-        | (
-            (
-                F.unix_micros(F.col("ts").cast("timestamp"))
-                - F.unix_micros(prev.cast("timestamp"))
-            )
-            > gap_us
-        ),
-        1,
-    ).otherwise(0)
-    return (
-        ev.withColumn("new_s", new_s)
-        .groupBy("user_id")
-        .agg(F.sum("new_s").alias("n_sessions"))
-        .orderBy("user_id")
-    )
-
-
-def q_events_sessionize(spark, sf_dir):
-    """Gap-based sessionization (30 min) -- lag + cumulative flag,
-    microsecond-precision gap arithmetic."""
-    return sessionize_counts(load(spark, sf_dir, "events"))
 
 
 # ======================================================================
@@ -616,60 +405,6 @@ def _lang_id_ngram_oracle(sf_dir: str) -> str:
     )
 
 
-def q_events_time_rollup(spark, sf_dir):
-    """Hypertable-style rollup (operators/rollup.py time_rollup): hour and
-    day tiers of the events stream computed in ONE scan + ONE shuffle via
-    grouping sets (vs one groupBy job per tier); rows carry their grain
-    so a rollup table partitioned by it prunes serving reads."""
-    from letsearch_spark.operators.rollup import time_rollup
-
-    ev = load(spark, sf_dir, "events")
-    out = time_rollup(
-        ev,
-        ts_col="ts",
-        keys=["event_type"],
-        aggs=[
-            "count(1) AS n",
-            "CAST(sum(user_id) AS BIGINT) AS sum_uid",
-        ],
-        granularities=("hour", "day"),
-    )
-    return out.orderBy("grain", "bucket", "event_type")
-
-
-def q_events_range_join(spark, sf_dir):
-    """Interval join via the binned equi-join (operators/range_join.py):
-    each user's first-2-hours window joined back to their events, counts
-    per user. The bin method turns the range predicate into an equi-join
-    on (key, hour-bin) -- hot keys spread over (key x bin) reducers and
-    no per-key all-pairs stream materializes; results are identical to
-    the plain BETWEEN join the oracle runs."""
-    from letsearch_spark.operators.range_join import range_join
-
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    iv = (
-        ev.groupBy(F.col("user_id").alias("iv_user"))
-        .agg(F.min("ts").alias("start_ts"))
-        .withColumn("end_ts", F.col("start_ts") + F.expr("INTERVAL 2 HOURS"))
-    )
-    joined = range_join(
-        ev,
-        iv,
-        left_ts="ts",
-        right_start="start_ts",
-        right_end="end_ts",
-        by_left="user_id",
-        by_right="iv_user",
-        method="bin",
-        bin_width_seconds=3600,
-    )
-    return (
-        joined.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_in_window"))
-        .orderBy("user_id")
-    )
-
-
 def q_ann_ivf_assign(spark, sf_dir):
     """IVF-Flat index build (FAISS-IVF analog, operators/ann.py): spherical
     k-means centroids fitted driver-side on a key-sorted bounded sample
@@ -687,40 +422,6 @@ def q_ann_ivf_assign(spark, sf_dir):
         assign_lists(emb, cent, vec_col="embedding", list_col="list_id")
         .select("vec_id", F.col("list_id").cast("long").alias("list_id"))
         .orderBy("vec_id")
-    )
-
-
-def q_skew_salted_two_stage(spark, sf_dir):
-    """Both skew-mitigation operators in one pipeline (operators/skew.py):
-    a salted hot-key join (the dimension side exploded n_salts times so
-    one hot key spreads over n_salts reducers) feeding a two-stage
-    aggregation (partial on (key, salt), final on key). Algebraic
-    aggregates over an inner join, so the result equals the plain
-    join + direct groupBy the oracle runs."""
-    from letsearch_spark.operators.skew import salted_join, two_stage_agg
-
-    li = load(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
-    dim = (
-        load(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 100)
-        .select("o_orderkey", "o_orderpriority")
-    )
-    joined = salted_join(li, dim, on="o_orderkey", n_salts=8)
-    return (
-        two_stage_agg(
-            joined,
-            keys=["o_orderpriority"],
-            aggs={"l_quantity": "sum", "o_orderkey": "count"},
-            n_salts=16,
-        )
-        .select(
-            "o_orderpriority",
-            F.col("sum_l_quantity").cast("long").alias("sum_qty"),
-            F.col("count_o_orderkey").cast("long").alias("n_rows"),
-        )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -816,21 +517,6 @@ def q_search_fetchback_join(spark, sf_dir):
             F.length("text").cast("long").alias("content_len"),
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))
-    )
-
-
-def q_events_value_percentiles(spark, sf_dir):
-    """Ordered-set aggregate: exact continuous percentiles of event value
-    per type (percentile_cont semantics match DuckDB's interpolation)."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-            F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
-            F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"),
-        )
-        .orderBy("event_type")
     )
 
 
@@ -1432,7 +1118,6 @@ def q_stream_incremental_count(spark, sf_dir):
     )
 
 
-
 _MIX_WEIGHTS = {"en": 0.2, "zh": 0.2, "es": 0.1, "de": 0.1, "fr": 0.4}
 _MIX_TARGET = 300
 _PACK_SEQ_LEN = 256
@@ -1826,177 +1511,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 
-# Entries rotated OUT of the driver's 50-slot correctness window
-# (rounds 4 + 5) to make room for the formerly twin-only operators.
-# The capability (CSV source, JSON extraction, percentiles, anti-join
-# set op; round 5: row count, schema introspection, ROLLUP, the scalar
-# battery) remains implemented and oracle-verified --
-# tests/test_rotated_contract.py runs this exact Spark-vs-DuckDB
-# comparison in pytest, so rotation costs a driver row, not
-# verification.
-ROTATED_OUT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "s_csv_roundtrip": q_s_csv_roundtrip,
-    "events_json_extract": q_events_json_extract,
-    "events_value_percentiles": q_events_value_percentiles,
-    "setop_customers_without_orders": q_setop_customers_without_orders,
-    # round 5 (displaced by token_count_bpe / pq_adc_topk /
-    # dedup_substring_spans / quality_classifier_keep): p2/p5 are
-    # one-expression checks, rollup/scalar overlap events_time_rollup
-    # and the relational substrate
-    "p2_rowcount": q_p2_rowcount,
-    "p5_schema_introspection": q_p5_schema_introspection,
-    "agg_rollup": q_agg_rollup,
-    "scalar_functions": q_scalar_functions,
-    # round 6 (displaced by mine_hard_negatives / decontaminate_bloom /
-    # split_leakage_safe / curriculum_order, VERDICT r5 ask #1):
-    # p1_projection is a near-subset of s2_ingest_dense_key,
-    # p3_key_lookup of search_fetchback_join; dedup_exact and
-    # dedup_lines overlap the six remaining dedup-family window rows
-    "p1_projection": q_p1_projection,
-    "p3_key_lookup": q_p3_key_lookup,
-    "dedup_exact": q_dedup_exact,
-    "dedup_lines": q_dedup_lines,
-    # round 7 (displaced by training_pairs / vocab_coverage /
-    # corpus_data_card / eval_lsh_recall, the COVERAGE.md pre-plan):
-    # s3 shares the dense-key machinery with s2_ingest_dense_key
-    # (append semantics stay pinned by test_collection + the
-    # staged-atomic suite), dedup_ngram_jaccard is the verification
-    # twin of dedup_minhash_lsh's exact-Jaccard check,
-    # quantize_f16_roundtrip is a one-expression cast battery
-    # (property-tested in test_skew_quantize), events_time_rollup's
-    # ROLLUP shape is already pinned by the rotated agg_rollup
-    "s3_append_key_continuation": q_s3_append_key_continuation,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "quantize_f16_roundtrip": q_quantize_f16_roundtrip,
-    "events_time_rollup": q_events_time_rollup,
-    # round 8 (displaced by dedup_survivor_quality / ann_hamming_topk /
-    # token_count_unigram / sample_stratified_exact /
-    # export_shards_manifest / fim_transform, the COVERAGE.md pre-plan):
-    # ann_lsh_topk's recall evidence lives in the promoted
-    # eval_lsh_recall and the LSH serving shape stays plan-gated;
-    # dedup_simhash_pairs is one of four banded-pair family rows
-    # sharing the banding SQL; events_sessionize is the batch twin of
-    # the in-window stream_sessionize; sample_mixture's rate arithmetic
-    # is carried richer by the staged mixture_epochs /
-    # temperature_mixture; join_nation_volume overlaps the remaining
-    # relational substrate rows; multimodal_frame_sample shares the
-    # decode pipeline with the in-window multimodal_decode
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "dedup_simhash_pairs": q_dedup_simhash_pairs,
-    "events_sessionize": q_events_sessionize,
-    "sample_mixture": q_sample_mixture,
-    "join_nation_volume": q_join_nation_volume,
-    "multimodal_frame_sample": q_multimodal_frame_sample,
-    # round 9 (displaced by search_maxsim_collection / s_wet_ingest /
-    # embed_pca_model / url_quality_filter / sft_render_chat /
-    # interleave_order, the VERDICT r8 #3 pre-plan):
-    # dedup_minhash_components is a strict stage of the in-window
-    # dedup_survivor_quality (pairs -> CC -> keep-best contains
-    # pairs -> CC -> min-id); dedup_embedding_cosine_lsh shares the
-    # banded-bucket shape with the in-window semantic_dedup +
-    # dedup_minhash_lsh; decontaminate_containment is the verification
-    # twin of the in-window decontaminate_bloom (same SQL truth, the
-    # Bloom is a plan optimization); events_range_join's binned-join
-    # shape overlaps events_asof_last_order and the interval-join
-    # staged row; sample_train_test_split is the simplest member of a
-    # family whose richer rows (split_leakage_safe,
-    # sample_stratified_exact) stay in-window; stream_windowed_counts
-    # is the simplest streaming shape next to the in-window
-    # stream_sessionize + stream_incremental_count
-    "dedup_minhash_components": q_dedup_minhash_components,
-    "dedup_embedding_cosine_lsh": q_dedup_embedding_cosine_lsh,
-    "decontaminate_containment": q_decontaminate_containment,
-    "events_range_join": q_events_range_join,
-    "sample_train_test_split": q_sample_train_test_split,
-    "stream_windowed_counts": q_stream_windowed_counts,
-    # round 10 (displaced by token_count_byte_bpe / s_warc_html_ingest /
-    # c4_page_filter / eval_hamming_recall / span_corruption, the
-    # VERDICT r9 #2 pre-plan): s1_jsonl_ingest is a column-projection
-    # scan (the dense-key machinery stays pinned by s2_ingest_dense_key
-    # and the rotated S3); token_count_bpe's word-BPE counting is
-    # carried richer by the promoted byte-level sibling (no-OOV by
-    # construction) plus the in-window chunk_documents /
-    # token_count_unigram; window_top_orders_per_customer's relational
-    # substrate is amply covered by agg/join/asof rows;
-    # skew_salted_two_stage's equivalence is plan-gated + pytest-pinned
-    # (the salting pattern is tooling, not a user-facing query);
-    # fim_transform (registered post-hoc below its definition) is the
-    # single-split sibling of the promoted span_corruption (same seeded
-    # map-only denoising family)
-    "s1_jsonl_ingest": q_s1_jsonl_ingest,
-    "token_count_bpe": q_token_count_bpe,
-    "window_top_orders_per_customer": q_window_top_orders_per_customer,
-    "skew_salted_two_stage": q_skew_salted_two_stage,
-}
-
-# values are SQL strings, or callables (sf_dir) -> SQL for the
-# computed-literal oracles (resolved by both rotated-gate consumers)
-ROTATED_OUT_ORACLES: dict[str, object] = {
-    "s_csv_roundtrip": """
-        SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-        FROM documents ORDER BY doc_id
-    """,
-    "events_json_extract": """
-        SELECT event_type,
-               CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-               count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_k
-        FROM events
-        GROUP BY event_type
-        ORDER BY event_type
-    """,
-    "events_value_percentiles": """
-        SELECT event_type,
-               round(percentile_cont(0.5) WITHIN GROUP (ORDER BY value), 6) AS p50,
-               round(percentile_cont(0.9) WITHIN GROUP (ORDER BY value), 6) AS p90,
-               round(percentile_cont(0.99) WITHIN GROUP (ORDER BY value), 6) AS p99
-        FROM events GROUP BY event_type ORDER BY event_type
-    """,
-    "setop_customers_without_orders": """
-        SELECT c_custkey FROM customer
-        WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-    """,
-    "p2_rowcount": "SELECT count(*) AS n FROM documents",
-    "p5_schema_introspection": """
-        SELECT column_name FROM (DESCRIBE documents) ORDER BY column_name
-    """,
-    "agg_rollup": """
-        SELECT coalesce(o_orderstatus, 'ALL') AS status,
-               coalesce(o_orderpriority, 'ALL') AS priority,
-               count(*) AS n,
-               sum(CAST(ROUND(o_totalprice * 100) AS BIGINT)) / 100.0 AS total
-        FROM orders
-        GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        ORDER BY status, priority
-    """,
-    "scalar_functions": """
-        SELECT o_orderkey,
-               upper(substr(o_orderpriority, 1, 3)) AS prio3,
-               CAST(length(o_orderstatus) AS INT) AS status_len,
-               concat_ws('-', o_orderstatus, o_orderpriority) AS tag,
-               CAST(year(o_orderdate) AS INT) AS yr,
-               CAST(month(o_orderdate) AS INT) AS mo,
-               CAST(day(o_orderdate) AS INT) AS dom,
-               round(sqrt(o_totalprice), 6) AS sqrt_price,
-               round(ln(o_totalprice + 1.0), 6) AS log_price,
-               abs(o_totalprice - 1000.0) AS abs_diff,
-               o_orderkey % 7 AS mod7,
-               CASE WHEN o_totalprice > 1000 THEN 'high' ELSE 'low' END AS bucket
-        FROM orders
-        WHERE o_orderkey <= 2000
-        ORDER BY o_orderkey
-    """,
-}
-
-
-# Round-5 operators STAGED for the next window rotation: full
-# Spark-vs-DuckDB parity already runs in pytest
-# (tests/test_rotated_contract.py::test_staged_entry_matches_oracle,
-# same canonicalization as the driver gate), so promoting one of these
-# into the 50-slot window is a registry swap, not new verification
-# work. Oracle values may be a SQL string or a callable(sf_dir) -> SQL
-# (computed-literal twins).
-
-
 def q_c4_page_filter(spark, sf_dir):
     """C4 cleaning (functions/text.py c4_clean_lines + c4_flags): the
     synthetic corpus carries no punctuation, so sentence structure is
@@ -2030,33 +1544,6 @@ def q_c4_page_filter(spark, sf_dir):
         fl["n_sentences"].alias("n_sentences"),
         fl["passes"].alias("passes"),
     ).orderBy("doc_id")
-
-
-def q_events_attribution_join(spark, sf_dir):
-    """Event-time interval join (streaming/join.py stream_interval_join
-    on batch frames -- the identical plan the streaming form runs minus
-    watermarks, equivalence pinned by
-    test_stream_interval_join_matches_batch): even events are
-    impressions, odd are clicks, attribute clicks within 2 hours."""
-    from letsearch_spark.streaming.join import stream_interval_join
-
-    ev = load(spark, sf_dir, "events")
-    imps = ev.where(F.col("event_id") % 2 == 0).select(
-        "user_id",
-        F.col("event_id").alias("imp_id"),
-        F.col("ts").alias("imp_ts"),
-    )
-    clicks = ev.where(F.col("event_id") % 2 == 1).select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    out = stream_interval_join(
-        imps, clicks, "user_id", "imp_ts", "click_ts", max_delay="2 hours"
-    )
-    return out.select("user_id", "imp_id", "click_id").orderBy(
-        "user_id", "imp_id", "click_id"
-    )
 
 
 def q_perplexity_buckets(spark, sf_dir):
@@ -3929,45 +3416,68 @@ _EXPORT_SHARDS_ORACLE_SQL = f"""
 """
 
 
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # (the r9 staged additions -- s_warc_html_ingest,
-    # token_count_byte_bpe, span_corruption -- plus the r7
-    # eval_hamming_recall and the r5 c4_page_filter were promoted into
-    # the window by the r10 rotation)
-    # round 10 (stdlib header decode: the real half of the multimodal
-    # story next to the in-window fake-kernel multimodal_decode)
+# Entries outside the driver's 50-slot correctness window: verified
+# operators the window has no slot for. Each is a verification twin or a
+# simpler sibling of a window row, or a candidate for the next rotation.
+# tests/test_rotated_contract.py runs the driver's Spark-vs-DuckDB
+# comparison over every one of them (tools/check_oracle.py --registry
+# off_window by hand), so promoting an entry into the window is a
+# registry move, not new verification work.
+OFF_WINDOW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    # -- ingest / decode --
+    "s_csv_roundtrip": q_s_csv_roundtrip,
+    # shares the decode pipeline with the in-window multimodal_decode
+    "multimodal_frame_sample": q_multimodal_frame_sample,
+    # stdlib header decode, the real half of multimodal_decode's story
     "multimodal_headers": q_multimodal_headers,
-    # round 10 (char-n-gram NB language ID, trained on the table's own
-    # labels; the >= 20-language operator behind PrepConfig.langid)
-    "lang_id_ngram": q_lang_id_ngram,
-    # round 10 (WordPiece completing the trainer family: BPE / unigram
-    # / byte-BPE / wordpiece)
-    "token_count_wordpiece": q_token_count_wordpiece,
-    # round 10 (URL-level exact dedup -- the CCNet/C4 first pass)
-    "dedup_url_canonical": q_dedup_url_canonical,
-    # round 6 (late session; ann_hamming_topk / token_count_unigram
-    # promoted r8)
-    "search_maxsim": q_search_maxsim,
-    "text_compression": q_text_compression,
-    # round 6 (dedup_survivor_quality / sample_stratified_exact
-    # promoted r8)
-    "embed_mean_pool": q_embed_mean_pool,
-    "ann_kmeans_full": q_ann_kmeans_full,
     "html_extract": q_html_extract,
-    "dataset_diff": q_dataset_diff,
-    "shuffle_order": q_shuffle_order,
-    # round 5
-    "events_attribution_join": q_events_attribution_join,
-    "perplexity_buckets": q_perplexity_buckets,
-    "mixture_epochs": q_mixture_epochs,
+    # -- dedup / decontamination: twins and stages of window rows --
+    "dedup_exact": q_dedup_exact,
+    "dedup_lines": q_dedup_lines,
+    # exact-Jaccard twin of dedup_minhash_lsh
+    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
+    "dedup_simhash_pairs": q_dedup_simhash_pairs,
+    # pairs -> CC -> min-id, a strict stage of dedup_survivor_quality
+    "dedup_minhash_components": q_dedup_minhash_components,
+    # the banded-bucket shape of semantic_dedup
+    "dedup_embedding_cosine_lsh": q_dedup_embedding_cosine_lsh,
+    # same SQL truth as decontaminate_bloom (the Bloom is a plan choice)
+    "decontaminate_containment": q_decontaminate_containment,
+    "dedup_url_canonical": q_dedup_url_canonical,
     "winnow_fingerprints": q_winnow_fingerprints,
+    # -- vector search / ANN --
+    # its recall evidence is the in-window eval_lsh_recall
+    "ann_lsh_topk": q_ann_lsh_topk,
+    "ann_kmeans_full": q_ann_kmeans_full,
+    "search_maxsim": q_search_maxsim,
+    "embed_mean_pool": q_embed_mean_pool,
+    "quantize_f16_roundtrip": q_quantize_f16_roundtrip,
+    # -- tokenizers and text transforms --
+    # word-BPE; the byte-level sibling token_count_byte_bpe is in-window
+    "token_count_bpe": q_token_count_bpe,
+    "token_count_wordpiece": q_token_count_wordpiece,
+    "lang_id_ngram": q_lang_id_ngram,
+    "text_compression": q_text_compression,
+    # single-split sibling of span_corruption
+    "fim_transform": q_fim_transform,
+    # -- sampling / mixing --
+    # simplest member of the split family (split_leakage_safe,
+    # sample_stratified_exact are in-window)
+    "sample_train_test_split": q_sample_train_test_split,
+    "sample_mixture": q_sample_mixture,
+    "mixture_epochs": q_mixture_epochs,
     "temperature_mixture": q_temperature_mixture,
+    "perplexity_buckets": q_perplexity_buckets,
+    "shuffle_order": q_shuffle_order,
+    "dataset_diff": q_dataset_diff,
+    # -- streaming: the simplest shape next to stream_sessionize --
+    "stream_windowed_counts": q_stream_windowed_counts,
 }
 
 # -- round-6 window rotation (VERDICT r5 ask #1): the four operators a
-# real training-data user hits first, promoted out of STAGED into the
-# driver's 50-slot window. Their q_* functions are defined above this
-# point, after the QUERIES literal, hence the post-hoc update.
+# real training-data user hits first, promoted into the driver's 50-slot
+# window. Their q_* functions are defined after the QUERIES literal,
+# hence the post-hoc update.
 QUERIES.update(
     {
         "decontaminate_bloom": q_decontaminate_bloom,
@@ -3980,8 +3490,8 @@ QUERIES.update(
 # -- round-7 window rotation (COVERAGE.md pre-plan): the contrastive
 # training-pair assembly (the tail of the mined-negatives story), the
 # tokenizer-budget sizing curve, the release-gate data card, and the
-# recall evidence behind every ANN knob -- promoted out of STAGED into
-# the driver's 50-slot window.
+# recall evidence behind every ANN knob -- promoted into the driver's
+# 50-slot window.
 QUERIES.update(
     {
         "training_pairs": q_training_pairs,
@@ -4039,10 +3549,6 @@ QUERIES.update(
     }
 )
 
-# r10 displacement whose q_ function is defined after the
-# ROTATED_OUT_QUERIES literal (see the rationale comment there)
-ROTATED_OUT_QUERIES["fim_transform"] = q_fim_transform
-
 _C4_ORACLE_SQL = r"""
     WITH styled AS (
         SELECT doc_id,
@@ -4073,18 +3579,6 @@ _C4_ORACLE_SQL = r"""
     SELECT doc_id, clean_len, n_sentences,
            (n_sentences >= 3 AND NOT has_lorem AND NOT has_brace) AS passes
     FROM judged ORDER BY doc_id
-"""
-
-_ATTRIBUTION_ORACLE_SQL = """
-    SELECT i.user_id, i.imp_id, c.click_id
-    FROM (SELECT user_id, event_id AS imp_id, ts AS imp_ts
-          FROM events WHERE event_id % 2 = 0) i
-    JOIN (SELECT user_id, event_id AS click_id, ts AS click_ts
-          FROM events WHERE event_id % 2 = 1) c
-      ON i.user_id = c.user_id
-     AND c.click_ts >= i.imp_ts
-     AND c.click_ts <= i.imp_ts + INTERVAL 2 HOUR
-    ORDER BY i.user_id, i.imp_id, c.click_id
 """
 
 
@@ -4691,28 +4185,93 @@ def _text_compression_oracle(sf_dir: str) -> str:
     )
 
 
-STAGED_ORACLES: dict[str, object] = {
-    # (r10 rotation: the r9 staged oracles + eval_hamming_recall +
-    # c4_page_filter moved to the window registries with their queries)
-    # round 10
+def _quantize_f16_oracle(sf_dir: str) -> str:
+    """Computed-literal oracle for quantize_f16_roundtrip: replicate the
+    numpy f16 pack/unpack and the Catalyst double fold (abs diff, running
+    greatest) exactly. Standalone so the off-window gate pays only THIS
+    oracle, not the whole computed set."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    etbl = pq.read_table(
+        os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"]
+    ).to_pylist()
+    etbl.sort(key=lambda r: r["vec_id"])
+    qrows = []
+    for r in etbl:
+        a = np.asarray(r["embedding"], dtype=np.float32)
+        restored = a.astype(np.float16).astype(np.float32)
+        err = 0.0
+        for x, y in zip(a, restored):
+            d = abs(float(x) - float(y))
+            if d > err:
+                err = d
+        qrows.append((r["vec_id"], 2 * len(a), err))
+    return _values_literal(
+        qrows,
+        [("vec_id", "BIGINT"), ("n_bytes", "BIGINT"), ("max_err", "DOUBLE")],
+    )
+
+
+def _token_count_bpe_oracle(sf_dir: str) -> str:
+    """Computed-literal oracle for token_count_bpe: Counter word counts +
+    the SAME pure-Python merge trainer/encoder the distributed path
+    drives (tokenizer.py _train_merges is driver-side in both worlds;
+    merge selection is order-independent -- max count, lexicographically
+    smallest tie-break -- so equal word-count multisets give equal
+    models).
+    Counts are integers: hash-stable. Standalone so the off-window
+    gate pays only THIS oracle, not the whole computed set."""
+    from collections import Counter
+
+    from letsearch_spark.tokenizer import (
+        END_OF_WORD,
+        BpeModel,
+        _train_merges,
+        split_text,
+    )
+
+    docs = _read_documents(sf_dir)
+    wc = Counter(w for r in docs for w in split_text(r["text"] or ""))
+    top = sorted(wc.items(), key=lambda kv: (-kv[1], kv[0]))[:1_000_000]
+    alpha_size = len(
+        {s for w, _ in top for s in (list(w[:-1]) + [w[-1] + END_OF_WORD])}
+    )
+    merges, alphabet = _train_merges(top, max(0, _BPE_VOCAB - alpha_size))
+    model = BpeModel(
+        merges=merges, alphabet=alphabet, word_types=len(top), coverage=1.0
+    )
+    return _values_literal(
+        [(r["doc_id"], model.token_count(r["text"] or "")) for r in docs],
+        [("doc_id", "BIGINT"), ("n_tokens", "BIGINT")],
+    )
+
+
+# values are SQL strings, or callables (sf_dir) -> SQL for the
+# computed-literal oracles; the SQL twins that _oracles() writes for
+# off-window entries join these below
+OFF_WINDOW_ORACLES: dict[str, object] = {
+    "s_csv_roundtrip": """
+        SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
+        FROM documents ORDER BY doc_id
+    """,
     "multimodal_headers": _MULTIMODAL_HEADERS_ORACLE_SQL,
     "lang_id_ngram": _lang_id_ngram_oracle,
     "token_count_wordpiece": _token_count_wordpiece_oracle,
     "dedup_url_canonical": _DEDUP_URL_ORACLE_SQL,
-    # round 6 (late session)
     "search_maxsim": _maxsim_oracle_sql(),
     "text_compression": _text_compression_oracle,
-    # round 6
     "ann_kmeans_full": _kmeans_full_oracle,
     "embed_mean_pool": _MEAN_POOL_ORACLE_SQL,
     "html_extract": _html_extract_oracle_sql(),
     "dataset_diff": _DATASET_DIFF_ORACLE_SQL,
     "shuffle_order": _SHUFFLE_ORDER_ORACLE_SQL,
-    "events_attribution_join": _ATTRIBUTION_ORACLE_SQL,
     "perplexity_buckets": _ppl_buckets_oracle,
     "mixture_epochs": _mixture_epochs_oracle,
     "winnow_fingerprints": _winnow_oracle,
     "temperature_mixture": _temperature_mixture_oracle,
+    "quantize_f16_roundtrip": _quantize_f16_oracle,
+    "token_count_bpe": _token_count_bpe_oracle,
 }
 
 
@@ -4733,21 +4292,6 @@ def _oracles() -> dict[str, str]:
     o["s2_ingest_dense_key"] = """
         SELECT CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS _key, doc_id
         FROM documents
-    """
-    o["s3_append_key_continuation"] = """
-        SELECT CAST(row_number() OVER (ORDER BY (doc_id >= 400), doc_id) AS BIGINT) AS _key,
-               doc_id
-        FROM documents
-    """
-    o["s1_jsonl_ingest"] = """
-        SELECT doc_id, text, lang, source, n_chars FROM documents
-    """
-    o["p1_projection"] = """
-        SELECT doc_id AS _key, coalesce(text, '') AS text FROM documents
-    """
-    o["p3_key_lookup"] = """
-        SELECT doc_id, text FROM documents
-        WHERE doc_id IN (3, 17, 42, 99, 123, 256, 404, 499)
     """
     o["agg_pricing_summary"] = f"""
         SELECT l_returnflag, l_linestatus,
@@ -4770,37 +4314,6 @@ def _oracles() -> dict[str, str]:
         GROUP BY o_orderkey
         ORDER BY revenue DESC, o_orderkey ASC
         LIMIT 10
-    """
-    o["join_nation_volume"] = f"""
-        SELECT n_name,
-               sum({cents.format(x='l_extendedprice * (1 - l_discount)')}) / 100.0 AS revenue
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-        GROUP BY n_name
-        ORDER BY n_name
-    """
-    o["window_top_orders_per_customer"] = """
-        SELECT o_custkey, rnk, o_orderkey FROM (
-            SELECT o_custkey, o_orderkey,
-                   CAST(row_number() OVER (PARTITION BY o_custkey
-                        ORDER BY o_totalprice DESC, o_orderkey ASC) AS BIGINT) AS rnk
-            FROM orders
-        ) WHERE rnk <= 3
-    """
-    o["events_sessionize"] = """
-        SELECT user_id, CAST(sum(new_s) AS BIGINT) AS n_sessions FROM (
-            SELECT user_id,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                             OR date_diff('microsecond', lag(ts) OVER w, ts)
-                                > 1800000000
-                        THEN 1 ELSE 0 END AS new_s
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ) GROUP BY user_id ORDER BY user_id
     """
     qvec = "(SELECT embedding FROM embeddings WHERE vec_id = 0)"
     o["k1_topk_label_filtered"] = f"""
@@ -4891,27 +4404,6 @@ def _oracles() -> dict[str, str]:
         FROM events e ASOF LEFT JOIN r
              ON e.user_id = r.o_custkey AND e.ts >= r.o_orderdate
         ORDER BY e.event_id
-    """
-    o["events_time_rollup"] = """
-        SELECT 'hour' AS grain, date_trunc('hour', ts) AS bucket, event_type,
-               count(*) AS n, CAST(sum(user_id) AS BIGINT) AS sum_uid
-        FROM events GROUP BY 2, 3
-        UNION ALL
-        SELECT 'day' AS grain, date_trunc('day', ts) AS bucket, event_type,
-               count(*) AS n, CAST(sum(user_id) AS BIGINT) AS sum_uid
-        FROM events GROUP BY 2, 3
-        ORDER BY grain, bucket, event_type
-    """
-    # ::TIMESTAMP drops the sub-microsecond component of the TIMESTAMP_NS
-    # storage, matching Spark's microsecond timestamps exactly
-    o["events_range_join"] = """
-        WITH ev AS (SELECT event_id, user_id, ts::TIMESTAMP AS ts FROM events),
-        iv AS (SELECT user_id AS iv_user, min(ts) AS start_ts FROM ev GROUP BY user_id)
-        SELECT e.user_id, count(*) AS n_in_window
-        FROM ev e JOIN iv ON e.user_id = iv.iv_user
-             AND e.ts >= iv.start_ts
-             AND e.ts <= iv.start_ts + INTERVAL 2 HOUR
-        GROUP BY e.user_id ORDER BY e.user_id
     """
     b42 = md5_60.format(x="CAST(doc_id AS VARCHAR) || '#42'") + " % 1000000"
     b7 = md5_60.format(x="CAST(doc_id AS VARCHAR) || '#7'") + " % 1000000"
@@ -5037,15 +4529,6 @@ def _oracles() -> dict[str, str]:
         WHERE bit_count(xor(bucket, (SELECT bucket FROM bv WHERE vec_id = 0))) <= 1
         ORDER BY score DESC, vec_id ASC
         LIMIT 10
-    """
-    o["skew_salted_two_stage"] = """
-        SELECT o_orderpriority,
-               CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-               count(*) AS n_rows
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE o_orderkey <= 100
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority
     """
     # hybrid retrieval: the BM25 leg replays the Spark analyzer
     # (lowercase, [^a-z0-9]+ separators) and Lucene-variant idf with the
@@ -5362,7 +4845,7 @@ def _oracles() -> dict[str, str]:
         FROM events GROUP BY event_type ORDER BY event_type
     """
 
-    # round-6 window promotions (formerly STAGED_ORACLES entries; the
+    # round-6 window promotions (formerly off-window entries; the
     # SQL bodies are unchanged -- only the registry they live in moved)
     o["decontaminate_bloom"] = _DECON_BLOOM_ORACLE_SQL
     o["curriculum_order"] = _CURRICULUM_ORACLE_SQL
@@ -5378,7 +4861,7 @@ def _oracles() -> dict[str, str]:
 
     # round-8 window promotions (static-SQL half; token_count_unigram's
     # computed oracle registers in _computed_oracles). The SQL bodies
-    # are the former STAGED_ORACLES entries, unchanged.
+    # are the former off-window entries, unchanged.
     o["dedup_survivor_quality"] = _survivor_quality_oracle_sql()
     o["ann_hamming_topk"] = _hamming_oracle_sql()
     o["sample_stratified_exact"] = _STRATIFIED_EXACT_ORACLE_SQL
@@ -5388,7 +4871,7 @@ def _oracles() -> dict[str, str]:
     # round-9 window promotions (static-SQL half; the
     # search_maxsim_collection / embed_pca_model computed oracles
     # register in _computed_oracles). The SQL bodies are the former
-    # STAGED_ORACLES entries, unchanged.
+    # off-window entries, unchanged.
     o["s_wet_ingest"] = _WET_INGEST_ORACLE_SQL
     o["url_quality_filter"] = _URL_FILTER_ORACLE_SQL
     o["sft_render_chat"] = _SFT_CHAT_ORACLE_SQL
@@ -5397,114 +4880,17 @@ def _oracles() -> dict[str, str]:
     # round-10 window promotions (static-SQL half; the
     # token_count_byte_bpe / span_corruption / eval_hamming_recall
     # computed oracles register in _computed_oracles). The SQL bodies
-    # are the former STAGED_ORACLES entries, unchanged.
+    # are the former off-window entries, unchanged.
     o["s_warc_html_ingest"] = _warc_html_oracle_sql()
     o["c4_page_filter"] = _C4_ORACLE_SQL
     return o
 
 
-ORACLES = _oracles()
-
-def _quantize_f16_rotated_oracle(sf_dir: str) -> str:
-    """Computed-literal oracle for the rotated-out quantize_f16_roundtrip
-    (round 7): replicate the numpy f16 pack/unpack and the Catalyst
-    double fold (abs diff, running greatest) exactly. Standalone so the
-    rotated gate pays only THIS oracle, not the whole computed set."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    etbl = pq.read_table(
-        os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"]
-    ).to_pylist()
-    etbl.sort(key=lambda r: r["vec_id"])
-    qrows = []
-    for r in etbl:
-        a = np.asarray(r["embedding"], dtype=np.float32)
-        restored = a.astype(np.float16).astype(np.float32)
-        err = 0.0
-        for x, y in zip(a, restored):
-            d = abs(float(x) - float(y))
-            if d > err:
-                err = d
-        qrows.append((r["vec_id"], 2 * len(a), err))
-    return _values_literal(
-        qrows,
-        [("vec_id", "BIGINT"), ("n_bytes", "BIGINT"), ("max_err", "DOUBLE")],
-    )
-
-
-ROTATED_OUT_ORACLES["quantize_f16_roundtrip"] = _quantize_f16_rotated_oracle
-
-
-def _token_count_bpe_rotated_oracle(sf_dir: str) -> str:
-    """Computed-literal oracle for the rotated-out token_count_bpe
-    (round 10): Counter word counts + the SAME pure-Python merge
-    trainer/encoder the distributed path drives (tokenizer.py
-    _train_merges is driver-side in both worlds; merge selection is
-    order-independent -- max count, lexicographically smallest
-    tie-break -- so equal word-count multisets give equal models).
-    Counts are integers: hash-stable. Standalone so the rotated gate
-    pays only THIS oracle, not the whole computed set."""
-    from collections import Counter
-
-    from letsearch_spark.tokenizer import (
-        END_OF_WORD,
-        BpeModel,
-        _train_merges,
-        split_text,
-    )
-
-    docs = _read_documents(sf_dir)
-    wc = Counter(w for r in docs for w in split_text(r["text"] or ""))
-    top = sorted(wc.items(), key=lambda kv: (-kv[1], kv[0]))[:1_000_000]
-    alpha_size = len(
-        {s for w, _ in top for s in (list(w[:-1]) + [w[-1] + END_OF_WORD])}
-    )
-    merges, alphabet = _train_merges(top, max(0, _BPE_VOCAB - alpha_size))
-    model = BpeModel(
-        merges=merges, alphabet=alphabet, word_types=len(top), coverage=1.0
-    )
-    return _values_literal(
-        [(r["doc_id"], model.token_count(r["text"] or "")) for r in docs],
-        [("doc_id", "BIGINT"), ("n_tokens", "BIGINT")],
-    )
-
-
-ROTATED_OUT_ORACLES["token_count_bpe"] = _token_count_bpe_rotated_oracle
-
-# rounds 6+7 rotation: the displaced keep their exact oracle SQL, but
-# under the rotated-contract pytest gate instead of the driver window
-for _displaced in (
-    "p1_projection",
-    "p3_key_lookup",
-    "dedup_exact",
-    "dedup_lines",
-    # round 7
-    "s3_append_key_continuation",
-    "dedup_ngram_jaccard",
-    "events_time_rollup",
-    # round 8
-    "ann_lsh_topk",
-    "dedup_simhash_pairs",
-    "events_sessionize",
-    "sample_mixture",
-    "join_nation_volume",
-    "multimodal_frame_sample",
-    # round 9
-    "dedup_minhash_components",
-    "dedup_embedding_cosine_lsh",
-    "decontaminate_containment",
-    "events_range_join",
-    "sample_train_test_split",
-    "stream_windowed_counts",
-    # round 10 (token_count_bpe's computed oracle moves via the
-    # standalone _token_count_bpe_rotated_oracle above)
-    "s1_jsonl_ingest",
-    "window_top_orders_per_customer",
-    "skew_salted_two_stage",
-    "fim_transform",
-):
-    ROTATED_OUT_ORACLES[_displaced] = ORACLES.pop(_displaced)
+# _oracles() writes the SQL twins of both registries; the driver window
+# reads only its own
+ORACLES: dict[str, str] = {}
+for _name, _sql in _oracles().items():
+    (ORACLES if _name in QUERIES else OFF_WINDOW_ORACLES)[_name] = _sql
 
 
 # ======================================================================
@@ -5698,8 +5084,8 @@ def _computed_oracles(sf_dir: str) -> dict[str, str]:
     )
 
     # embeddings table, vec_id-sorted -- shared by the PQ / semdedup /
-    # recall oracles below (the rotated-out quantize oracle keeps its
-    # own copy in _quantize_f16_rotated_oracle)
+    # recall oracles below (the off-window quantize oracle keeps its
+    # own copy in _quantize_f16_oracle)
     etbl = pq.read_table(
         os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"]
     ).to_pylist()
@@ -5867,9 +5253,9 @@ def _computed_oracles(sf_dir: str) -> dict[str, str]:
         [("vec_id", "BIGINT"), ("cluster", "BIGINT"), ("keep", "BOOLEAN")],
     )
 
-    # (token_count_bpe's Counter+merge-trainer oracle moved to the
-    # standalone _token_count_bpe_rotated_oracle with the r10 rotation
-    # so the rotated gate pays only THAT oracle, not the computed set)
+    # (token_count_bpe's Counter+merge-trainer oracle is the standalone
+    # _token_count_bpe_oracle, so the off-window gate pays only THAT
+    # oracle, not the computed set)
     from letsearch_spark.tokenizer import split_text
 
     # --- pq_adc_topk: the same pq_fit numpy core on the key-sorted

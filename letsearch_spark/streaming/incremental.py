@@ -13,7 +13,8 @@ collection_actor.rs:808-826). Here both become streaming-native
   final state equals a single bulk ingest (tested).
 * :func:`windowed_event_counts` -- tumbling-window counts with
   watermarked late-data handling over an events stream; the batch twin
-  is the hour tier of queries.py q_events_time_rollup, so correctness is checkable without a
+  is a ``date_trunc('hour')`` GROUP BY (the oracle of queries.py
+  q_stream_windowed_counts), so correctness is checkable without a
   streaming oracle.
 
 At scale: file sources list incrementally (maxFilesPerTrigger bounds
@@ -226,8 +227,9 @@ def windowed_event_counts(
 ):
     """Tumbling-window counts + sums with late-data watermark.
 
-    Batch twin: q_events_time_rollup's hour tier (date_trunc == tumbling
-    window start for aligned windows), which is oracle-checked."""
+    Batch twin: an hourly ``date_trunc`` GROUP BY (date_trunc == tumbling
+    window start for aligned windows), the oracle of
+    q_stream_windowed_counts."""
     events_stream, was_ntz = ensure_event_time(events_stream, ts_col)
     start = F.col("w.start")
     if was_ntz:

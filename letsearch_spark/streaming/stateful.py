@@ -1,11 +1,11 @@
 """Custom stateful streaming: gap-based session windows via
 applyInPandasWithState.
 
-The batch twin is queries.py q_events_sessionize (lag + cumsum over a
-window); this is the streaming-native version with explicit per-key
-state -- the pattern for operators Structured Streaming's built-in
-windowed aggs can't express (session gaps, per-entity accumulators,
-online dedup state).
+The batch twin is the SQL oracle of queries.py q_stream_sessionize
+(lag + cumsum over a window); this is the streaming-native version with
+explicit per-key state -- the pattern for operators Structured
+Streaming's built-in windowed aggs can't express (session gaps,
+per-entity accumulators, online dedup state).
 
 State per user: the open session's (start, last_ts, n_events). On each
 micro-batch the user's new events (sorted by ts) either extend the open
@@ -16,7 +16,7 @@ the property that keeps this runnable against an unbounded stream.
 
 Emitted rows: (user_id, session_start, session_end, n_events) for
 CLOSED sessions only; the final open session per user stays in state
-(documented difference from the batch twin, which counts it too).
+(the oracle keeps it out too, unless its event-time timeout fired).
 """
 
 from __future__ import annotations

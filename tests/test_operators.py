@@ -186,15 +186,6 @@ def test_simhash_bits_validation(docs):
             simhash(docs, "doc_id", "text", bits=bad)
 
 
-def test_salted_join_rejects_outer(spark):
-    from letsearch_spark.operators.skew import salted_join
-
-    df = spark.range(2)
-    for bad in ("right", "full", "outer", "left_anti"):
-        with pytest.raises(ValueError):
-            salted_join(df, df, "id", how=bad)
-
-
 def test_multiprobe_signature_counts():
     import math
 
@@ -561,30 +552,6 @@ def test_asof_join_directions_tolerance(spark):
         asof_join(left, right.withColumnRenamed("rid", "lid"), "lts", "rts", "luser", "ruser")
 
 
-def test_sessionize_subsecond_gaps(spark):
-    import datetime as dt
-
-    from letsearch_spark.queries import sessionize_counts
-
-    base = dt.datetime(2024, 1, 1)
-    us = dt.timedelta(microseconds=1)
-    gap = dt.timedelta(seconds=1800)
-    rows = [
-        # user 1: second event exactly 1800.000000s later -> SAME session
-        (1, 1, base),
-        (2, 1, base + gap),
-        # user 2: second event 1800.000001s later -> NEW session; whole-
-        # second truncation would call this gap 1800 and merge them
-        (3, 2, base),
-        (4, 2, base + gap + us),
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp"
-    )
-    got = {r["user_id"]: r["n_sessions"] for r in sessionize_counts(ev).collect()}
-    assert got == {1: 1, 2: 2}
-
-
 def test_hash_split_and_sample(spark):
     from letsearch_spark.operators.sample import hash_sample, hash_split
 
@@ -788,153 +755,6 @@ def test_leakage_safe_split_no_pair_straddles_testdata(spark, sf_dir):
     assert any(plain[r.id_a] != plain[r.id_b] for r in prows)
 
 
-def test_range_join_bin_equals_range(spark):
-    import datetime as dt
-
-    from letsearch_spark.operators.range_join import range_join
-
-    T = lambda h, m=0, s=0: dt.datetime(2024, 1, 1, h, m, s)
-    ev = spark.createDataFrame(
-        [
-            (1, "u", T(0, 30)),   # inside iv A only
-            (2, "u", T(2, 0)),    # boundary: end of A, start of B -> both
-            (3, "u", T(5, 0)),    # inside no interval
-            (4, "v", T(0, 30)),   # other key, same time as event 1
-            (5, "u", T(3, 59, 59)),  # last second of B
-        ],
-        "event_id long, user_id string, ts timestamp",
-    )
-    iv = spark.createDataFrame(
-        [
-            ("A", "u", T(0), T(2)),
-            ("B", "u", T(2), T(4)),
-            ("C", "v", T(1), T(2)),  # does NOT cover event 4
-        ],
-        "iv_id string, iv_user string, start_ts timestamp, end_ts timestamp",
-    )
-
-    def pairs(method, width=3600):
-        out = range_join(
-            ev, iv, "ts", "start_ts", "end_ts", "user_id", "iv_user",
-            method=method, bin_width_seconds=width,
-        )
-        return sorted((r["event_id"], r["iv_id"]) for r in out.collect())
-
-    expect = [(1, "A"), (2, "A"), (2, "B"), (5, "B")]
-    assert pairs("range") == expect
-    for width in (60, 3600, 86_400):  # bin width must not change results
-        assert pairs("bin", width) == expect
-
-    with pytest.raises(ValueError):
-        range_join(ev, iv, "ts", "start_ts", "end_ts", "user_id", "iv_user", method="bogus")
-    # column clash raises
-    with pytest.raises(ValueError):
-        range_join(
-            ev, iv.withColumnRenamed("iv_id", "event_id"),
-            "ts", "start_ts", "end_ts", "user_id", "iv_user",
-        )
-
-
-def test_range_join_max_bins_guard(spark):
-    import datetime as dt
-
-    from letsearch_spark.operators.range_join import range_join
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    ev = spark.createDataFrame(
-        [(1, "u", dt.datetime(2024, 1, 2))], "event_id long, user_id string, ts timestamp"
-    )
-    iv = spark.createDataFrame(
-        [("A", "u", dt.datetime(2024, 1, 1), dt.datetime(2025, 1, 1))],
-        "iv_id string, iv_user string, start_ts timestamp, end_ts timestamp",
-    )
-    out = range_join(
-        ev, iv, "ts", "start_ts", "end_ts", "user_id", "iv_user",
-        bin_width_seconds=3600, max_bins=100,  # 1-year interval >> 100 hours
-    )
-    with pytest.raises(SparkRuntimeException):
-        out.collect()
-
-
-def test_time_rollup_matches_separate_groupbys(spark):
-    import datetime as dt
-
-    from letsearch_spark.operators.rollup import time_rollup
-
-    rows = [
-        (1, "a", dt.datetime(2024, 1, 1, 10, 15)),
-        (2, "a", dt.datetime(2024, 1, 1, 10, 45)),
-        (3, "a", dt.datetime(2024, 1, 1, 11, 5)),
-        (4, "b", dt.datetime(2024, 1, 2, 10, 15)),
-        (5, "b", dt.datetime(2024, 1, 2, 10, 20)),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, event_type string, ts timestamp")
-    out = time_rollup(
-        ev, "ts", ["event_type"],
-        ["count(1) AS n", "CAST(sum(user_id) AS BIGINT) AS sum_uid"],
-        granularities=("hour", "day"),
-    )
-    got = {
-        (r["grain"], r["bucket"], r["event_type"]): (r["n"], r["sum_uid"])
-        for r in out.collect()
-    }
-    H, D = dt.datetime, dt.datetime
-    assert got[("hour", H(2024, 1, 1, 10), "a")] == (2, 3)
-    assert got[("hour", H(2024, 1, 1, 11), "a")] == (1, 3)
-    assert got[("hour", H(2024, 1, 2, 10), "b")] == (2, 9)
-    assert got[("day", D(2024, 1, 1), "a")] == (3, 6)
-    assert got[("day", D(2024, 1, 2), "b")] == (2, 9)
-    assert len(got) == 5
-
-    # exactly one shuffle: grouping sets expand below a single exchange
-    # (inspect a freshly-planned copy -- after collect() AQE rewrites the
-    # tree into query stages and the exchange count is no longer 1:1)
-    fresh = time_rollup(
-        ev, "ts", ["event_type"],
-        ["count(1) AS n", "CAST(sum(user_id) AS BIGINT) AS sum_uid"],
-        granularities=("hour", "day"),
-    )
-    plan = fresh._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Expand" in plan
-    assert "partial_count" in plan  # map-side partials below the exchange
-
-    with pytest.raises(ValueError):
-        time_rollup(ev, "ts", [], ["count(1) AS n"], granularities=("fortnight",))
-    with pytest.raises(ValueError):
-        time_rollup(ev, "ts", [], ["count(1)"])  # missing alias
-
-
-def test_time_rollup_name_collisions_and_quoting(spark):
-    """grain/bucket output names colliding with a key or aggregate alias
-    must raise (duplicate columns otherwise); keys needing backticks
-    must survive the generated GROUPING SETS SQL."""
-    import datetime as dt
-
-    from letsearch_spark.operators.rollup import time_rollup
-
-    ev = spark.createDataFrame(
-        [(1, "a", dt.datetime(2024, 1, 1, 10, 15))],
-        "user_id long, `event type` string, ts timestamp",
-    )
-    out = time_rollup(
-        ev, "ts", ["event type"], ["count(1) AS n"], granularities=("hour",)
-    )
-    r = out.collect()[0]
-    assert (r["grain"], r["event type"], r["n"]) == ("hour", "a", 1)
-
-    plain = ev.withColumnRenamed("event type", "grain")
-    with pytest.raises(ValueError, match="grain_col"):
-        time_rollup(plain, "ts", ["grain"], ["count(1) AS n"])
-    with pytest.raises(ValueError, match="bucket_col"):
-        time_rollup(
-            plain.withColumnRenamed("grain", "k"),
-            "ts",
-            ["k"],
-            ["count(1) AS bucket"],
-        )
-
-
 def test_ngram_containment_verbatim_inclusion(spark):
     from letsearch_spark.operators.dedup import ngram_containment_pairs
 
@@ -1020,49 +840,6 @@ def test_components_star_equals_minlabel(spark):
         connected_components(pairs, algorithm="bogus")
 
 
-def test_range_join_bin_equivalence_property(spark):
-    """Randomized equivalence: for arbitrary events/intervals and any bin
-    width, the binned equi-join returns exactly the naive join's pairs."""
-    import random
-
-    from letsearch_spark.operators.range_join import range_join
-
-    rng = random.Random(12345)
-    base = 1_700_000_000
-    ev = spark.createDataFrame(
-        [
-            (i, f"u{rng.randrange(4)}", base + rng.randrange(0, 500_000))
-            for i in range(200)
-        ],
-        "event_id long, user_id string, ts_epoch long",
-    ).selectExpr("event_id", "user_id", "CAST(ts_epoch AS TIMESTAMP) AS ts")
-    ivs = []
-    for j in range(40):
-        start = base + rng.randrange(0, 500_000)
-        ivs.append((j, f"u{rng.randrange(4)}", start, start + rng.randrange(0, 120_000)))
-    iv = spark.createDataFrame(
-        ivs, "iv_id long, iv_user string, s_epoch long, e_epoch long"
-    ).selectExpr(
-        "iv_id", "iv_user",
-        "CAST(s_epoch AS TIMESTAMP) AS start_ts",
-        "CAST(e_epoch AS TIMESTAMP) AS end_ts",
-    )
-
-    def pairs(method, width):
-        return sorted(
-            (r["event_id"], r["iv_id"])
-            for r in range_join(
-                ev, iv, "ts", "start_ts", "end_ts", "user_id", "iv_user",
-                method=method, bin_width_seconds=width, max_bins=10_000,
-            ).collect()
-        )
-
-    expect = pairs("range", 3600)
-    assert expect  # fixture produces matches
-    for width in (97, 3600, 86_400, 1_000_000):
-        assert pairs("bin", width) == expect, width
-
-
 def test_stratified_hash_sample(spark):
     from letsearch_spark.operators.sample import stratified_hash_sample
 
@@ -1107,29 +884,6 @@ def test_repetition_stats(spark):
     assert got[2]["dup_word_frac"] == 0.75
     assert got[2]["dup_ngram_frac"] == pytest.approx(1 - 1 / 3, abs=1e-6)
     assert got[3]["dup_ngram_frac"] == 0.0  # empty gram set, no NaN
-
-
-def test_range_join_shared_key_name(spark):
-    import datetime as dt
-
-    from letsearch_spark.operators.range_join import range_join
-
-    T = lambda h: dt.datetime(2024, 1, 1, h)
-    ev = spark.createDataFrame(
-        [(1, "u", T(1)), (2, "v", T(1))], "event_id long, user_id string, ts timestamp"
-    )
-    iv = spark.createDataFrame(
-        [("A", "u", T(0), T(2))],
-        "iv_id string, user_id string, start_ts timestamp, end_ts timestamp",
-    )
-    for method in ("bin", "range"):
-        out = range_join(
-            ev, iv, "ts", "start_ts", "end_ts", "user_id", "user_id", method=method
-        )
-        # shared key column appears once, from the left side
-        assert out.columns.count("user_id") == 1
-        rows = [(r["event_id"], r["iv_id"], r["user_id"]) for r in out.collect()]
-        assert rows == [(1, "A", "u")], method
 
 
 # ---------------------------------------------------------------- pack
@@ -1986,13 +1740,9 @@ def test_code_review_regressions(spark):
     """Round-3 self-review fixes, pinned:
     (1) remove_duplicate_lines aliases its output to text_col;
     (2) pack_sequences uses a ROWS frame -- duplicate keys still tile
-        the stream instead of silently overlapping;
-    (3) time_rollup accepts backtick-quoted aggregate aliases."""
-    import datetime as dt
-
+        the stream instead of silently overlapping."""
     from letsearch_spark.operators.dedup import remove_duplicate_lines
     from letsearch_spark.operators.pack import pack_sequences
-    from letsearch_spark.operators.rollup import time_rollup
 
     docs = spark.createDataFrame(
         [(1, "x\ny"), (2, "x\nz")], "id long, body string"
@@ -2014,14 +1764,6 @@ def test_code_review_regressions(spark):
         for s in ss:
             assert s["seq_offset"] == pos, "overlapping spans"
             pos += s["tok_len"]
-
-    ev = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1, 10, 15))], "user_id long, ts timestamp"
-    )
-    out = time_rollup(
-        ev, "ts", [], ["count(1) AS `n events`"], granularities=("hour",)
-    )
-    assert out.collect()[0]["n events"] == 1
 
 
 def test_pipeline_token_count_col_guard(spark):

@@ -4,7 +4,7 @@ the executed plan, not just hoped for.
 Checks (SURVEY.md §4 + build-brief requirements):
 * predicate pushdown reaches the parquet scan (PushedFilters);
 * column pruning reaches the scan (ReadSchema);
-* dimension joins broadcast (BroadcastHashJoin, no SortMergeJoin);
+* small join sides broadcast (BroadcastHashJoin, no SortMergeJoin);
 * exact top-k compiles to TakeOrderedAndProject (map-side partial
   top-k, k rows per partition over the wire);
 * embeddings partition pruning on column_name (PartitionFilters);
@@ -40,19 +40,6 @@ def test_column_pruning_reaches_scan(docs):
     read_schema = p.split("ReadSchema", 1)[1].split("\n")[0]
     assert "doc_id" in read_schema and "lang" in read_schema
     assert "text" not in read_schema  # the wide column must NOT be read
-
-
-def test_dim_join_broadcasts(spark, sf_dir):
-    # rotated out of the driver window r8; the plan gate keeps running
-    from letsearch_spark.queries import ROTATED_OUT_QUERIES
-
-    df = ROTATED_OUT_QUERIES["join_nation_volume"](spark, sf_dir)
-    p = plan_of(df, "simple")
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p.split("lineitem")[0] or True
-    # the lineitem<->orders fact join may legitimately shuffle; the three
-    # dimension joins must not
-    assert p.count("BroadcastHashJoin") >= 3
 
 
 def test_topk_is_take_ordered(spark, sf_dir):
@@ -157,11 +144,11 @@ def test_no_accidental_cartesian_in_contract_queries(spark, sf_dir):
     join shapes -- NO contract entry may plan one (the exact all-pairs
     embedding dedup was demoted to a test-only verification twin in
     round 3). A new query that accidentally plans a cartesian fails
-    here before it ships."""
-    from letsearch_spark.queries import QUERIES, STAGED_QUERIES
+    here before it ships. Walks the window and every off-window entry."""
+    from letsearch_spark.queries import OFF_WINDOW_QUERIES, QUERIES
 
     flagged = {}
-    for name, fn in {**QUERIES, **STAGED_QUERIES}.items():
+    for name, fn in {**QUERIES, **OFF_WINDOW_QUERIES}.items():
         df = fn(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         hits = [
@@ -193,56 +180,40 @@ def test_c4_clean_is_scan_only_codegen(spark, sf_dir):
     assert "FileScan parquet" in plan
 
 
-def test_stream_interval_join_batch_plan_shape(spark, sf_dir):
-    """The attribution join's batch plan: an equi-join on the key with
-    the time range as residual condition (SortMergeJoin or broadcast
-    hash -- never a nested-loop over the cross product), and the
-    perplexity-bucket plan never global-sorts the corpus (cutoffs come
-    from an aggregation, not an orderBy)."""
-    from letsearch_spark.queries import STAGED_QUERIES
+def test_perplexity_buckets_never_sorts_the_corpus(spark, sf_dir, monkeypatch):
+    """perplexity_buckets takes its head/middle cutoffs from ONE
+    percentile aggregation, not an orderBy: neither the cutoff job nor
+    the labelled frame it returns range-partitions or globally sorts the
+    scored corpus (a global Sort prints as ``Sort [...], true``)."""
+    import re
 
-    df = STAGED_QUERIES["events_attribution_join"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
-    """Both sides written bucketed+sorted by the join key: the join plan
-    must contain no Exchange (the shuffle was paid once at write time)
-    and no per-side Sort."""
-    from letsearch_spark.operators.bucketed import bucketed_join, write_bucketed
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
-        "o_orderkey", "o_custkey", "o_totalprice"
+    from letsearch_spark.operators.ngram_lm import (
+        perplexity_buckets,
+        train_ngram_lm,
     )
-    lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # surface the on-disk sort order of single-file buckets (module doc)
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    try:
-        write_bucketed(
-            orders, "bkt_orders", "o_orderkey", 8, path=str(tmp_path / "o")
-        )
-        write_bucketed(
-            lineitem, "bkt_lineitem", "o_orderkey", 8, path=str(tmp_path / "l")
-        )
-        df = bucketed_join(spark, "bkt_orders", "bkt_lineitem", "o_orderkey")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert "Sort " not in plan.replace("SortMergeJoin", "SMJ")
-        assert "Bucketed: true" in plan
-        # and it actually computes the join
-        assert df.count() == lineitem.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    lm = train_ngram_lm(docs.where(F.col("lang") == "en"), n=2)
+    # the session's concrete DataFrame class (pyspark's classic frame
+    # overrides first())
+    DataFrame = type(docs)
+    first = DataFrame.first
+    for exact in (False, True):
+        plans = {}
+
+        def spy_first(self):
+            plans["cutoffs"] = plan_of(self, "simple")
+            return first(self)
+
+        monkeypatch.setattr(DataFrame, "first", spy_first)
+        out = perplexity_buckets(docs, lm, exact=exact)
+        monkeypatch.undo()
+        plans["labelled"] = plan_of(out, "simple")
+        assert "percentile" in plans["cutoffs"].lower()
+        for which, p in plans.items():
+            assert "rangepartitioning" not in p, (exact, which, p)
+            assert not re.search(r"Sort \[[^\]]*\], true", p), (exact, which, p)
+        assert out.where(F.col("ppl_bucket") == "head").count() > 0
 
 
 def test_pack_sequences_single_shuffle(spark):

@@ -1,13 +1,9 @@
-"""Oracle verification for contract entries rotated OUT of the driver's
-50-slot correctness window (rounds 4 + 5).
+"""Oracle verification for the contract entries outside the driver's
+50-slot correctness window (``OFF_WINDOW_QUERIES``).
 
-The driver hash-checks at most 50 queries; rotation made room for the
-formerly twin-only operators (round 4: DSIR, perplexity filter,
-semantic dedup, stateful sessions; round 5: BPE exact counts, PQ/ADC
-top-k, span-level substring dedup, classifier keep-list). The
-rotated-out capabilities -- CSV source, JSON extraction, percentile
-aggregation, anti-join set op, row count, schema introspection, ROLLUP,
-the scalar battery -- keep the SAME Spark-vs-DuckDB comparison here:
+The driver hash-checks at most 50 queries. The off-window entries --
+verification twins and simpler siblings of window rows, and candidates
+for the next rotation -- keep the SAME Spark-vs-DuckDB comparison here:
 row count, sorted-column schema, and exact canonical value equality,
 imported straight from tools/check_oracle.py so the two gates cannot
 drift.
@@ -34,21 +30,21 @@ def duck(sf_dir):
     con.close()
 
 
-def _rotated_names():
-    from letsearch_spark.queries import ROTATED_OUT_QUERIES
+def _off_window_names():
+    from letsearch_spark.queries import OFF_WINDOW_QUERIES
 
-    return sorted(ROTATED_OUT_QUERIES)
+    return sorted(OFF_WINDOW_QUERIES)
 
 
-@pytest.mark.parametrize("name", _rotated_names())
-def test_rotated_out_entry_matches_oracle(spark, sf_dir, duck, name):
-    from letsearch_spark.queries import ROTATED_OUT_ORACLES, ROTATED_OUT_QUERIES
+@pytest.mark.parametrize("name", _off_window_names())
+def test_off_window_entry_matches_oracle(spark, sf_dir, duck, name):
+    from letsearch_spark.queries import OFF_WINDOW_ORACLES, OFF_WINDOW_QUERIES
 
-    sdf = ROTATED_OUT_QUERIES[name](spark, sf_dir)
+    sdf = OFF_WINDOW_QUERIES[name](spark, sf_dir)
     s_cols, s_rows = _frame_to_rows(
         sdf.columns, [tuple(r) for r in sdf.collect()]
     )
-    oracle = ROTATED_OUT_ORACLES[name]
+    oracle = OFF_WINDOW_ORACLES[name]
     ddf = duck.sql(oracle(sf_dir) if callable(oracle) else oracle)
     d_cols, d_rows = _frame_to_rows(list(ddf.columns), ddf.fetchall())
     assert s_cols == d_cols
@@ -56,48 +52,19 @@ def test_rotated_out_entry_matches_oracle(spark, sf_dir, duck, name):
     assert s_rows == d_rows
 
 
-def _staged_names():
-    from letsearch_spark.queries import STAGED_QUERIES
-
-    return sorted(STAGED_QUERIES)
-
-
-@pytest.mark.parametrize("name", _staged_names())
-def test_staged_entry_matches_oracle(spark, sf_dir, duck, name):
-    """Round-5 operators staged for the NEXT window rotation (C4
-    cleaning, event-time attribution join, perplexity buckets): the
-    exact driver comparison -- row count, sorted-column schema,
-    canonical value equality -- runs here until a slot opens, so
-    promotion is a registry swap, not new verification."""
-    from letsearch_spark.queries import STAGED_ORACLES, STAGED_QUERIES
-
-    sdf = STAGED_QUERIES[name](spark, sf_dir)
-    s_cols, s_rows = _frame_to_rows(
-        sdf.columns, [tuple(r) for r in sdf.collect()]
-    )
-    oracle = STAGED_ORACLES[name]
-    sql = oracle(sf_dir) if callable(oracle) else oracle
-    ddf = duck.sql(sql)
-    d_cols, d_rows = _frame_to_rows(list(ddf.columns), ddf.fetchall())
-    assert s_cols == d_cols
-    assert len(s_rows) == len(d_rows)
-    assert s_rows == d_rows
-
-
 def test_rotation_bookkeeping():
-    """The driver window stays exactly 50, rotated-out names are gone
-    from it, and every live query has an oracle (the four new ones
-    included)."""
+    """The driver window stays exactly 50, off-window names are gone
+    from it, and every query in either registry has an oracle."""
     from letsearch_spark.queries import (
-        ROTATED_OUT_ORACLES,
-        ROTATED_OUT_QUERIES,
+        OFF_WINDOW_ORACLES,
+        OFF_WINDOW_QUERIES,
         QUERIES,
         oracles_with_computed,
     )
 
     assert len(QUERIES) == 50
-    assert set(ROTATED_OUT_QUERIES) == set(ROTATED_OUT_ORACLES)
-    assert not set(ROTATED_OUT_QUERIES) & set(QUERIES)
+    assert set(OFF_WINDOW_QUERIES) == set(OFF_WINDOW_ORACLES)
+    assert not set(OFF_WINDOW_QUERIES) & set(QUERIES)
     oracles = oracles_with_computed()
     missing = set(QUERIES) - set(oracles)
     assert not missing, f"queries without an oracle: {sorted(missing)}"
@@ -145,34 +112,25 @@ def test_rotation_bookkeeping():
     ):
         assert new in QUERIES and new in oracles
     for displaced in (
-        "p1_projection",
-        "p3_key_lookup",
+        # round-6 rotation
         "dedup_exact",
         "dedup_lines",
         # round-7 rotation
-        "s3_append_key_continuation",
         "dedup_ngram_jaccard",
         "quantize_f16_roundtrip",
-        "events_time_rollup",
         # round-8 rotation
         "ann_lsh_topk",
         "dedup_simhash_pairs",
-        "events_sessionize",
         "sample_mixture",
-        "join_nation_volume",
         "multimodal_frame_sample",
         # round-9 rotation
         "dedup_minhash_components",
         "dedup_embedding_cosine_lsh",
         "decontaminate_containment",
-        "events_range_join",
         "sample_train_test_split",
         "stream_windowed_counts",
         # round-10 rotation
-        "s1_jsonl_ingest",
         "token_count_bpe",
-        "window_top_orders_per_customer",
-        "skew_salted_two_stage",
         "fim_transform",
     ):
-        assert displaced in ROTATED_OUT_QUERIES and displaced not in QUERIES
+        assert displaced in OFF_WINDOW_QUERIES and displaced not in QUERIES

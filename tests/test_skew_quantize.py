@@ -1,62 +1,9 @@
-"""Tests for skew helpers (result equivalence) and quantized vectors
-(round-trip error bounds, top-k agreement)."""
+"""Tests for quantized vectors (round-trip error bounds, top-k
+agreement)."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    import os
-
-    from letsearch_spark.operators.skew import salted_join
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
-        F.col("c_custkey").alias("o_custkey"), "c_name"
-    )
-    plain = orders.join(cust, "o_custkey").select("o_orderkey", "c_name")
-    salted = salted_join(orders, cust, "o_custkey", n_salts=4).select(
-        "o_orderkey", "c_name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_two_stage_agg_equals_direct(spark, sf_dir):
-    import os
-
-    from letsearch_spark.operators.skew import two_stage_agg
-
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    direct = {
-        (r["l_returnflag"],): (r["s"], r["m"])
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.sum(F.col("l_quantity").cast("long")).alias("s"),
-            F.max("l_orderkey").alias("m"),
-        )
-        .collect()
-    }
-    staged = {
-        (r["l_returnflag"],): (r["sum_q"], r["max_l_orderkey"])
-        for r in two_stage_agg(
-            li.withColumn("q", F.col("l_quantity").cast("long")),
-            ["l_returnflag"],
-            {"q": "sum", "l_orderkey": "max"},
-        )
-        .withColumnRenamed("sum_q", "sum_q")
-        .collect()
-    }
-    assert direct == staged
-
-
-def test_two_stage_agg_rejects_nonalgebraic():
-    from letsearch_spark.operators.skew import two_stage_agg
-
-    with pytest.raises(ValueError):
-        two_stage_agg(None, ["k"], {"v": "avg"})
 
 
 @pytest.mark.parametrize("variant,tol", [("f16", 2e-3), ("i8", 2e-2)])

@@ -471,88 +471,6 @@ def test_prune_prep_state_and_band_fold(spark, tmp_path):
         prune_prep_state(spark, state, committed_up_to=-1)
 
 
-def test_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
-    """Stream-stream attribution join: the streaming inner join over
-    file sources (availableNow) emits exactly the rows the same
-    operator produces on the equivalent batch frames; batch left_outer
-    adds null-extended unmatched lefts; ambiguous schemas raise."""
-    import pytest
-
-    from letsearch_spark.streaming.join import stream_interval_join
-
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    imps = events.where(F.col("event_id") % 2 == 0).select(
-        "user_id",
-        F.col("event_id").alias("imp_id"),
-        F.col("ts").alias("imp_ts"),
-    )
-    clicks = events.where(F.col("event_id") % 2 == 1).select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-
-    batch = stream_interval_join(
-        imps, clicks, "user_id", "imp_ts", "click_ts", max_delay="2 hours"
-    )
-    want = {
-        (r["imp_id"], r["click_id"]) for r in batch.collect()
-    }
-    assert want, "fixture should produce at least one attribution pair"
-
-    # drive the SAME join as two file-source streams
-    left_dir, right_dir = str(tmp_path / "imps"), str(tmp_path / "clicks")
-    imps.withColumn("p", (F.col("imp_id") % 3).cast("int")).write.partitionBy(
-        "p"
-    ).parquet(left_dir)
-    clicks.withColumn("p", (F.col("click_id") % 3).cast("int")).write.partitionBy(
-        "p"
-    ).parquet(right_dir)
-    l = spark.readStream.schema(imps.schema).option(
-        "maxFilesPerTrigger", 2
-    ).parquet(left_dir + "/p=*")
-    r = spark.readStream.schema(clicks.schema).parquet(right_dir + "/p=*")
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (
-        stream_interval_join(
-            l, r, "user_id", "imp_ts", "click_ts", max_delay="2 hours"
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["imp_id"], r["click_id"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == want
-
-    # batch left_outer: matched pairs identical, unmatched lefts null
-    outer = stream_interval_join(
-        imps, clicks, "user_id", "imp_ts", "click_ts",
-        max_delay="2 hours", join_type="left_outer",
-    )
-    rows = outer.collect()
-    assert {
-        (r["imp_id"], r["click_id"]) for r in rows if r["click_id"] is not None
-    } == want
-    n_unmatched = sum(1 for r in rows if r["click_id"] is None)
-    assert n_unmatched == imps.count() - len({i for i, _ in want})
-
-    with pytest.raises(ValueError, match="non-key columns"):
-        stream_interval_join(
-            imps, imps.withColumnRenamed("imp_ts", "click_ts"),
-            "user_id", "imp_ts", "click_ts",
-        )
-    with pytest.raises(ValueError, match="join_type"):
-        stream_interval_join(
-            imps, clicks, "user_id", "imp_ts", "click_ts", join_type="full"
-        )
-
-
 def test_stream_prep_html_stage(spark, tmp_path):
     """Round 6: the streaming prep front can start from raw crawl HTML
     (batch pipeline stage 0): pages extract before the quality judge,

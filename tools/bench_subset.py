@@ -58,23 +58,24 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from letsearch_spark.queries import QUERIES, load
+    from letsearch_spark import queries
+    from letsearch_spark.queries import load
     from letsearch_spark.session import get_spark
 
-    try:
-        from letsearch_spark.queries import ROTATED_OUT_QUERIES, STAGED_QUERIES
-    except ImportError:  # older checkouts
-        ROTATED_OUT_QUERIES, STAGED_QUERIES = {}, {}
+    # the window and off-window registries; an older --repo checkout
+    # names its registries differently, so take every *_QUERIES dict the
+    # checkout defines (names never repeat across them)
+    registries = [
+        v
+        for k, v in vars(queries).items()
+        if k.endswith("QUERIES") and isinstance(v, dict)
+    ]
 
     def resolve_query(name):
-        q = (
-            QUERIES.get(name)
-            or STAGED_QUERIES.get(name)
-            or ROTATED_OUT_QUERIES.get(name)
-        )
-        if q is None:
-            raise KeyError(name)
-        return q
+        for reg in registries:
+            if name in reg:
+                return reg[name]
+        raise KeyError(name)
 
     spark = get_spark(
         "bench-subset", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS)

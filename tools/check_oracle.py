@@ -18,11 +18,11 @@ before it can fail at the gate. Any contract query whose Spark schema
 contains an Array/Map/Struct column is rejected outright.
 
 Usage: python tools/check_oracle.py [--sf-dir DIR] [--only name1,name2]
-       [--registry window|rotated|staged|all]
+       [--registry window|off_window|all]
 
 ``--registry`` widens the sweep beyond the driver's 50-slot window to
-the rotated-out and staged registries (the same comparison pytest runs
-in tests/test_rotated_contract.py), so an auditor can re-verify EVERY
+the off-window registry (the same comparison pytest runs in
+tests/test_rotated_contract.py), so an auditor can re-verify EVERY
 oracle-backed entry from one command.
 """
 
@@ -110,7 +110,7 @@ def main() -> int:
     ap.add_argument(
         "--registry",
         default="window",
-        choices=("window", "rotated", "staged", "all"),
+        choices=("window", "off_window", "all"),
     )
     args = ap.parse_args()
     # computed VALUES-literal oracles must be generated at the same scale
@@ -131,29 +131,16 @@ def main() -> int:
 
     qs = dict(entrymod.queries()) if args.registry in ("window", "all") else {}
     oracles = dict(entrymod.oracle_sql()) if qs else {}
-    if args.registry in ("rotated", "all"):
+    if args.registry in ("off_window", "all"):
         from letsearch_spark.queries import (
-            ROTATED_OUT_ORACLES,
-            ROTATED_OUT_QUERIES,
+            OFF_WINDOW_ORACLES,
+            OFF_WINDOW_QUERIES,
         )
 
-        qs.update(ROTATED_OUT_QUERIES)
-        oracles.update(
-            {
-                k: (v(args.sf_dir) if callable(v) else v)
-                for k, v in ROTATED_OUT_ORACLES.items()
-            }
-        )
-    if args.registry in ("staged", "all"):
-        from letsearch_spark.queries import STAGED_ORACLES, STAGED_QUERIES
-
-        qs.update(STAGED_QUERIES)
-        oracles.update(
-            {
-                k: (v(args.sf_dir) if callable(v) else v)
-                for k, v in STAGED_ORACLES.items()
-            }
-        )
+        qs.update(OFF_WINDOW_QUERIES)
+        # computed-literal oracles are callables (sf_dir) -> SQL,
+        # resolved only for the entries this run compares
+        oracles.update(OFF_WINDOW_ORACLES)
     only = set(args.only.split(",")) if args.only else None
 
     n_pass = n_fail = n_rows_only = 0
@@ -182,7 +169,10 @@ def main() -> int:
                 print(f"      WARNING {name} returned 0 rows")
             continue
         try:
-            d_pdf = con.sql(oracles[name]).df()
+            oracle = oracles[name]
+            if callable(oracle):
+                oracle = oracle(args.sf_dir)
+            d_pdf = con.sql(oracle).df()
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             n_fail += 1

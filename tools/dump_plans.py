@@ -24,11 +24,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=SF_DIR)
     args = ap.parse_args()
 
-    from letsearch_spark.queries import (
-        QUERIES,
-        ROTATED_OUT_QUERIES,
-        STAGED_QUERIES,
-    )
+    from letsearch_spark.queries import OFF_WINDOW_QUERIES, QUERIES
     from letsearch_spark.session import get_spark
 
     spark = get_spark(
@@ -44,11 +40,7 @@ def main() -> None:
 
     for name in args.names.split(","):
         name = name.strip()
-        q = (
-            QUERIES.get(name)
-            or STAGED_QUERIES.get(name)
-            or ROTATED_OUT_QUERIES.get(name)
-        )
+        q = QUERIES.get(name) or OFF_WINDOW_QUERIES.get(name)
         if q is None:
             print(f"SKIP {name}: not in any registry")
             continue

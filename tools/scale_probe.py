@@ -80,8 +80,8 @@ def scaled_events(spark, n_copies: int):
     if n_copies == 1:
         return base.select("event_id", "user_id", "ts")
     copies = spark.range(n_copies).select(F.col("id").cast("int").alias("copy"))
-    # each copy gets disjoint users: per-user interval structure (and any
-    # per-user skew) replicates linearly, like sharded real traffic
+    # each copy gets disjoint users: per-user session structure
+    # replicates linearly, like sharded real traffic
     return base.crossJoin(copies).select(
         (F.col("event_id") + F.col("copy") * 10_000_000).alias("event_id"),
         (F.col("user_id") + F.col("copy") * 1_000_000).alias("user_id"),
@@ -166,47 +166,6 @@ def add_docs_probe(spark, n_copies: int) -> dict:
     }
 
 
-def skewed_range_join_probe(spark) -> None:
-    """One hot key, both sides too big to broadcast: the geometry the
-    binned range join exists for. The naive key-join sends the whole
-    cross product to ONE reducer (quadratic in the hot key); the bin
-    method spreads it over (key x bin) with only the in-bin residue
-    evaluated per reducer."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from letsearch_spark.operators.range_join import range_join
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    ev = spark.range(2_000_000).select(
-        F.col("id").alias("event_id"),
-        F.lit("hot").alias("user_id"),
-        (F.lit(1704067200) + (F.col("id") % 5_184_000)).cast("timestamp").alias("ts"),
-    )
-    iv = spark.range(20_000).select(
-        F.concat(F.lit("iv"), F.col("id")).alias("iv_id"),
-        F.lit("hot").alias("iv_user"),
-        (F.lit(1704067200) + (F.col("id") % 2_000) * 2592)
-        .cast("timestamp")
-        .alias("start_ts"),
-        (F.lit(1704067200) + (F.col("id") % 2_000) * 2592 + 7200)
-        .cast("timestamp")
-        .alias("end_ts"),
-    )
-    row = {"probe": "range_join_hotkey", "events": 2_000_000, "intervals": 20_000}
-    for method in ("bin", "range"):
-        t0 = time.time()
-        n = range_join(
-            ev, iv, "ts", "start_ts", "end_ts", "user_id", "iv_user",
-            method=method, bin_width_seconds=7200,
-        ).count()
-        row[method] = round(time.time() - t0, 2)
-        row[f"{method}_rows"] = n
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    print(json.dumps(row), flush=True)
-
-
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -220,7 +179,6 @@ def main() -> None:
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--scales", default="1,4,16")
-    ap.add_argument("--skew", action="store_true", help="hot-key range-join probe only")
     ap.add_argument(
         "--ops", default=None,
         help="comma list of probe names to run (default: all)",
@@ -228,15 +186,6 @@ def main() -> None:
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")]
     only = set(args.ops.split(",")) if args.ops else None
-
-    if args.skew:
-        spark = get_spark(
-            "scale-probe", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS)
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        skewed_range_join_probe(spark)
-        spark.stop()
-        return
 
     spark = get_spark(
         "scale-probe", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS)
@@ -933,52 +882,8 @@ def main() -> None:
                 store.unpersist()
             new_batch.unpersist()
 
-        from letsearch_spark.operators.range_join import range_join
-        from letsearch_spark.operators.rollup import time_rollup
-
         ev = scaled_events(spark, n).cache()
         row["events"] = ev.count()
-        iv = (
-            ev.groupBy(F.col("user_id").alias("iv_user"))
-            .agg(F.min("ts").alias("start_ts"))
-            .withColumn("end_ts", F.col("start_ts") + F.expr("INTERVAL 2 HOURS"))
-        )
-
-        def rj(method):
-            return range_join(
-                ev, iv, "ts", "start_ts", "end_ts", "user_id", "iv_user",
-                method=method, bin_width_seconds=3600,
-            ).count()
-
-        timeit("range_join_bin", lambda: rj("bin"))
-        timeit("range_join_naive", lambda: rj("range"))
-
-        # event-time attribution join (streaming/join.py, batch form):
-        # even events = impressions, odd = clicks, 2-hour window. An
-        # equi-join on user_id with a residual range condition -- cost
-        # must track events like any key-shuffled join, never the
-        # per-user cross product (pairs stay linear because per-user
-        # activity is fixed as copies grow)
-        if only is None or "attribution_join" in only:
-            from letsearch_spark.streaming.join import stream_interval_join
-
-            imps = ev.where(F.col("event_id") % 2 == 0).select(
-                "user_id",
-                F.col("event_id").alias("imp_id"),
-                F.col("ts").alias("imp_ts"),
-            )
-            clicks = ev.where(F.col("event_id") % 2 == 1).select(
-                "user_id",
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("click_ts"),
-            )
-            timeit(
-                "attribution_join",
-                lambda: stream_interval_join(
-                    imps, clicks, "user_id", "imp_ts", "click_ts",
-                    max_delay="2 hours",
-                ).count(),
-            )
 
         # C4 cleaning: sentence structure stamped on (the synthetic
         # corpus has no punctuation), then line rewrite + page judge.
@@ -1011,12 +916,6 @@ def main() -> None:
                     c4_flags(F.col("text"))["passes"]
                 ).count(),
             )
-        timeit(
-            "time_rollup_2tier",
-            lambda: time_rollup(
-                ev, "ts", [], ["count(1) AS n"], granularities=("hour", "day")
-            ).count(),
-        )
 
         # stateful streaming sessions: users (hence state rows and
         # shuffle keys) scale with copies; events per user stay fixed.
