@@ -525,15 +525,16 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument(
         "--strategy",
         default="join",
-        choices=SEARCH_STRATEGIES,
+        choices=list(SEARCH_STRATEGIES),
         help="serving strategy (see Collection.search); 'auto' picks "
         "from the indexed size via the measured crossovers",
     )
     s.add_argument(
         "--where",
         default=None,
-        help="SQL predicate over serve-view columns (strategy join, "
-        "hamming or maxsim; combine with --filter-columns)",
+        help="SQL predicate over serve-view columns (strategies "
+        + ", ".join(n for n, s in SEARCH_STRATEGIES.items() if s.where)
+        + "; combine with --filter-columns)",
     )
     s.add_argument(
         "--filter-columns",

@@ -1422,6 +1422,46 @@ class Collection:
             return None
         return self.maxsim_auto_prefilter_k
 
+    def _serve_intake(
+        self,
+        column: str,
+        limit: int,
+        strategy: str,
+        where: str | None,
+        batched: bool = False,
+    ) -> str:
+        """The one serving prologue: check ``limit`` (1..=100,
+        serve.rs:155-161), ``column``, ``strategy`` and ``where=``
+        against the ``config.SEARCH_STRATEGIES`` table, require the
+        column's embeddings, and resolve 'auto'. ``batched`` reads
+        ``strategy`` as a :meth:`search_many` name and returns one;
+        otherwise it returns the per-query name."""
+        if not 1 <= limit <= 100:
+            raise ValueError(f"limit must be in [1, 100], got {limit}")
+        if column not in self.config.index_columns:
+            raise ValueError(f"column {column!r} is not indexed")
+        name = strategy
+        if batched:
+            name = next(
+                (n for n, s in SEARCH_STRATEGIES.items() if s.batched == strategy),
+                None,
+            )
+        if name not in SEARCH_STRATEGIES:
+            raise ValueError(f"unknown strategy {strategy!r}")
+        if where is not None and not SEARCH_STRATEGIES[name].where:
+            raise ValueError(
+                f"strategy {strategy!r} does not accept where= (the "
+                "strategies that pre-filter have where=True in "
+                "config.SEARCH_STRATEGIES)"
+            )
+        self._require_embeddings(column)
+        if name == "auto":
+            # a filter changes the top-k population: 'auto' promises the
+            # EXACT pre-filtering strategy (hamming pre-filters too, but
+            # its ranking is approximate -- callers opt into that)
+            name = "join" if where is not None else self.resolve_strategy(column)
+        return SEARCH_STRATEGIES[name].batched if batched else name
+
     def search(
         self,
         column: str,
@@ -1435,12 +1475,13 @@ class Collection:
 
         limit validation 1..=100 mirrors serve.rs:155-161.
 
-        ``where`` (strategies 'join' and 'hamming'): a Spark SQL
-        predicate over the serve view's columns, applied BEFORE
-        scoring/ranking (pre-filter-then-score -- never a post-filter
-        that can return fewer than limit hits; under 'join' the top-k
-        is exact over the filtered population, under 'hamming' the
-        candidate ranking is hamming-approximate over it). Metadata
+        ``where`` (the strategies whose ``config.SEARCH_STRATEGIES``
+        record has ``where=True``): a Spark SQL predicate over the
+        serve view's columns, applied BEFORE scoring/ranking
+        (pre-filter-then-score -- never a post-filter that can return
+        fewer than limit hits; an exact strategy's top-k is exact over
+        the filtered population, an approximate one ranks
+        approximately over it). Metadata
         columns referenced by the predicate must be listed in
         ``serve_filter_columns`` BEFORE serving (they are copied into
         the cached view at build; both views auto-rebuild if the list
@@ -1505,28 +1546,7 @@ class Collection:
         training step and a single recall knob; ``hamming_rescore >=
         rows`` provably equals the exact ranking.
         """
-        if not 1 <= limit <= 100:
-            raise ValueError(f"limit must be in [1, 100], got {limit}")
-        if column not in self.config.index_columns:
-            raise ValueError(f"column {column!r} is not indexed")
-        if strategy not in SEARCH_STRATEGIES:
-            raise ValueError(f"unknown strategy {strategy!r}")
-        if where is not None and strategy == "auto":
-            # a filter changes the top-k population; 'auto' promises
-            # the EXACT pre-filtering strategy (hamming also
-            # pre-filters since r7, but its ranking is approximate --
-            # callers opt into that explicitly)
-            strategy = "join"
-        if where is not None and strategy not in ("join", "hamming", "maxsim"):
-            raise ValueError(
-                "where= is supported with strategy='join' (exact "
-                "pre-filter-then-score), strategy='hamming' (r7: the "
-                "signature view carries serve_filter_columns, so the "
-                "predicate pre-filters the candidate scan) and "
-                "strategy='maxsim' (r8: pre-filters the serve view); the "
-                "other approximate / driver-local strategies do not "
-                "pre-filter"
-            )
+        strategy = self._serve_intake(column, limit, strategy, where)
         if strategy == "maxsim":
             # late-interaction serving (r8): group rows by the
             # maxsim_group_col knob and delegate to search_multi with
@@ -1540,9 +1560,9 @@ class Collection:
                 group_col=self.maxsim_group_col,
                 where=where,
             )
-        self._require_embeddings(column)
-        if strategy == "auto":
-            strategy = self.resolve_strategy(column)
+        if SEARCH_STRATEGIES[strategy].local:
+            rows_out = self._local_rows(column, query, limit, strategy)
+            return _rows_df(self.spark, rows_out, _RESULT_SCHEMA)
         qvec = self._embed_queries([query])[0]
 
         if strategy == "pq":
@@ -1556,14 +1576,6 @@ class Collection:
 
         if strategy == "hybrid":
             return self._search_hybrid(column, query, qvec, limit)
-
-        if strategy == "local_hybrid":
-            rows_out = self._local_hybrid_rows(column, query, qvec, limit)
-            return _rows_df(self.spark, rows_out, _RESULT_SCHEMA)
-
-        if strategy == "local":
-            rows_out = self._local_topk(self._local_bundle(column), qvec, limit)
-            return _rows_df(self.spark, rows_out, _RESULT_SCHEMA)
         serve = self._serve_view(column)
 
         # single-job path: score + top-k + content projection in ONE
@@ -1624,38 +1636,19 @@ class Collection:
         at all.
 
         strategy='auto' (r7) maps :meth:`resolve_strategy`'s tier to
-        the batched forms (join->dense, hamming->hamming,
-        ivf_pq->ivf_pq).
+        that strategy's batched name in ``config.SEARCH_STRATEGIES``.
 
         Returns (query_idx, rank, key, content, score) ordered by
         (query_idx, rank). Rows and scores equal :meth:`search` bit for
-        bit: dense against strategy='join', and pq, hamming and ivf_pq
-        against the same-named strategy; hybrid scores are RRF scores
-        as in :meth:`search` strategy='hybrid'.
+        bit under the per-query strategy whose table record names this
+        batched form; hybrid scores are RRF scores as in :meth:`search`
+        strategy='hybrid'.
 
-        ``where`` (strategy='dense' only, same contract as
-        :meth:`search`): a Spark SQL predicate over the serve view's
-        columns (opt in via ``serve_filter_columns``), applied before
-        scoring so every query's top-k is exact over the filtered
-        population."""
-        if not 1 <= limit <= 100:
-            raise ValueError(f"limit must be in [1, 100], got {limit}")
-        if column not in self.config.index_columns:
-            raise ValueError(f"column {column!r} is not indexed")
-        if strategy not in ("dense", "hybrid", "pq", "hamming", "ivf_pq", "auto"):
-            raise ValueError(f"unknown strategy {strategy!r}")
-        if where is not None and strategy == "auto":
-            # same rule as per-query search: a filter changes the top-k
-            # population, so 'auto' lands on the exact batched strategy
-            # that pre-filters instead of refusing
-            strategy = "dense"
-        if where is not None and strategy != "dense":
-            raise ValueError(
-                "where= is supported with strategy='dense' (the hybrid "
-                "lexical leg ranks over unfiltered postings; the pq "
-                "coded view and hamming signatures carry no filter "
-                "columns)"
-            )
+        ``where`` (the batched forms of the strategies whose table
+        record has ``where=True``, same contract as :meth:`search`): a
+        Spark SQL predicate over the serve view's columns (opt in via
+        ``serve_filter_columns``), applied before scoring or candidate
+        ranking."""
         if not queries:
             raise ValueError("queries must be non-empty")
         if len(queries) > self.search_many_max_queries:
@@ -1668,16 +1661,9 @@ class Collection:
                 f"operators/topk.knn_join with a query DataFrame for "
                 f"corpus-scale query sets"
             )
-        self._require_embeddings(column)
-        if strategy == "auto":
-            # size tier from resolve_strategy, mapped to the batched
-            # forms: join->dense (same exactness), hamming->hamming,
-            # ivf_pq->ivf_pq (the batched on-disk plan, ivf_pq_knn_join)
-            strategy = {
-                "join": "dense",
-                "hamming": "hamming",
-                "ivf_pq": "ivf_pq",
-            }[self.resolve_strategy(column)]
+        strategy = self._serve_intake(
+            column, limit, strategy, where, batched=True
+        )
         from letsearch_spark.operators.topk import knn_join
 
         vecs = self._embed_queries(queries)
@@ -1741,12 +1727,10 @@ class Collection:
             from letsearch_spark.operators.hamming import hamming_knn_join
             from letsearch_spark.functions.vector import dot_product
 
-            # rows FIRST: _centered_query_rows lazily builds the index
-            # the next line reads
-            q_rows = self._centered_query_rows(column, vecs)
+            sigs = self._hamming_view(column)
             cand = hamming_knn_join(
-                self._hamming_index[column],
-                q_rows,
+                sigs.where(F.expr(where)) if where is not None else sigs,
+                self._centered_query_rows(column, vecs),
                 rescore=max(self.hamming_rescore, limit),
                 key_col=KEY_COL,
                 query_key_col="query_idx",
@@ -2019,13 +2003,10 @@ class Collection:
         if group_col is None and signal == "hamming":
             from letsearch_spark.operators.hamming import hamming_knn_join
 
-            # rows FIRST: _centered_query_rows lazily builds the index
-            # the next line reads
-            q_rows = self._centered_query_rows(column, qvecs)
             cand = (
                 hamming_knn_join(
-                    self._hamming_index[column],
-                    q_rows,
+                    self._hamming_view(column),
+                    self._centered_query_rows(column, qvecs),
                     rescore=prefilter_k,
                     key_col=KEY_COL,
                     query_key_col="query_idx",
@@ -2134,8 +2115,6 @@ class Collection:
         before any query embedding runs (r9 review catch: a bad knob
         used to surface only after real model inference, and a float
         leaked into .limit() as an opaque Py4J error)."""
-        if not 1 <= limit <= 100:
-            raise ValueError(f"limit must be in [1, 100], got {limit}")
         if (
             prefilter_k is not None
             and prefilter_k != "auto"
@@ -2171,14 +2150,12 @@ class Collection:
                 "prefilter_k ('auto' stays exact when ungrouped, which "
                 "would silently ignore the hamming signal)"
             )
-        if column not in self.config.index_columns:
-            raise ValueError(f"column {column!r} is not indexed")
         if group_col is not None and group_col not in self.serve_filter_columns:
             raise ValueError(
                 f"group_col {group_col!r} must be listed in "
                 "serve_filter_columns so the serve view carries it"
             )
-        self._require_embeddings(column)
+        self._serve_intake(column, limit, "maxsim", where)
         serve = self._serve_view(column)
         base = serve.where(F.col("content").isNotNull())
         if where is not None:
@@ -2785,13 +2762,11 @@ class Collection:
         signature scans (r10 review catch: search_many and the MaxSim
         hamming prefilter previously duplicated it). Stored signatures
         threshold at the per-dim mean, so queries must subtract the
-        SAME center before the operator packs them; builds the index
-        (and with it the center, which build populates in lockstep) if
-        missing. Plain driver-side rows (r11): hamming_knn_join packs
-        them locally, so round-tripping through createDataFrame +
-        collect was one pointless Spark job per serving call."""
-        if column not in self._hamming_index:
-            self.build_hamming_index(column)
+        SAME center before the operator packs them; reads the center
+        :meth:`_hamming_view` populates. Plain driver-side rows (r11):
+        hamming_knn_join packs them locally, so round-tripping through
+        createDataFrame + collect was one pointless Spark job per
+        serving call."""
         center = self._hamming_centers[column]
         return [
             (i, [float(x) - c for x, c in zip(v, center)])
@@ -2896,11 +2871,7 @@ class Collection:
         contract as the float serve view), so
         ``search(where=..., strategy='hamming')`` predicates evaluate
         scan-side BEFORE the candidate ranking -- no per-query join."""
-        extra = [
-            c
-            for c in self.serve_filter_columns
-            if c not in (KEY_COL, "content", "vector", "_vnorm", "_sig", column)
-        ]
+        extra = self._serve_extra_columns(column, "_sig")
         self.refresh_hamming_index(column)
         idx = self.spark.read.parquet(self.hamming_path(column))
         tomb = self._tombstones_hinted()
@@ -2911,6 +2882,23 @@ class Collection:
         idx = idx.cache()
         idx.count()  # materialize: per-query cost is the bit-math scan only
         self._hamming_index[column] = idx
+
+    def _hamming_view(self, column: str) -> DataFrame:
+        """The cached signature view, built on first use and rebuilt
+        when ``serve_filter_columns`` grew since the build (the float
+        serve view's rule), so a where= predicate sees every listed
+        column. Populates the index center in lockstep (build always
+        runs refresh; ``_invalidate_cache`` clears both)."""
+        idx = self._hamming_index.get(column)
+        if idx is not None and any(
+            c not in idx.columns for c in self._serve_extra_columns(column, "_sig")
+        ):
+            self._hamming_index.pop(column).unpersist()
+            idx = None
+        if idx is None:
+            self.build_hamming_index(column)
+            idx = self._hamming_index[column]
+        return idx
 
     # ---- grouped-MaxSim pooled-centroid sidecar (r10, VERDICT r9 #1) ----
 
@@ -3111,23 +3099,7 @@ class Collection:
             pack_signbits,
         )
 
-        extra = [
-            c
-            for c in self.serve_filter_columns
-            if c not in (KEY_COL, "content", "vector", "_vnorm", "_sig", column)
-        ]
-        idx = self._hamming_index.get(column)
-        if idx is not None and any(c not in idx.columns for c in extra):
-            # serve_filter_columns grew since the build (same rebuild
-            # rule as the float serve view)
-            self._hamming_index.pop(column).unpersist()
-            idx = None
-        if idx is None:
-            self.build_hamming_index(column)
-            idx = self._hamming_index[column]
-        # invariant: build_hamming_index (just ensured above) always
-        # runs refresh, which populates the center; the two caches are
-        # cleared in lockstep by _invalidate_cache
+        idx = self._hamming_view(column)
         center = self._hamming_centers[column]
         scan = idx.where(F.expr(where)) if where is not None else idx
         # the stored signatures threshold at the per-dim mean, so the
@@ -3586,41 +3558,48 @@ class Collection:
         index + table, serve.rs latency class); 'local_hybrid' returns
         the same results as the distributed strategy='hybrid'. Other
         strategies delegate to :meth:`search` and collect."""
-        if strategy in ("local", "local_hybrid"):
-            if not 1 <= limit <= 100:
-                raise ValueError(f"limit must be in [1, 100], got {limit}")
-            if column not in self.config.index_columns:
-                raise ValueError(f"column {column!r} is not indexed")
-            self._require_embeddings(column)
-            qvec = self._embed_queries([query])[0]
-            if strategy == "local":
-                rows = self._local_topk(
-                    self._local_bundle(column), qvec, limit
-                )
-            else:
-                rows = self._local_hybrid_rows(column, query, qvec, limit)
-            return [
-                {"key": k, "content": c, "score": s} for k, c, s in rows
+        strategy = self._serve_intake(column, limit, strategy, None)
+        if SEARCH_STRATEGIES[strategy].local:
+            rows = self._local_rows(column, query, limit, strategy)
+        else:
+            rows = [
+                (r["key"], r["content"], r["score"])
+                for r in self.search(
+                    column, query, limit=limit, strategy=strategy
+                ).collect()
             ]
+        return [{"key": k, "content": c, "score": s} for k, c, s in rows]
+
+    def _local_rows(
+        self, column: str, query: str, limit: int, strategy: str
+    ) -> list[tuple]:
+        """(key, content, score) rows of a driver-local strategy
+        ('local' or 'local_hybrid'), served from the in-RAM bundles."""
+        qvec = self._embed_queries([query])[0]
+        if strategy == "local_hybrid":
+            return self._local_hybrid_rows(column, query, qvec, limit)
+        return self._local_topk(self._local_bundle(column), qvec, limit)
+
+    def _serve_extra_columns(self, column: str, *own: str) -> list[str]:
+        """The ``serve_filter_columns`` a cached serve view copies in
+        from the docs table: every listed name except the ones the view
+        already carries -- the key, 'content' (the indexed column's
+        alias), the indexed column itself, 'vector', '_vnorm', and the
+        caller's ``own`` columns (the signature view's '_sig'). Build
+        and rebuild check apply this SAME rule, otherwise listing e.g.
+        the indexed column would read as a perpetual cache miss and
+        rebuild the view on every search."""
         return [
-            {"key": r["key"], "content": r["content"], "score": r["score"]}
-            for r in self.search(column, query, limit=limit, strategy=strategy).collect()
+            c
+            for c in self.serve_filter_columns
+            if c not in (KEY_COL, "content", "vector", "_vnorm", column, *own)
         ]
 
     def _serve_view(self, column: str) -> DataFrame:
         """Cached denormalized serving view (key, vector, content) -- the
         analog of the reference holding index + table open while serving
         (collection_actor.rs:143-159). Built once, invalidated on writes."""
-        # the built view never carries these names (the indexed column is
-        # aliased to 'content'), so the rebuild check below must apply the
-        # SAME exclusion as the build -- otherwise listing e.g. the indexed
-        # column in serve_filter_columns would read as a perpetual cache
-        # miss and rebuild the view on every search
-        extra = [
-            c
-            for c in self.serve_filter_columns
-            if c not in (KEY_COL, "content", "vector", "_vnorm", column)
-        ]
+        extra = self._serve_extra_columns(column)
         view = self._emb_cache.get(f"__serve_{column}")
         if view is not None and any(c not in view.columns for c in extra):
             # serve_filter_columns grew since the build: rebuild so

@@ -13,13 +13,36 @@ import os
 import tempfile
 from dataclasses import asdict, dataclass, field
 
-# per-query serving strategies accepted by Collection.search (and the
-# CLI's ``search --strategy`` choices); kept here, pyspark-free, so the
-# two lists cannot drift apart
-SEARCH_STRATEGIES: tuple[str, ...] = (
-    "auto", "join", "local", "hybrid", "local_hybrid", "pq", "ivf_pq",
-    "hamming", "maxsim",
-)
+
+@dataclass(frozen=True)
+class Strategy:
+    """What the serving entry points read about one per-query strategy."""
+
+    # the name Collection.search_many serves it under, or None when it
+    # has no batched form
+    batched: str | None
+    # accepts where= (the predicate pre-filters before ranking)
+    where: bool
+    # serves from driver RAM, no Spark job per query
+    local: bool = False
+
+
+# the serving strategy table: its keys are the names Collection.search,
+# search_rows and the CLI's ``search --strategy`` accept, its batched
+# names the ones search_many accepts. Pyspark-free, so the CLI reads it
+# without starting Spark. 'auto' with where= lands on 'join' ('dense'
+# batched), the exact strategy that pre-filters.
+SEARCH_STRATEGIES: dict[str, Strategy] = {
+    "auto": Strategy(batched="auto", where=True),
+    "join": Strategy(batched="dense", where=True),
+    "local": Strategy(batched=None, where=False, local=True),
+    "hybrid": Strategy(batched="hybrid", where=False),
+    "local_hybrid": Strategy(batched=None, where=False, local=True),
+    "pq": Strategy(batched="pq", where=False),
+    "ivf_pq": Strategy(batched="ivf_pq", where=False),
+    "hamming": Strategy(batched="hamming", where=True),
+    "maxsim": Strategy(batched=None, where=True),
+}
 
 
 @dataclass

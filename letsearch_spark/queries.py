@@ -18,7 +18,10 @@ Parity rules that keep the DuckDB comparison bit-stable:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 import pandas as pd  # module-level so pandas_udf type hints resolve
@@ -54,6 +57,27 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
+
+
+_scratch_roots: dict[int, str] = {}
+
+
+def _remove_scratch_root(pid: int, root: str) -> None:
+    if os.getpid() == pid:  # a forked child must not remove its parent's
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory for one entry's fixture files (collections,
+    event copies, crawl segments). Entries return lazy frames over these
+    files, so the directory must outlive the call: each lives under one
+    per-process root that is removed when the interpreter exits."""
+    pid = os.getpid()
+    root = _scratch_roots.get(pid)
+    if root is None:
+        root = _scratch_roots[pid] = tempfile.mkdtemp(prefix="ls_queries_")
+        atexit.register(_remove_scratch_root, pid, root)
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
 def _cents(col):
@@ -237,12 +261,10 @@ def q_s_csv_roundtrip(spark, sf_dir):
     same dense-key semantics): write the documents projection out as
     headered CSV, import it through Collection.import_csv (header +
     schema inference), read back. The oracle is the original table."""
-    import tempfile
-
     from letsearch_spark.collection import Collection
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="ls_csv_")
+    tmp = _scratch_dir("ls_csv_")
     csv_path = os.path.join(tmp, "docs_csv")
     docs.write.mode("overwrite").option("header", "true").csv(csv_path)
     coll = Collection.create(spark, tmp, name="csvroundtrip")
@@ -963,12 +985,10 @@ def q_pdf_ingest(spark, sf_dir):
     survive -- then emits one row per chunk (text PDFs) or one null-row
     (rejects). The oracle is the computed single-process twin over the
     same deterministic bytes."""
-    import tempfile
-
     from letsearch_spark.chunker import ChunkerConfig, chunk_column
     from letsearch_spark.sources.pdf import pdf_fixture_files, read_pdfs
 
-    d = tempfile.mkdtemp(prefix="ls_pdf_")
+    d = _scratch_dir("ls_pdf_")
     for fname, data in pdf_fixture_files().items():
         with open(os.path.join(d, fname), "wb") as f:
             f.write(data)
@@ -1044,11 +1064,9 @@ def q_embed_stub(spark, sf_dir):
 def q_search_e2e(spark, sf_dir):
     """The reference's whole spine: ingest -> key -> embed(stub) -> top-k
     search -> fetch-back join (S2, P1-P4, K1-K3, E5, A4)."""
-    import tempfile
-
     from letsearch_spark.collection import Collection
 
-    root = tempfile.mkdtemp(prefix="ls_e2e_")
+    root = _scratch_dir("ls_e2e_")
     coll = Collection.create(
         spark, root, name="e2e", index_columns=["text"], model_name="stub://16"
     )
@@ -1069,13 +1087,12 @@ def q_stream_windowed_counts(spark, sf_dir):
     memory sink. Complete mode emits every window, so the result is
     batch-deterministic and the oracle is the plain hourly aggregate
     (counts only -- double sums are summation-order-dependent)."""
-    import tempfile
     import uuid
 
     from letsearch_spark.streaming.incremental import windowed_event_counts
 
     ev = load(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="ls_swin_") + "/events"
+    src = _scratch_dir("ls_swin_") + "/events"
     ev.write.parquet(src)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     out = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
@@ -1101,12 +1118,10 @@ def q_stream_incremental_count(spark, sf_dir):
     events replayed in 5 ts-ordered batches through the append path must
     equal one bulk ingest. Returns final per-type counts; oracle is the
     direct aggregate."""
-    import tempfile
-
     ev = load(spark, sf_dir, "events")
     qs = ev.approxQuantile("event_id", [0.2, 0.4, 0.6, 0.8], 0.0)
     bounds = [float("-inf")] + qs + [float("inf")]
-    path = tempfile.mkdtemp(prefix="ls_stream_") + "/events"
+    path = _scratch_dir("ls_stream_") + "/events"
     for lo, hi in zip(bounds[:-1], bounds[1:]):
         batch = ev.where((F.col("event_id") > lo) & (F.col("event_id") <= hi))
         batch.write.mode("append").parquet(path)
@@ -1326,13 +1341,12 @@ def q_stream_sessionize(spark, sf_dir):
     non-final session per user (closed in-batch by the gap rule) plus
     final sessions whose timeout (last_ms + gap) precedes the final
     watermark -- exactly what the SQL oracle expresses."""
-    import tempfile
     import uuid
 
     from letsearch_spark.streaming.stateful import session_windows
 
     ev = load(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="ls_sess_") + "/events"
+    src = _scratch_dir("ls_sess_") + "/events"
     ev.coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
     out = session_windows(
@@ -2508,11 +2522,9 @@ def q_search_maxsim_collection(spark, sf_dir):
     fetch-back of each group's best-matching chunk (P3/P4). Oracle:
     computed-literal Python twin (same stub vectors, same sequential
     double arithmetic as the Catalyst cosine fold)."""
-    import tempfile
-
     from letsearch_spark.collection import Collection
 
-    root = tempfile.mkdtemp(prefix="ls_maxsim_")
+    root = _scratch_dir("ls_maxsim_")
     coll = Collection.create(
         spark, root, name="ms", index_columns=["text"], model_name="stub://16"
     )
@@ -2638,8 +2650,6 @@ def q_s_wet_ingest(spark, sf_dir):
     framing makes the round-trip byte-exact, so the oracle is md5 +
     length straight off the documents table -- the parser never gets to
     'approximately' recover a page."""
-    import tempfile
-
     from letsearch_spark.sources.warc import read_wet, write_wet_segments
 
     docs = (
@@ -2648,7 +2658,7 @@ def q_s_wet_ingest(spark, sf_dir):
     rows = [
         (f"http://corpus.test/{r['doc_id']}", r["text"] or "") for r in docs
     ]
-    root = tempfile.mkdtemp(prefix="ls_wet_")
+    root = _scratch_dir("ls_wet_")
     write_wet_segments(rows, root, per_file=max(1, len(rows) // 4))
     return (
         read_wet(spark, root)
@@ -2697,8 +2707,6 @@ def q_s_warc_html_ingest(spark, sf_dir):
     (functions/html.py oracle_sql_chain), so a single corrupted byte
     anywhere in the segment -> envelope -> extraction path flips the
     md5."""
-    import tempfile
-
     from letsearch_spark.functions.html import html_to_text
     from letsearch_spark.sources.warc import read_wet, write_warc_segments
 
@@ -2712,7 +2720,7 @@ def q_s_warc_html_ingest(spark, sf_dir):
         )
         for r in docs
     ]
-    root = tempfile.mkdtemp(prefix="ls_warc_")
+    root = _scratch_dir("ls_warc_")
     write_warc_segments(rows, root, per_file=max(1, len(rows) // 4))
     clean = html_to_text(F.col("text"))
     return (

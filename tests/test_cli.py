@@ -31,13 +31,13 @@ def _search_strategy_choices():
 
 
 def test_cli_strategy_choices_match_search(spark, tmp_path):
-    """The CLI offers exactly the strategy names Collection.search
-    accepts: every choice passes search's strategy check (an empty
-    collection then fails later, for want of embeddings)."""
+    """The CLI offers exactly the strategy table's names: every choice
+    passes search's strategy check (an empty collection then fails
+    later, for want of embeddings)."""
     from letsearch_spark.collection import Collection
 
     choices = _search_strategy_choices()
-    assert tuple(choices) == SEARCH_STRATEGIES
+    assert tuple(choices) == tuple(SEARCH_STRATEGIES)
     assert "maxsim" in choices
     c = Collection.create(spark, str(tmp_path), name="s", model_name="stub://16")
     for name in choices:

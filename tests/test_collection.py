@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from letsearch_spark.collection import Collection, is_valid_identifier
-from letsearch_spark.config import CollectionConfig
+from letsearch_spark.config import SEARCH_STRATEGIES, CollectionConfig
 from letsearch_spark.embedders.stub import StubEmbedder, murmur3_32
 
 
@@ -268,30 +268,68 @@ def test_quantized_variant_storage_and_search(spark, tmp_path, sf_dir):
             assert abs(s_q - s_f) < (1e-3 if variant == "f16" else 2e-2)
 
 
-def test_search_many_matches_per_query(coll):
-    """Dense batched search runs knn_join, per-query 'join' the
-    cosine_with_norm expression: one fold, so ranks AND scores agree
-    bit for bit."""
-    coll.embed_column("text", incremental=True)  # no-op when already embedded
-    qs = [f"spark join query window batch {i}" for i in range(5)] + [""]
-    batched = {}
-    for r in coll.search_many("text", qs, limit=5, strategy="dense").collect():
-        batched.setdefault(r["query_idx"], []).append(
-            (r["rank"], r["key"], r["content"], r["score"].hex())
-        )
-    for i, q in enumerate(qs):
-        single = [
-            (j + 1, r["key"], r["content"], r["score"].hex())
-            for j, r in enumerate(
-                coll.search("text", q, limit=5, strategy="join").collect()
-            )
-        ]
-        assert sorted(batched[i]) == single, i
+# the queries the table test compares every batched form on; the empty
+# query embeds to the zero vector (every dense score 0.0, ties by key)
+_TABLE_QUERIES = [f"spark join query window batch {i}" for i in range(5)] + [""]
 
-    with pytest.raises(ValueError):
-        coll.search_many("text", [], limit=5)
-    with pytest.raises(ValueError):
-        coll.search_many("text", ["q"], limit=0)
+
+@pytest.mark.parametrize("name", list(SEARCH_STRATEGIES))
+def test_strategy_table_parity(coll, name):
+    """Walk config.SEARCH_STRATEGIES: every batched form returns its
+    per-query strategy's (rank, key, content, score) rows bit for bit
+    (float.hex, unrounded), also under where= when the record accepts
+    it; a record that refuses where= raises the same ValueError from
+    both entry points; both entry points share the limit intake."""
+    rec = SEARCH_STRATEGIES[name]
+    coll.embed_column("text", incremental=True)  # no-op when already embedded
+    coll.serve_filter_columns = ["lang"]
+    try:
+        for bad in (0, 101):
+            with pytest.raises(ValueError, match="limit must be in"):
+                coll.search("text", "q", limit=bad, strategy=name)
+        if not rec.where:
+            with pytest.raises(ValueError, match="does not accept where=") as one:
+                coll.search("text", "q", limit=5, strategy=name, where="_key > 1")
+            if rec.batched is not None:
+                with pytest.raises(ValueError) as many:
+                    coll.search_many(
+                        "text", ["q"], limit=5, strategy=rec.batched,
+                        where="_key > 1",
+                    )
+                assert str(many.value) == str(one.value)
+        if rec.batched is None:
+            if rec.where:
+                got = coll.search(
+                    "text", "alpha", limit=5, strategy=name, where="lang = 'de'"
+                ).collect()
+                assert len(got) == 5
+            return
+        with pytest.raises(ValueError, match="non-empty"):
+            coll.search_many("text", [], limit=5, strategy=rec.batched)
+        for bad in (0, 101):
+            with pytest.raises(ValueError, match="limit must be in"):
+                coll.search_many("text", ["q"], limit=bad, strategy=rec.batched)
+        for where in [None, "lang = 'de'"] if rec.where else [None]:
+            batched = {}
+            for r in coll.search_many(
+                "text", _TABLE_QUERIES, limit=5, strategy=rec.batched,
+                where=where,
+            ).collect():
+                batched.setdefault(r["query_idx"], []).append(
+                    (r["rank"], r["key"], r["content"], r["score"].hex())
+                )
+            for i, q in enumerate(_TABLE_QUERIES):
+                single = [
+                    (j + 1, r["key"], r["content"], r["score"].hex())
+                    for j, r in enumerate(
+                        coll.search(
+                            "text", q, limit=5, strategy=name, where=where
+                        ).collect()
+                    )
+                ]
+                assert sorted(batched[i]) == single, (where, i)
+    finally:
+        coll.serve_filter_columns = []  # module-scoped fixture: reset
 
 
 def test_search_many_query_count_ceiling(coll):
@@ -675,17 +713,19 @@ def test_search_hybrid_excludes_unembedded_appends(spark, sf_dir, tmp_path):
 
 def test_search_many_hybrid_matches_per_query(coll):
     """Batched hybrid (one plan for N queries) must agree with the
-    per-query hybrid path on every query's result set."""
+    per-query hybrid path on every query's result set, score bits
+    included: both add the same 1/(60+rank) terms in the same leg
+    order."""
     coll.embed_column("text", incremental=True)
     qs = [f"spark join query window batch {i}" for i in range(4)]
     batched = {}
     for r in coll.search_many("text", qs, limit=5, strategy="hybrid").collect():
         batched.setdefault(r["query_idx"], []).append(
-            (r["rank"], r["key"], round(r["score"], 9))
+            (r["rank"], r["key"], r["score"].hex())
         )
     for i, q in enumerate(qs):
         single = [
-            (j + 1, r["key"], round(r["score"], 9))
+            (j + 1, r["key"], r["score"].hex())
             for j, r in enumerate(
                 coll.search("text", q, limit=5, strategy="hybrid").collect()
             )
@@ -1048,11 +1088,13 @@ def test_ivf_pq_meta_persists_across_processes(spark, tmp_path, sf_dir):
     assert os.path.exists(cpath)
 
 
-def test_search_where_filter(coll):
+def test_search_where_filter(coll, monkeypatch):
     """Filtered dense search: the predicate pre-filters the serve view
     (exact top-k over the filtered population, always `limit` hits when
     enough match), the view auto-rebuilds when serve_filter_columns
-    grows, and non-'join' strategies refuse the parameter."""
+    grows (also for a user column named '_sig', which only the
+    signature view reserves), and non-'join' strategies refuse the
+    parameter."""
     import numpy as np
 
     coll.embed_column("text", incremental=True)
@@ -1097,7 +1139,7 @@ def test_search_where_filter(coll):
     ).collect()
     assert [r["key"] for r in got_auto] == [r["key"] for r in got]
 
-    with pytest.raises(ValueError, match="strategy='join'"):
+    with pytest.raises(ValueError, match="'hybrid' does not accept where="):
         coll.search("text", "x", limit=3, strategy="hybrid", where="lang='es'")
 
     # r7: the hamming tier pre-filters too -- its signature view
@@ -1121,6 +1163,16 @@ def test_search_where_filter(coll):
         assert ham_langs == {"es"}
     finally:
         coll.hamming_rescore = old_rescore
+
+    docs = coll.docs
+    monkeypatch.setattr(
+        coll, "docs", lambda: docs().withColumn("_sig", F.col("lang"))
+    )
+    coll.serve_filter_columns = ["lang", "_sig"]
+    got_sig = coll.search(
+        "text", "alpha words", limit=5, where="_sig = 'es'"
+    ).collect()
+    assert [r["key"] for r in got_sig] == [r["key"] for r in got]
     coll.serve_filter_columns = []  # module-scoped fixture: reset
 
 
@@ -1147,7 +1199,7 @@ def test_search_many_where_filter(coll):
         for r in batched:
             got.setdefault(r["query_idx"], []).append(r["key"])
         assert got == per_q
-        with pytest.raises(ValueError, match="strategy='dense'"):
+        with pytest.raises(ValueError, match="'hybrid' does not accept where="):
             coll.search_many(
                 "text", qs, limit=3, strategy="hybrid", where="lang='de'"
             )
@@ -1471,31 +1523,6 @@ def test_ivf_pq_refresh_restart_and_replace_guard(spark, tmp_path, sf_dir):
     coll._invalidate_cache(drop_index_meta=False)
     assert coll.refresh_ivf_pq_index("text") == "rebuilt"
     assert spark.read.parquet(path).where("_key = 999999").count() == 0
-
-
-def test_search_many_pq_matches_per_query(coll):
-    """strategy='pq' (round 6): the batched ADC plan must reproduce the
-    per-query strategy='pq' results bit for bit -- same keys, same
-    compressed-code score bits (float.hex, unrounded) -- and reject
-    where= (the coded view has no filter columns)."""
-    coll.embed_column("text", incremental=True)
-    qs = [f"spark join query window batch {i}" for i in range(4)]
-    batched = {}
-    for r in coll.search_many("text", qs, limit=5, strategy="pq").collect():
-        batched.setdefault(r["query_idx"], []).append(
-            (r["rank"], r["key"], r["score"].hex())
-        )
-    for i, q in enumerate(qs):
-        single = [
-            (j + 1, r["key"], r["score"].hex())
-            for j, r in enumerate(
-                coll.search("text", q, limit=5, strategy="pq").collect()
-            )
-        ]
-        assert sorted(batched[i]) == single, i
-
-    with pytest.raises(ValueError, match="where"):
-        coll.search_many("text", qs, limit=5, strategy="pq", where="_key > 1")
 
 
 def test_delete_where_removes_docs_and_vectors(spark, tmp_path, sf_dir):

@@ -14,7 +14,9 @@ from letsearch_spark import api
 from letsearch_spark.collection import Collection
 from letsearch_spark.config import SEARCH_STRATEGIES
 
-SEARCH_MANY_STRATEGIES = ("dense", "hybrid", "pq", "hamming", "ivf_pq", "auto")
+SEARCH_MANY_STRATEGIES = [
+    s.batched for s in SEARCH_STRATEGIES.values() if s.batched is not None
+]
 
 
 class _NonFiniteEmbedder:

@@ -53,3 +53,31 @@ def test_window_entry_matches_oracle(spark, sf_dir, duck, window_oracles, name):
     assert s_cols == d_cols
     assert len(s_rows) == len(d_rows)
     assert s_rows == d_rows
+
+
+def test_query_scratch_dirs_removed_at_exit(tmp_path):
+    """Entries return lazy frames over their fixture files, so each
+    ``queries._scratch_dir`` outlives the call; all of them are removed
+    when the interpreter exits, leaving nothing in the temp dir."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from letsearch_spark.queries import _scratch_dir\n"
+        "a, b = _scratch_dir('ls_a_'), _scratch_dir('ls_b_')\n"
+        "assert a != b and os.path.isdir(a) and os.path.isdir(b)\n"
+        "print(a)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.startswith(str(tmp_path))
+    assert os.listdir(tmp_path) == []
