@@ -131,14 +131,12 @@ class Collection:
         self.spark = spark
         self.root = root
         self.config = config
-        # per-column cached embeddings (the analog of the reference keeping
-        # its usearch index in RAM while serving, collection_actor.rs:143-152);
-        # invalidated on any write
-        self._emb_cache: dict[str, DataFrame] = {}
-        # driver-local serving bundles for strategy='local'
-        self._local_idx: dict[str, tuple] = {}
-        # columns whose embeddings-exist check passed; cleared on writes
-        self._embeddings_ok: set[str] = set()
+        # serve memos (the analog of the reference keeping its usearch
+        # index in RAM while serving, collection_actor.rs:143-159):
+        # column -> {memo name -> value}; the None key holds the
+        # docs-level memos. Read through _memo, released only by
+        # _drop_memos; _invalidate_cache lists which write drops what
+        self._memos: dict[str | None, dict] = {}
         # driver-RAM ceiling for strategy='local' serving (rows); a
         # 100x-scale collection must use the distributed strategies
         self.local_serve_max_rows: int = 1_000_000
@@ -147,27 +145,6 @@ class Collection:
         # driver + executor footprint grows with N. Corpus-scale query
         # sets belong in operators/topk.knn_join over a query DataFrame.
         self.search_many_max_queries: int = 10_000
-        # per-column (PQCodebook, cached codes DataFrame) for
-        # strategy='pq'; cleared on writes
-        self._pq_index: dict = {}
-        # per-column (centroids, PQCodebook) for strategy='ivf_pq'
-        # (codes live on disk); cleared on writes
-        self._ivf_pq_index: dict = {}
-        # per-column cached sign-bit signature view (key, sig) for
-        # strategy='hamming' -- 1 bit/dim, ~32x smaller than the float
-        # serve view; cleared on writes
-        self._hamming_index: dict = {}
-        # per-column signature CENTER (the per-dim fixed-point mean the
-        # sign bits threshold at); loaded/derived by the refresh paths
-        self._hamming_centers: dict[str, list[float]] = {}
-        # per-(column, group_col) cached normalized pooled-centroid
-        # view for the grouped MaxSim prefilter (r10, VERDICT r9 #1):
-        # one slim row per group, backed by the maxsim_pool parquet
-        # sidecar; cleared on writes
-        self._maxsim_pool: dict = {}
-        # per-group_col distinct-group counts behind
-        # resolve_maxsim_prefilter's auto tier; cleared on writes
-        self._maxsim_group_counts: dict[str, int] = {}
         # candidate depth for the hamming exact-cosine rescore (recall
         # knob: rescore >= corpus rows degenerates to exact search)
         self.hamming_rescore: int = 100
@@ -183,19 +160,6 @@ class Collection:
         # -- single-vector docs, multi-vector queries still meaningful
         # via search_multi
         self.maxsim_group_col: str | None = None
-        # per-column BM25 corpus stats (n_docs, avgdl) for the cached
-        # lexical view (strategy='hybrid'); cleared on writes
-        self._lex_stats: dict[str, tuple[int, float]] = {}
-        # per-column driver-side term->df map (the idf-literal serving
-        # mode: the dict every search engine's serving node keeps in
-        # RAM), built LAZILY on the first per-query hybrid search --
-        # batch paths (search_many) never pay the collect. None =
-        # vocabulary exceeded the ceiling below; per-query hybrid then
-        # computes df in-plan instead. Cleared on writes.
-        self._lex_dfmap: dict[str, dict[str, int] | None] = {}
-        # vocabulary sizes observed at lexical-view build (gates the
-        # lazy collect above)
-        self._lex_vocab: dict[str, int] = {}
         # vocabulary ceiling for collecting the dfreq table driver-side
         # (a str->int dict costs ~100-150 MB of driver RAM per million
         # terms; a 100 TB web corpus with a billion-term vocabulary
@@ -208,9 +172,6 @@ class Collection:
         # smaller, probes partition-pruned) is the shape that still serves
         self.auto_exact_max_rows: int = 200_000
         self.auto_cached_max_rows: int = 5_000_000
-        # per-column serve-view row counts backing the auto policy;
-        # cleared on writes
-        self._col_rows: dict[str, int] = {}
         # tombstone memo: tri-state existence probe (None = re-check the
         # FS on next read), the sidecar frame, and the deletion-backlog
         # row count backing the broadcast decision below (computed
@@ -310,14 +271,13 @@ class Collection:
         tombstones runs ``_invalidate_cache``, which drops this along
         with the serve caches, so appended files (and new tombstones)
         are never missed; an embed keeps it."""
-        df = getattr(self, "_docs_df", None)
-        if df is None:
+
+        def build() -> DataFrame:
             df = self._docs_raw()
             tomb = self._tombstones_hinted()
-            if tomb is not None:
-                df = df.join(tomb, KEY_COL, "left_anti")
-            self._docs_df = df
-        return df
+            return df if tomb is None else df.join(tomb, KEY_COL, "left_anti")
+
+        return self._memo(None, "docs", build)
 
     def _docs_raw(self) -> DataFrame:
         """The physical docs table INCLUDING tombstoned rows. Only for
@@ -1114,16 +1074,18 @@ class Collection:
         cleared on any write that invalidates caches) -- the Hadoop FS
         round-trip costs ~2 ms, which would dominate the driver-local
         serving path's per-query budget."""
-        if column in self._embeddings_ok:
-            return
-        part = os.path.join(self.embeddings_path, f"column_name={column}")
-        if not self._fs_nonempty(part):
-            raise RuntimeError(
-                f"collection {self.config.name!r} has no embeddings for "
-                f"column {column!r} yet; run embed_column({column!r}) "
-                f"(CLI: index/add-docs) first"
-            )
-        self._embeddings_ok.add(column)
+
+        def check() -> bool:
+            part = os.path.join(self.embeddings_path, f"column_name={column}")
+            if not self._fs_nonempty(part):
+                raise RuntimeError(
+                    f"collection {self.config.name!r} has no embeddings for "
+                    f"column {column!r} yet; run embed_column({column!r}) "
+                    f"(CLI: index/add-docs) first"
+                )
+            return True
+
+        self._memo(column, "embeddings_ok", check)
 
     def embeddings(self, column: str | None = None) -> DataFrame:
         """LIVE embeddings (tombstoned keys anti-joined out, like
@@ -1225,112 +1187,74 @@ class Collection:
     def _invalidate_cache(
         self, column: str | None = None, drop_index_meta: bool = True
     ) -> None:
-        """Drop serve-path caches after a write. ``drop_index_meta``
-        additionally removes the on-disk ANN quantizer files, forcing a
-        full index rebuild on next use -- required when existing keys
-        may carry DIFFERENT data (full re-embed / re-import); pass
-        False for append-only writes so the refresh paths can top the
-        indexes up incrementally instead.
+        """Drop serve memos after a write. The store (``_memos``) maps
+        an indexed column to its memos -- serve, raw_serve, lexical,
+        idf_map, local, local_lexical, embeddings_ok, rows, pq, ivf_pq,
+        hamming, hamming_center, (maxsim_pool, group_col) -- and None to
+        the docs-level ones: docs (the :meth:`docs` plan) and (groups,
+        group_col). ``drop_index_meta`` additionally removes the on-disk
+        ANN quantizer files, forcing a full index rebuild on next use --
+        required when existing keys may carry DIFFERENT data.
 
-        ``column`` names the one indexed column whose embeddings an
-        embed rewrote: only that column's caches drop, and the cached
-        docs plan (:meth:`docs`) stays -- an embed writes no docs or
-        tombstone file. Every other write passes None and drops it all.
+        =====================  ========  =======  =====  =====  =====
+        write                  embedded  other    docs-  tomb-  key
+                               column    columns  level  stone  mark
+        =====================  ========  =======  =====  =====  =====
+        embed_column (col)     drop      keep     keep   keep   keep
+        append, append_staged  drop      drop     drop   keep   drop*
+        delete_where           drop      drop     drop   drop   drop*
+        compact                drop      drop     drop   drop   drop
+        import_df              drop      drop     drop   drop   drop
+        =====================  ========  =======  =====  =====  =====
 
-        Two write-path memos live outside this reset, and each write
-        clears only the one it changes:
+        An embed passes its ``column``; every other write passes None.
+        Index files drop on import_df and a full re-embed (of that
+        column) only: appends, deletes and compaction keep them, so the
+        refresh paths top the indexes up incrementally.
+
+        The last two columns are memos outside the store, with their
+        own reset rules:
 
         * the tombstone memo (:meth:`_tombstones`): cleared by
           import_df, delete_where (both modes) and compact; appends,
           append_staged and embed_column keep it;
-        * the key watermark (:meth:`_key_watermark`): advanced by each
-          successful append; dropped by import_df, compact, a purge,
-          append_staged and a failed append; tombstone deletes and
-          embed_column keep it."""
-        cols = (
-            [
-                column,
-                f"__docs_{column}",
-                f"__serve_{column}",
-                f"__rawserve_{column}",
-                f"__lex_{column}",
-                f"__lexdf_{column}",
-            ]
-            if column
-            else list(self._emb_cache)
-        )
-        for c in cols:
-            df = self._emb_cache.pop(c, None)
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        if column is None:
-            # the cached docs plan pins the parquet file listing; every
-            # docs or tombstone write (import, append, delete, compact)
-            # must refresh it
-            self._docs_df = None
-            self._local_idx.clear()
-            self._embeddings_ok.clear()
-            self._lex_stats.clear()
-            self._col_rows.clear()
-            for cb, coded in self._pq_index.values():
-                try:
-                    coded.unpersist()
-                except Exception:
-                    pass
-            self._pq_index.clear()
-            self._ivf_pq_index.clear()
-            for sig in self._hamming_index.values():
-                try:
-                    sig.unpersist()
-                except Exception:
-                    pass
-            self._hamming_index.clear()
-            self._hamming_centers.clear()
-            for pv in self._maxsim_pool.values():
-                try:
-                    pv.unpersist()
-                except Exception:
-                    pass
-            self._maxsim_pool.clear()
-            self._maxsim_group_counts.clear()
-            self._lex_dfmap.clear()
-            self._lex_vocab.clear()
-            if drop_index_meta:
-                for c in self.config.index_columns:
-                    self._drop_index_meta(c)
-        else:
-            self._local_idx.pop(column, None)
-            self._local_idx.pop(f"__lex_{column}", None)
-            self._embeddings_ok.discard(column)
-            self._col_rows.pop(column, None)
-            self._lex_stats.pop(column, None)
-            self._lex_dfmap.pop(column, None)
-            self._lex_vocab.pop(column, None)
-            pq = self._pq_index.pop(column, None)
-            if pq is not None:
-                try:
-                    pq[1].unpersist()
-                except Exception:
-                    pass
-            self._ivf_pq_index.pop(column, None)
-            sig = self._hamming_index.pop(column, None)
-            if sig is not None:
-                try:
-                    sig.unpersist()
-                except Exception:
-                    pass
-            self._hamming_centers.pop(column, None)
-            for k in [k for k in self._maxsim_pool if k[0] == column]:
-                pv = self._maxsim_pool.pop(k)
-                try:
-                    pv.unpersist()
-                except Exception:
-                    pass
-            if drop_index_meta:
-                self._drop_index_meta(column)
+        * the key watermark (:meth:`_key_watermark`, ``drop*``):
+          advanced (not dropped) by each successful append; dropped by
+          import_df, compact, a purge, append_staged and a failed
+          append; tombstone deletes and embed_column keep it."""
+        for c in [column] if column is not None else list(self._memos):
+            self._drop_memos(c)
+        if drop_index_meta:
+            for c in [column] if column is not None else self.config.index_columns:
+                self._drop_index_meta(c)
+
+    def _memo(self, column: str | None, name, build, stale=None):
+        """The serve memo ``name`` of ``column`` (None: the docs-level
+        memos), built by ``build()`` on first use. A held value for
+        which ``stale(value)`` is true is dropped and rebuilt. A build
+        that returns None holds nothing."""
+        value = self._memos.get(column, {}).get(name)
+        if value is not None and (stale is None or not stale(value)):
+            return value
+        self._drop_memos(column, name)
+        value = build()
+        if value is not None:
+            self._memos.setdefault(column, {})[name] = value
+        return value
+
+    def _drop_memos(self, column: str | None, *names) -> None:
+        """Remove ``column``'s memos ``names`` (all of them when none is
+        named) from the store, unpersisting every cached frame among
+        them -- the one place a serve memo is released."""
+        held = self._memos.get(column, {})
+        for name in names or list(held):
+            value = held.pop(name, None)
+            for part in value if isinstance(value, tuple) else (value,):
+                if isinstance(part, DataFrame) and part.is_cached:
+                    try:
+                        part.unpersist()
+                    except Exception:  # a stopped session holds no cache
+                        pass
 
     def embed_all(self, incremental: bool = True) -> dict[str, int]:
         return {
@@ -1344,11 +1268,7 @@ class Collection:
         """Indexed-row count for ``column`` (one partition-pruned count
         on first use, cached until a write invalidates it) -- the size
         signal the auto strategy policy reads."""
-        n = self._col_rows.get(column)
-        if n is None:
-            n = self.embeddings(column).count()
-            self._col_rows[column] = n
-        return n
+        return self._memo(column, "rows", lambda: self.embeddings(column).count())
 
     def resolve_strategy(self, column: str) -> str:
         """The ``strategy='auto'`` policy: pick the serving shape from
@@ -1414,10 +1334,11 @@ class Collection:
         the docs table, cached until the next write."""
         if group_col is None:
             return None
-        n = self._maxsim_group_counts.get(group_col)
-        if n is None:
-            n = self.docs().select(group_col).distinct().count()
-            self._maxsim_group_counts[group_col] = n
+        n = self._memo(
+            None,
+            ("groups", group_col),
+            lambda: self.docs().select(group_col).distinct().count(),
+        )
         if n < self.maxsim_auto_prefilter_min_groups:
             return None
         return self.maxsim_auto_prefilter_k
@@ -1667,52 +1588,6 @@ class Collection:
         from letsearch_spark.operators.topk import knn_join
 
         vecs = self._embed_queries(queries)
-        qdf = self.spark.createDataFrame(
-            list(enumerate(vecs)),
-            "query_idx long, qvec array<float>",
-        )
-        if strategy == "ivf_pq":
-            # batched on-disk compressed search: ONE plan over the union
-            # of every query's probed _list partitions; no cached view
-            # of any kind (the tier for corpora beyond the cache)
-            from letsearch_spark.operators.pq import ivf_pq_knn_join
-
-            if column not in self._ivf_pq_index:
-                self.refresh_ivf_pq_index(column)
-            centroids, cb = self._ivf_pq_index[column]
-            hits = ivf_pq_knn_join(
-                self.spark,
-                self.ivf_pq_path(column),
-                centroids,
-                cb,
-                qdf,
-                k=limit,
-                nprobe=self.ivf_nprobe,
-                key_col=KEY_COL,
-                query_key_col="query_idx",
-                query_vec_col="qvec",
-                # BEFORE the top-k truncation, like the per-query path:
-                # a tombstoned key must not consume a rank slot (a
-                # post-ranking filter would leave rank gaps and
-                # under-filled results)
-                exclude=self._tombstones_hinted(),
-            )
-            docs = self.docs().select(
-                F.col(KEY_COL), F.col(column).alias("content")
-            )
-            return (
-                F.broadcast(hits)
-                .join(docs, KEY_COL)
-                .where(F.col("content").isNotNull())
-                .select(
-                    "query_idx",
-                    "rank",
-                    F.col(KEY_COL).alias("key"),
-                    "content",
-                    "score",
-                )
-                .orderBy("query_idx", "rank")
-            )
         if strategy == "hamming":
             # batched two-stage: one hamming_knn_join plan over the
             # cached 1-bit signature view (only signatures are scanned),
@@ -1784,6 +1659,51 @@ class Collection:
                 )
                 .orderBy("query_idx", "rank")
             )
+        # the query frame only the ivf_pq / pq / dense / hybrid plans read
+        qdf = self.spark.createDataFrame(
+            list(enumerate(vecs)),
+            "query_idx long, qvec array<float>",
+        )
+        if strategy == "ivf_pq":
+            # batched on-disk compressed search: ONE plan over the union
+            # of every query's probed _list partitions; no cached view
+            # of any kind (the tier for corpora beyond the cache)
+            from letsearch_spark.operators.pq import ivf_pq_knn_join
+
+            centroids, cb = self._ivf_pq_quantizers(column)
+            hits = ivf_pq_knn_join(
+                self.spark,
+                self.ivf_pq_path(column),
+                centroids,
+                cb,
+                qdf,
+                k=limit,
+                nprobe=self.ivf_nprobe,
+                key_col=KEY_COL,
+                query_key_col="query_idx",
+                query_vec_col="qvec",
+                # BEFORE the top-k truncation, like the per-query path:
+                # a tombstoned key must not consume a rank slot (a
+                # post-ranking filter would leave rank gaps and
+                # under-filled results)
+                exclude=self._tombstones_hinted(),
+            )
+            docs = self.docs().select(
+                F.col(KEY_COL), F.col(column).alias("content")
+            )
+            return (
+                F.broadcast(hits)
+                .join(docs, KEY_COL)
+                .where(F.col("content").isNotNull())
+                .select(
+                    "query_idx",
+                    "rank",
+                    F.col(KEY_COL).alias("key"),
+                    "content",
+                    "score",
+                )
+                .orderBy("query_idx", "rank")
+            )
         # the remaining strategies (dense / hybrid / pq) score or fetch
         # against the cached float serve view -- built only NOW, so the
         # cache-light tiers above never materialize it
@@ -1798,9 +1718,7 @@ class Collection:
             # strategy='pq' (pq_topk) bit for bit
             from letsearch_spark.operators.pq import pq_knn_join
 
-            if column not in self._pq_index:
-                self.build_pq_index(column)
-            cb, coded = self._pq_index[column]
+            cb, coded = self._pq_codes(column)
             hits = pq_knn_join(
                 coded,
                 cb,
@@ -2274,7 +2192,7 @@ class Collection:
             i: t for i, q in enumerate(queries) if (t := tokenize_query(q))
         }
         if query_terms:
-            postings, dfreq, n_docs, avgdl = self._lexical_view(column)
+            postings, dfreq, n_docs, avgdl, _ = self._lexical_view(column)
             # empty lexical corpus (e.g. all-CJK text under the ASCII
             # analyzer): degrade to dense-only like the per-query path
             if n_docs == 0 or avgdl <= 0.0:
@@ -2335,12 +2253,10 @@ class Collection:
         the cached postings by its terms and reads its terms' document
         frequencies from the cached dfreq table. Invalidated on writes.
 
-        Returns (postings, dfreq, n_docs, avgdl)."""
+        Returns (postings, dfreq, n_docs, avgdl, vocabulary size)."""
         from letsearch_spark.operators.bm25 import build_postings
 
-        key = f"__lex_{column}"
-        view = self._emb_cache.get(key)
-        if view is None:
+        def build():
             # build from the SERVE view, not the raw docs table: the two
             # legs and the content fetch must rank the same population.
             # Postings over self.docs() would let appended-but-not-yet-
@@ -2377,15 +2293,15 @@ class Collection:
                 .collect()[0]
             )
             vocab = dfreq.count()  # materialize the vocabulary table now
-            self._lex_stats[column] = (int(row["n"]), float(row["avgdl"] or 0.0))
-            self._lex_vocab[column] = int(vocab)
-            self._emb_cache[key] = view
-            self._emb_cache[f"__lexdf_{column}"] = dfreq
-        return (
-            view,
-            self._emb_cache[f"__lexdf_{column}"],
-            *self._lex_stats[column],
-        )
+            return (
+                view,
+                dfreq,
+                int(row["n"]),
+                float(row["avgdl"] or 0.0),
+                int(vocab),
+            )
+
+        return self._memo(column, "lexical", build)
 
     def _lex_idf_map(self, column: str) -> dict[str, int] | None:
         """Lazy driver-side term->df map for the idf-literal serving
@@ -2394,16 +2310,14 @@ class Collection:
         per-query hybrid search -- batch paths never pay it -- and only
         when the vocabulary fits under lexical_idf_cache_max_terms;
         otherwise None and the caller computes df in-plan."""
-        if column in self._lex_dfmap:
-            return self._lex_dfmap[column]
-        _view, dfreq, *_ = self._lexical_view(column)
-        if self._lex_vocab.get(column, 0) > self.lexical_idf_cache_max_terms:
-            self._lex_dfmap[column] = None
-        else:
-            self._lex_dfmap[column] = {
-                r["__term"]: int(r["__df"]) for r in dfreq.collect()
-            }
-        return self._lex_dfmap[column]
+
+        def build() -> dict[str, int] | None:
+            _view, dfreq, _n, _avgdl, vocab = self._lexical_view(column)
+            if vocab > self.lexical_idf_cache_max_terms:
+                return None
+            return {r["__term"]: int(r["__df"]) for r in dfreq.collect()}
+
+        return self._memo(column, "idf_map", build)
 
     def _search_hybrid(
         self, column: str, query: str, qvec, limit: int
@@ -2466,7 +2380,7 @@ class Collection:
         plan = dense_top
         terms = tokenize_query(query)
         if terms:
-            postings, _dfreq, n_docs, avgdl = self._lexical_view(column)
+            postings, _dfreq, n_docs, avgdl, _ = self._lexical_view(column)
             dfmap = self._lex_idf_map(column)
             if n_docs > 0 and avgdl > 0.0:
                 if dfmap is not None:
@@ -2567,7 +2481,7 @@ class Collection:
         # must not MATERIALIZE that cache (review r7: the hamming tier
         # exists precisely for corpora whose float view does not fit,
         # and its refresh routed through here)
-        cached = self._emb_cache.get(f"__serve_{column}")
+        cached = self._memos.get(column, {}).get("serve")
         base = cached if cached is not None else self._raw_serve_frame(column)
         return base.where(F.col("content").isNotNull()).select(
             KEY_COL, "vector"
@@ -2646,30 +2560,38 @@ class Collection:
     def build_pq_index(self, column: str) -> None:
         """Train the PQ codebook on the serve view and cache the coded
         (key, pq_code) table -- ``pq_m`` bytes per row instead of the
-        float vector. Called lazily by strategy='pq'; safe to call
-        eagerly after bulk loads."""
-        from letsearch_spark.operators.pq import encode_pq, train_pq
+        float vector. Built lazily by strategy='pq'; an eager call
+        after bulk loads (re)builds it."""
+        self._drop_memos(column, "pq")
+        self._pq_codes(column)
 
-        emb = (
-            self._serve_view(column)
-            .where(F.col("content").isNotNull())
-            .select(KEY_COL, "vector")
-        )
-        cb = train_pq(
-            emb, m=self.pq_m, nbits=self.pq_nbits, key_col=KEY_COL
-        )
-        coded = (
-            encode_pq(emb, cb).select(KEY_COL, "pq_code").cache()
-        )
-        coded.count()  # materialize so per-query cost is the ADC scan only
-        self._pq_index[column] = (cb, coded)
+    def _pq_codes(self, column: str) -> tuple:
+        """(PQCodebook, cached coded view) for strategy='pq', built on
+        first use."""
+
+        def build() -> tuple:
+            from letsearch_spark.operators.pq import encode_pq, train_pq
+
+            emb = (
+                self._serve_view(column)
+                .where(F.col("content").isNotNull())
+                .select(KEY_COL, "vector")
+            )
+            cb = train_pq(
+                emb, m=self.pq_m, nbits=self.pq_nbits, key_col=KEY_COL
+            )
+            coded = (
+                encode_pq(emb, cb).select(KEY_COL, "pq_code").cache()
+            )
+            coded.count()  # materialize so per-query cost is the ADC scan only
+            return cb, coded
+
+        return self._memo(column, "pq", build)
 
     def _search_pq(self, column: str, qvec, limit: int) -> DataFrame:
         from letsearch_spark.operators.pq import pq_topk
 
-        if column not in self._pq_index:
-            self.build_pq_index(column)
-        cb, coded = self._pq_index[column]
+        cb, coded = self._pq_codes(column)
         hits = pq_topk(coded, cb, qvec, k=limit, key_col=KEY_COL)
         return self._fetch_back_hits(hits, column, limit)
 
@@ -2688,23 +2610,23 @@ class Collection:
         search / rescore call (profiled at ~0.3-1.7 s of pure driver
         time under cProfile). ``_invalidate_cache`` drops the memo on
         every write, so new files and tombstones are never missed."""
-        key = f"__rawserve_{column}"
-        memo = self._emb_cache.get(key)
-        if memo is not None:
-            return memo
-        from letsearch_spark.functions.vector import l2_norm
 
-        emb = self.embeddings(column).select(KEY_COL, "vector")
-        if self.config.model_variant != "f32":
-            from letsearch_spark.functions.quantize import dequantize_column
+        def build() -> DataFrame:
+            from letsearch_spark.functions.vector import l2_norm
 
-            emb = dequantize_column(emb, "vector", self.config.model_variant)
-        docs = self.docs().select(F.col(KEY_COL), F.col(column).alias("content"))
-        frame = emb.withColumn("_vnorm", l2_norm("vector")).join(
-            docs, KEY_COL
-        )
-        self._emb_cache[key] = frame
-        return frame
+            emb = self.embeddings(column).select(KEY_COL, "vector")
+            if self.config.model_variant != "f32":
+                from letsearch_spark.functions.quantize import dequantize_column
+
+                emb = dequantize_column(emb, "vector", self.config.model_variant)
+            docs = self.docs().select(
+                F.col(KEY_COL), F.col(column).alias("content")
+            )
+            return emb.withColumn("_vnorm", l2_norm("vector")).join(
+                docs, KEY_COL
+            )
+
+        return self._memo(column, "raw_serve", build)
 
     def hamming_path(self, column: str) -> str:
         return os.path.join(self.home, "hamming", f"column={column}")
@@ -2763,11 +2685,11 @@ class Collection:
         hamming prefilter previously duplicated it). Stored signatures
         threshold at the per-dim mean, so queries must subtract the
         SAME center before the operator packs them; reads the center
-        :meth:`_hamming_view` populates. Plain driver-side rows (r11):
-        hamming_knn_join packs them locally, so round-tripping through
-        createDataFrame + collect was one pointless Spark job per
-        serving call."""
-        center = self._hamming_centers[column]
+        :meth:`refresh_hamming_index` memoizes. Plain driver-side rows
+        (r11): hamming_knn_join packs them locally, so round-tripping
+        through createDataFrame + collect was one pointless Spark job
+        per serving call."""
+        center = self._memos[column]["hamming_center"]
         return [
             (i, [float(x) - c for x, c in zip(v, center)])
             for i, v in enumerate(vecs)
@@ -2800,24 +2722,6 @@ class Collection:
                 center = [float(x) for x in np.load(io.BytesIO(raw))]
             if center is None:
                 action = "rebuild"  # signature data without its center
-        def _drop_cached_sig_view() -> None:
-            # any change to the on-disk signatures must invalidate the
-            # in-memory view, or an explicit refresh (the streaming
-            # refresh_index='hamming' path, or a second Collection over
-            # the same storage) would keep serving the pre-refresh
-            # snapshot out of the cache (r10 second-review catch -- the
-            # same hole _drop_cached_view closes for the pooled-centroid
-            # sidecar)
-            view = self._hamming_index.pop(column, None)
-            if view is not None:
-                try:
-                    view.unpersist()
-                except Exception:
-                    pass
-
-        if action == "current":
-            self._hamming_centers[column] = center
-            return "current"
         if action == "append":
             # new contains the fresh serve rows (key, vector); compute
             # ONLY their signatures under the FROZEN center (like IVF-PQ's
@@ -2837,28 +2741,39 @@ class Collection:
                 .write.mode("append")
                 .parquet(path)
             )
-            self._hamming_centers[column] = center
-            _drop_cached_sig_view()
-            return "appended"
-        center = self._hamming_center(column)
-        staged = path + ".build"
-        self._hamming_sig_frame(column, center).write.mode("overwrite").parquet(
-            staged
+        elif action != "current":
+            center = self._hamming_center(column)
+            staged = path + ".build"
+            self._hamming_sig_frame(column, center).write.mode(
+                "overwrite"
+            ).parquet(staged)
+            buf = io.BytesIO()
+            np.save(buf, np.asarray(center, dtype=np.float64))
+            self._fs_write_bytes(os.path.join(staged, "_center.npy"), buf.getvalue())
+            self._fs_replace(staged, path)
+        # any change to the on-disk signatures must drop the in-memory
+        # view, or an explicit refresh (the streaming
+        # refresh_index='hamming' path, or a second Collection over the
+        # same storage) would keep serving the pre-refresh snapshot out
+        # of the cache (r10 second-review catch)
+        changed = () if action == "current" else ("hamming",)
+        self._drop_memos(column, "hamming_center", *changed)
+        self._memo(column, "hamming_center", lambda: center)
+        return {"current": "current", "append": "appended", "missing": "built"}.get(
+            action, "rebuilt"
         )
-        buf = io.BytesIO()
-        np.save(buf, np.asarray(center, dtype=np.float64))
-        self._fs_write_bytes(os.path.join(staged, "_center.npy"), buf.getvalue())
-        self._fs_replace(staged, path)
-        self._hamming_centers[column] = center
-        _drop_cached_sig_view()
-        return "built" if action == "missing" else "rebuilt"
 
     def build_hamming_index(self, column: str) -> None:
-        """Cache the signature view for strategy='hamming': (key,
-        sig[, filter columns]) at 1 bit per dimension
-        (operators/hamming.py) -- ~32x smaller than the float serve
-        view, no training step. Called lazily on first use; safe to
-        call eagerly after bulk loads.
+        """Cache the signature view for strategy='hamming' (see
+        :meth:`_hamming_view`). Built lazily on first use; an eager call
+        after bulk loads refreshes the index and (re)builds the view."""
+        self._drop_memos(column, "hamming")
+        self._hamming_view(column)
+
+    def _hamming_view(self, column: str) -> DataFrame:
+        """The cached signature view: (key, sig[, filter columns]) at 1
+        bit per dimension (operators/hamming.py) -- ~32x smaller than
+        the float serve view, no training step.
 
         The signatures PERSIST as parquet (:meth:`hamming_path`,
         maintained by :meth:`refresh_hamming_index`): a process restart
@@ -2867,38 +2782,32 @@ class Collection:
         is the dominant cost of a cache-only design. The in-memory view
         is that parquet (32x smaller IO than the vectors), minus
         tombstones, plus ``serve_filter_columns`` joined from the docs
-        table at cache time (same copy-at-build + rebuild-on-growth
-        contract as the float serve view), so
+        table at cache time (the float serve view's copy-at-build +
+        rebuild-on-growth rule, :meth:`_lacks_filter_columns`), so
         ``search(where=..., strategy='hamming')`` predicates evaluate
-        scan-side BEFORE the candidate ranking -- no per-query join."""
-        extra = self._serve_extra_columns(column, "_sig")
-        self.refresh_hamming_index(column)
-        idx = self.spark.read.parquet(self.hamming_path(column))
-        tomb = self._tombstones_hinted()
-        if tomb is not None:
-            idx = idx.join(tomb, KEY_COL, "left_anti")
-        if extra:
-            idx = idx.join(self.docs().select(KEY_COL, *extra), KEY_COL)
-        idx = idx.cache()
-        idx.count()  # materialize: per-query cost is the bit-math scan only
-        self._hamming_index[column] = idx
+        scan-side BEFORE the candidate ranking -- no per-query join.
+        Every build runs refresh, which memoizes the index center in
+        lockstep."""
 
-    def _hamming_view(self, column: str) -> DataFrame:
-        """The cached signature view, built on first use and rebuilt
-        when ``serve_filter_columns`` grew since the build (the float
-        serve view's rule), so a where= predicate sees every listed
-        column. Populates the index center in lockstep (build always
-        runs refresh; ``_invalidate_cache`` clears both)."""
-        idx = self._hamming_index.get(column)
-        if idx is not None and any(
-            c not in idx.columns for c in self._serve_extra_columns(column, "_sig")
-        ):
-            self._hamming_index.pop(column).unpersist()
-            idx = None
-        if idx is None:
-            self.build_hamming_index(column)
-            idx = self._hamming_index[column]
-        return idx
+        def build() -> DataFrame:
+            extra = self._serve_extra_columns(column, "_sig")
+            self.refresh_hamming_index(column)
+            idx = self.spark.read.parquet(self.hamming_path(column))
+            tomb = self._tombstones_hinted()
+            if tomb is not None:
+                idx = idx.join(tomb, KEY_COL, "left_anti")
+            if extra:
+                idx = idx.join(self.docs().select(KEY_COL, *extra), KEY_COL)
+            idx = idx.cache()
+            idx.count()  # materialize: per-query cost is the bit-math scan only
+            return idx
+
+        return self._memo(
+            column,
+            "hamming",
+            build,
+            stale=lambda idx: self._lacks_filter_columns(idx, column, "_sig"),
+        )
 
     # ---- grouped-MaxSim pooled-centroid sidecar (r10, VERDICT r9 #1) ----
 
@@ -2962,19 +2871,10 @@ class Collection:
         path = self.maxsim_pool_path(column, group_col)
         live = self._maxsim_pool_live_frame(column, group_col)
         staged = path + ".build"
-
-        def _drop_cached_view() -> None:
-            # a successful swap must invalidate the in-memory view, or
-            # a caller who refreshes explicitly (the streaming
-            # refresh_index path) would keep serving the pre-refresh
-            # snapshot out of the cache
-            view = self._maxsim_pool.pop((column, group_col), None)
-            if view is not None:
-                try:
-                    view.unpersist()
-                except Exception:
-                    pass
-
+        # a successful swap must drop the in-memory view, or a caller
+        # who refreshes explicitly (the streaming refresh_index path)
+        # would keep serving the pre-refresh snapshot out of the cache
+        memo = ("maxsim_pool", group_col)
         if not self._fs_nonempty(path):
             pooled = mean_pool_vectors(
                 live,
@@ -2986,7 +2886,7 @@ class Collection:
             )
             pooled.write.mode("overwrite").parquet(staged)
             self._fs_replace(staged, path)
-            _drop_cached_view()
+            self._drop_memos(column, memo)
             return "built"
         idx = self.spark.read.parquet(path)
         cur = live.groupBy(group_col).agg(F.count("*").alias("_cur"))
@@ -3041,7 +2941,7 @@ class Collection:
                 staged
             )
             self._fs_replace(staged, path)
-            _drop_cached_view()
+            self._drop_memos(column, memo)
         finally:
             diff.unpersist()
         return "refreshed"
@@ -3053,24 +2953,24 @@ class Collection:
         ``_invalidate_cache``. After the first use, a prefilter leg
         costs one in-memory scan + map-side top-k -- no pooling, no
         shuffle, no window."""
-        key = (column, group_col)
-        view = self._maxsim_pool.get(key)
-        if view is not None:
-            return view
-        self.refresh_maxsim_pool_index(column, group_col)
-        from letsearch_spark.functions.vector import l2_norm
 
-        # _pvn: the centroid's norm precomputed INTO the cache (r10) --
-        # a prefilter leg's cosine is then one fold per row instead of
-        # three, bit-identical (the _vnorm/_serve_score precedent)
-        view = (
-            self.spark.read.parquet(self.maxsim_pool_path(column, group_col))
-            .select(group_col, "_pv", l2_norm("_pv").alias("_pvn"))
-            .cache()
-        )
-        view.count()
-        self._maxsim_pool[key] = view
-        return view
+        def build() -> DataFrame:
+            self.refresh_maxsim_pool_index(column, group_col)
+            from letsearch_spark.functions.vector import l2_norm
+
+            # _pvn: the centroid's norm precomputed INTO the cache (r10)
+            # -- a prefilter leg's cosine is then one fold per row
+            # instead of three, bit-identical (the _vnorm/_serve_score
+            # precedent)
+            view = (
+                self.spark.read.parquet(self.maxsim_pool_path(column, group_col))
+                .select(group_col, "_pv", l2_norm("_pv").alias("_pvn"))
+                .cache()
+            )
+            view.count()
+            return view
+
+        return self._memo(column, ("maxsim_pool", group_col), build)
 
     # driver-side IN-list ceiling for the hamming rescore fetch: below
     # it the <=rescore candidate keys collect and push down to the
@@ -3100,7 +3000,7 @@ class Collection:
         )
 
         idx = self._hamming_view(column)
-        center = self._hamming_centers[column]
+        center = self._memos[column]["hamming_center"]
         scan = idx.where(F.expr(where)) if where is not None else idx
         # the stored signatures threshold at the per-dim mean, so the
         # query must subtract the SAME center before packing
@@ -3111,7 +3011,7 @@ class Collection:
             .orderBy(F.asc("_ham"), F.asc(KEY_COL))
             .limit(depth)
         )
-        cached = self._emb_cache.get(f"__serve_{column}")
+        cached = self._memos[column].get("serve")
         if cached is not None:
             # some OTHER strategy already paid for the float cache --
             # rescoring against it is one broadcast join, zero IO, and
@@ -3177,9 +3077,9 @@ class Collection:
         action, new = self._plan_index_refresh(column, path)
         meta = None
         if action in ("current", "append"):
-            meta = self._ivf_pq_index.get(column)
-            if meta is None and self._load_ivf_pq_meta(column):
-                meta = self._ivf_pq_index[column]
+            meta = self._memo(
+                column, "ivf_pq", lambda: self._load_ivf_pq_meta(column)
+            )
             if meta is None:
                 action = "rebuild"  # index data without its quantizers
         if action == "current":
@@ -3227,7 +3127,8 @@ class Collection:
             os.path.join(self.ivf_pq_path(column), "_codebook.npz"),
             cbuf.getvalue(),
         )
-        self._ivf_pq_index[column] = (centroids, cb)
+        self._drop_memos(column, "ivf_pq")
+        self._memo(column, "ivf_pq", lambda: (centroids, cb))
 
     def _drop_index_meta(self, column: str) -> None:
         """Full-overwrite writes (re-embed, re-import) drop the on-disk
@@ -3261,10 +3162,10 @@ class Collection:
         except Exception:
             pass
 
-    def _load_ivf_pq_meta(self, column: str) -> bool:
+    def _load_ivf_pq_meta(self, column: str) -> tuple | None:
         """Reload persisted (centroids, codebook) from a prior build --
         avoids re-encoding the whole collection on the first ivf_pq
-        query of a new process. False when no valid index exists. Both
+        query of a new process. None when no valid index exists. Both
         sidecars round-trip through the Hadoop FS helpers, so remote
         collection homes (hdfs/s3a/gs) persist like local paths."""
         import io
@@ -3280,21 +3181,22 @@ class Collection:
             os.path.join(self.ivf_pq_path(column), "_codebook.npz")
         )
         if craw is None or braw is None:
-            return False
-        self._ivf_pq_index[column] = (
-            np.load(io.BytesIO(craw)),
-            PQCodebook.load(io.BytesIO(braw)),
-        )
-        return True
+            return None
+        return np.load(io.BytesIO(craw)), PQCodebook.load(io.BytesIO(braw))
+
+    def _ivf_pq_quantizers(self, column: str) -> tuple:
+        """(centroids, codebook) for ivf_pq serving. The first use after
+        a write validates the on-disk index against the embeddings and
+        tops it up incrementally (or rebuilds it when it must); the
+        refresh memoizes them."""
+        if self._memos.get(column, {}).get("ivf_pq") is None:
+            self.refresh_ivf_pq_index(column)
+        return self._memos[column]["ivf_pq"]
 
     def _search_ivf_pq(self, column: str, qvec, limit: int) -> DataFrame:
         from letsearch_spark.operators.pq import ivf_pq_topk
 
-        if column not in self._ivf_pq_index:
-            # validates freshness against the embeddings and tops the
-            # index up incrementally (or rebuilds when it must)
-            self.refresh_ivf_pq_index(column)
-        centroids, cb = self._ivf_pq_index[column]
+        centroids, cb = self._ivf_pq_quantizers(column)
         hits = ivf_pq_topk(
             self.spark,
             self.ivf_pq_path(column),
@@ -3338,8 +3240,7 @@ class Collection:
     def _local_bundle(self, column: str):
         import numpy as np
 
-        bundle = self._local_idx.get(column)
-        if bundle is None:
+        def build() -> tuple:
             view = self._serve_view(column)
             # strategy='local' collects the WHOLE serve view into driver
             # RAM (the reference's in-RAM serving model, driver-sized
@@ -3362,9 +3263,9 @@ class Collection:
             norms[norms == 0] = 1.0
             mat = mat / norms
             contents = [r["content"] for r in rows]
-            bundle = (keys, mat, contents)
-            self._local_idx[column] = bundle
-        return bundle
+            return keys, mat, contents
+
+        return self._memo(column, "local", build)
 
     def _local_lex_bundle(self, column: str):
         """Driver-RAM inverted index over the local serve bundle:
@@ -3386,8 +3287,7 @@ class Collection:
         bundle (it is built FROM it); the one-time build is a Python
         pass over the corpus text -- driver-sized collections only,
         like everything strategy='local'."""
-        cached = self._local_idx.get(f"__lex_{column}")
-        if cached is None:
+        def build() -> tuple:
             import math
             import re
             from collections import Counter
@@ -3440,9 +3340,9 @@ class Collection:
                     )
                     postings[t] = (p_arr, w)
             keys_arr = np.asarray(keys, dtype=np.int64)
-            cached = (postings, keys_arr, len(keys_arr))
-            self._local_idx[f"__lex_{column}"] = cached
-        return cached
+            return postings, keys_arr, len(keys_arr)
+
+        return self._memo(column, "local_lexical", build)
 
     def _local_hybrid_rows(
         self, column: str, query: str, qvec, limit: int
@@ -3598,15 +3498,12 @@ class Collection:
     def _serve_view(self, column: str) -> DataFrame:
         """Cached denormalized serving view (key, vector, content) -- the
         analog of the reference holding index + table open while serving
-        (collection_actor.rs:143-159). Built once, invalidated on writes."""
-        extra = self._serve_extra_columns(column)
-        view = self._emb_cache.get(f"__serve_{column}")
-        if view is not None and any(c not in view.columns for c in extra):
-            # serve_filter_columns grew since the build: rebuild so
-            # search(where=...) predicates can see the new columns
-            self._emb_cache.pop(f"__serve_{column}").unpersist()
-            view = None
-        if view is None:
+        (collection_actor.rs:143-159). Built once, invalidated on writes,
+        and rebuilt when ``serve_filter_columns`` grew
+        (:meth:`_lacks_filter_columns`)."""
+
+        def build() -> DataFrame:
+            extra = self._serve_extra_columns(column)
             docs = self.docs().select(
                 F.col(KEY_COL), F.col(column).alias("content"), *extra
             )
@@ -3624,5 +3521,19 @@ class Collection:
             emb = emb.withColumn("_vnorm", l2_norm(F.col("vector")))
             view = emb.join(docs, KEY_COL).cache()
             view.count()  # materialize now; searches then cost one job
-            self._emb_cache[f"__serve_{column}"] = view
-        return view
+            return view
+
+        return self._memo(
+            column,
+            "serve",
+            build,
+            stale=lambda view: self._lacks_filter_columns(view, column),
+        )
+
+    def _lacks_filter_columns(self, view: DataFrame, column: str, *own) -> bool:
+        """True when ``serve_filter_columns`` grew since ``view`` was
+        built: the stale rule of the float serve view and the signature
+        view, so a where= predicate sees every listed column."""
+        return any(
+            c not in view.columns for c in self._serve_extra_columns(column, *own)
+        )

@@ -255,25 +255,26 @@ def perplexity_buckets(
     ``exact=False`` (default) uses ``percentile_approx`` (a fixed-size
     sketch per partition -- the only choice at 100 TB);
     ``exact=True`` uses the exact interpolated percentile for
-    small-corpus / oracle-parity runs."""
+    small-corpus / oracle-parity runs.
+
+    The cutoff aggregation AND the returned frame both read the scored
+    (key, n_grams, ppl) corpus, so it is scored ONCE, eagerly, into a
+    local checkpoint (executor-resident blocks, the
+    :func:`~letsearch_spark.operators.curriculum.distributed_rank`
+    ``pin='local'`` shape): the returned frame reads those blocks, and
+    Spark's context cleaner frees them once that frame (and every
+    frame derived from it) is garbage -- no Spark cache entry outlives
+    the call. Like any local checkpoint, the blocks do not survive an
+    executor loss."""
     if len(fractions) != 2 or min(fractions) <= 0 or sum(fractions) >= 1:
         raise ValueError(
             "fractions must be two positive head/middle shares summing to < 1, "
             f"got {fractions!r}"
         )
-    from pyspark import StorageLevel
-
-    # the cutoff aggregation AND the returned frame both read the
-    # scored corpus; without pinning it, the full LM scoring (n-gram
-    # explode + two hash joins + per-doc agg) would execute twice --
-    # the dominant cost at corpus scale. The persist is released when
-    # Spark evicts it (MEMORY_AND_DISK, the same policy as the prep
-    # pipeline's staged persistence); callers streaming the result can
-    # unpersist via scored's lineage once written.
     scored = perplexity(
         docs, lm, key_col, text_col, n, alpha,
         smoothing=smoothing, discount=discount,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=True)
     p1, p2 = fractions[0], fractions[0] + fractions[1]
     pctile = F.percentile if exact else F.percentile_approx
     cuts = (

@@ -40,7 +40,7 @@ _WEIGHT_HINTS = {
     "test_api.py": 45, "test_hamming_maxsim.py": 45, "test_pq.py": 40,
     "test_stateful_streaming.py": 35, "test_rotated_contract.py": 35,
     "test_pca.py": 20, "test_mining.py": 25,
-    "test_window_contract.py": 140,
+    "test_window_contract.py": 140, "test_write_memos.py": 470,
 }
 
 

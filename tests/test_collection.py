@@ -655,20 +655,28 @@ def test_search_hybrid_idf_modes_agree_and_invalidate(coll):
         (r["key"], r["score"])
         for r in coll.search("text", q, limit=10, strategy="hybrid").collect()
     ]
-    assert coll._lex_dfmap.get("text") is not None  # literal mode served
+    assert coll._memos["text"].get("idf_map") is not None  # literal mode served
     # force the huge-vocabulary fallback: df computed in-plan
-    coll._lex_dfmap["text"] = None
-    inplan = [
-        (r["key"], r["score"])
-        for r in coll.search("text", q, limit=10, strategy="hybrid").collect()
-    ]
+    coll._drop_memos("text", "idf_map")
+    ceiling = coll.lexical_idf_cache_max_terms
+    coll.lexical_idf_cache_max_terms = 0
+    try:
+        inplan = [
+            (r["key"], r["score"])
+            for r in coll.search("text", q, limit=10, strategy="hybrid").collect()
+        ]
+        assert "idf_map" not in coll._memos["text"]  # in-plan mode served
+    finally:
+        coll.lexical_idf_cache_max_terms = ceiling  # module-scoped fixture
     assert lit == inplan
+    coll.search("text", q, limit=5, strategy="hybrid").collect()
+    assert coll._memos["text"].get("idf_map")
     # a write must invalidate the map alongside the lexical view
     coll._invalidate_cache("text")
-    assert "text" not in coll._lex_dfmap
+    assert "idf_map" not in coll._memos.get("text", {})
     # ...and a subsequent hybrid search rebuilds it
     coll.search("text", q, limit=5, strategy="hybrid").collect()
-    assert coll._lex_dfmap.get("text")
+    assert coll._memos["text"].get("idf_map")
 
 
 def test_search_hybrid_excludes_unembedded_appends(spark, sf_dir, tmp_path):
@@ -861,14 +869,14 @@ def test_search_strategy_pq(spark, tmp_path, sf_dir):
         h["key"] for h in sorted(hits, key=lambda h: (-h["score"], h["key"]))
     ]
     # codebook + coded cache present; codes are pq_m bytes
-    cb, coded = c._pq_index["text"]
+    cb, coded = c._memos["text"]["pq"]
     assert cb.m == c.pq_m
     assert len(coded.select("pq_code").first()["pq_code"]) == c.pq_m
 
     # writes invalidate the pq index
     one = c.docs().limit(1).drop("_key")
     c._append_df(one)
-    assert "text" not in c._pq_index
+    assert "pq" not in c._memos.get("text", {})
     c.embed_column("text", incremental=True)
     assert len(c.search("text", "spark join", limit=3, strategy="pq").collect()) == 3
 
@@ -978,13 +986,13 @@ def test_search_strategy_hamming(spark, tmp_path, sf_dir):
         hits = c.search("text", row["text"], limit=5, strategy="hamming")
         return [(h["key"], h["score"].hex()) for h in hits.collect()]
 
-    assert "__serve_text" in c._emb_cache  # branch 1: cached float view
+    assert "serve" in c._memos["text"]  # branch 1: cached float view
     assert hamming_bits() == want
-    c._emb_cache.pop("__serve_text").unpersist()
+    c._drop_memos("text", "serve")
     assert hamming_bits() == want  # branch 2: collected IN-list
     c.hamming_inlist_max = 0
     assert hamming_bits() == want  # branch 3: broadcast join
-    assert "__serve_text" not in c._emb_cache
+    assert "serve" not in c._memos["text"]
     del c.hamming_inlist_max
 
     # partial rescore still overlaps the exact top-10 well
@@ -992,12 +1000,12 @@ def test_search_strategy_hamming(spark, tmp_path, sf_dir):
     approx = c.search("text", row["text"], limit=5, strategy="hamming").collect()
     exact10 = {h["key"] for h in c.search("text", row["text"], limit=10).collect()}
     assert len({h["key"] for h in approx} & exact10) >= 3
-    assert "text" in c._hamming_index
+    assert "hamming" in c._memos["text"]
 
     # writes invalidate the signature cache
     one = c.docs().limit(1).drop("_key")
     c._append_df(one)
-    assert "text" not in c._hamming_index
+    assert "hamming" not in c._memos.get("text", {})
     c.embed_column("text", incremental=True)
     assert (
         len(c.search("text", "spark join", limit=3, strategy="hamming").collect())
@@ -1041,7 +1049,7 @@ def test_search_strategy_ivf_pq(spark, tmp_path, sf_dir):
     # writes invalidate
     one = c.docs().limit(1).drop("_key")
     c._append_df(one)
-    assert "text" not in c._ivf_pq_index
+    assert "ivf_pq" not in c._memos.get("text", {})
     c.embed_column("text", incremental=True)
     assert len(c.search("text", "spark", limit=3, strategy="ivf_pq").collect()) == 3
 
@@ -1067,17 +1075,17 @@ def test_ivf_pq_meta_persists_across_processes(spark, tmp_path, sf_dir):
     saved = np.load(cpath)
 
     c2 = Collection.load(spark, str(tmp_path), "meta")
-    assert c2._ivf_pq_index == {}
+    assert c2._memos == {}
     hits = c2.search("text", "warm", limit=3, strategy="ivf_pq").collect()
     assert len(hits) == 3
     # loaded, not retrained: identical centroids object contents
-    assert np.array_equal(c2._ivf_pq_index["text"][0], saved)
+    assert np.array_equal(c2._memos["text"]["ivf_pq"][0], saved)
 
     # append-only write: in-memory serve caches drop, but the on-disk
     # quantizers survive for the incremental refresh path
     one = c2.docs().limit(1).drop("_key")
     c2._append_df(one)
-    assert c2._ivf_pq_index == {}
+    assert "ivf_pq" not in c2._memos.get("text", {})
     assert os.path.exists(cpath)
 
     # full re-embed may re-vector EXISTING keys -> models are dropped
@@ -1281,10 +1289,10 @@ def test_serve_view_stable_when_indexed_column_listed(coll):
     coll.serve_filter_columns = ["lang", "text"]
     try:
         coll.search("text", "alpha words", limit=3).collect()
-        v1 = coll._emb_cache.get("__serve_text")
+        v1 = coll._memos["text"].get("serve")
         assert v1 is not None
         coll.search("text", "beta rows", limit=3).collect()
-        assert coll._emb_cache.get("__serve_text") is v1
+        assert coll._memos["text"].get("serve") is v1
     finally:
         coll.serve_filter_columns = []  # module-scoped fixture: reset
 
@@ -1404,13 +1412,13 @@ def test_search_strategy_auto(spark, tmp_path, sf_dir):
     )
 
     # the size signal is cached (no recount) and invalidated on writes
-    assert coll._col_rows["text"] == 500
+    assert coll._memos["text"]["rows"] == 500
     coll.add_chunks(["a brand new chunk of text"], column="text")
-    assert "text" not in coll._col_rows
+    assert "rows" not in coll._memos.get("text", {})
     coll.embed_column("text")
     coll.auto_exact_max_rows = 200_000
     assert coll.resolve_strategy("text") == "join"
-    assert coll._col_rows["text"] == 501
+    assert coll._memos["text"]["rows"] == 501
 
 
 def _index_data_files(path):
@@ -1947,7 +1955,7 @@ def test_maxsim_prefilter_auto_tier(spark, tmp_path, sf_dir):
 
     # force the boundary the other way: auto == explicit k
     c.maxsim_auto_prefilter_min_groups = 1
-    c._maxsim_group_counts.clear()
+    c._drop_memos(None, ("groups", "lang"))
     k = c.maxsim_auto_prefilter_k
     assert c.resolve_maxsim_prefilter("text", "lang") == k
     assert rows(prefilter_k="auto") == rows(prefilter_k=k)

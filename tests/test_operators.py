@@ -1694,6 +1694,34 @@ def test_perplexity_buckets_matches_twin(spark):
         perplexity_buckets(docs, lm, fractions=(0.5, 0.6))
 
 
+def test_perplexity_buckets_releases_its_scoring(spark):
+    """perplexity_buckets scores the corpus once (its result reads the
+    pinned scores, no n-gram explode), and no Spark cache entry for the
+    scored corpus outlives a call -- a second call on the same inputs
+    adds none either."""
+    from letsearch_spark.operators.ngram_lm import (
+        perplexity,
+        perplexity_buckets,
+        train_ngram_lm,
+    )
+
+    corpus = spark.createDataFrame(
+        [("the cat sat on the mat",), ("the dog sat on the rug",)], "text string"
+    )
+    lm = train_ngram_lm(corpus, n=2)
+    docs = spark.createDataFrame(
+        [(i, " ".join(["the cat sat on the rug"] * (i % 3 + 1))) for i in range(12)],
+        "doc_id long, text string",
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    scored = perplexity(docs, lm)  # the plan perplexity_buckets scores
+    for _ in range(2):
+        out = perplexity_buckets(docs, lm, exact=True)
+        assert out.count() == 12
+        assert not cache.lookupCachedData(scored._jdf).isDefined()
+        assert "Generate" not in out._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_new_operators_degenerate_inputs(spark):
     """Empty/degenerate corpora must yield empty (not crash): the
     shapes a scheduled pipeline hits on an empty partition day."""

@@ -616,7 +616,7 @@ def test_stream_refresh_hamming_and_maxsim_pool(spark, tmp_path):
     coll.search_multi(
         "text", ["spark joins"], limit=3, group_col="grp", prefilter_k=2
     ).collect()
-    assert ("text", "grp") in coll._maxsim_pool  # view cached
+    assert ("maxsim_pool", "grp") in coll._memos["text"]  # view cached
     b2 = [(f"third batch doc {i} fresh group content", "c") for i in range(4)]
     process2(spark.createDataFrame(b2, schema), 2)
     groups = {
@@ -643,7 +643,7 @@ def test_stream_refresh_hamming_and_maxsim_pool(spark, tmp_path):
     # the re-read pool view sees the new group, and the hamming view
     # cache is gone until the next lazy build
     coll.search("text", "spark joins", limit=1, strategy="hamming").collect()
-    assert "text" in coll._hamming_index  # signature view cached
+    assert "hamming" in coll._memos["text"]  # signature view cached
     other = Collection.load(spark, str(tmp_path / "root"), "hprep")
     other._append_df(
         spark.createDataFrame(
@@ -651,14 +651,14 @@ def test_stream_refresh_hamming_and_maxsim_pool(spark, tmp_path):
         )
     )
     other.embed_column("text", incremental=True)
-    assert ("text", "grp") in coll._maxsim_pool
+    assert ("maxsim_pool", "grp") in coll._memos["text"]
     assert coll.refresh_maxsim_pool_index("text", "grp") == "refreshed"
     view_groups = {
         r["grp"] for r in coll._maxsim_pool_view("text", "grp").collect()
     }
     assert "d" in view_groups
     assert coll.refresh_hamming_index("text") in ("appended", "rebuilt")
-    assert "text" not in coll._hamming_index  # stale view dropped
+    assert "hamming" not in coll._memos["text"]  # stale view dropped
 
     import pytest as _pytest
 

@@ -38,9 +38,49 @@ def _has_column_embeddings(c: Collection) -> bool:
     return c._fs_nonempty(os.path.join(c.embeddings_path, f"column_name={COLUMN}"))
 
 
+# every per-query serving strategy, each through its own memos;
+# 'maxsim' groups by the collection's maxsim_group_col
+STRATEGIES = ("join", "hamming", "pq", "ivf_pq", "hybrid", "maxsim")
+# the rows c must share with the twin: the exact strategies, and the
+# approximate ones whose index the twin reads from the same files
+# (pq trains its codebook in memory, so only its keys are checked)
+SAME_AS_TWIN = (
+    "join", "hamming", "ivf_pq", "hybrid", "maxsim",
+    "local", "local_hybrid", "many_dense",
+)
+QUERIES = ["spark join window", "batch query shard"]
+
+
+def _load(spark, root: str, name: str) -> Collection:
+    c = Collection.load(spark, root, name)
+    c.serve_filter_columns = ["grp"]
+    c.maxsim_group_col = "grp"
+    return c
+
+
+def _serve(c: Collection, strategies) -> dict[str, list[dict]]:
+    """Rows (as dicts) of each serving path in ``strategies``; the
+    corpus stays under the limit, so every path returns every row it
+    can rank."""
+    out = {}
+    for s in strategies:
+        if s in ("local", "local_hybrid"):
+            out[s] = c.search_rows(COLUMN, QUERIES[0], limit=100, strategy=s)
+        elif s == "many_dense":
+            rows = c.search_many(COLUMN, QUERIES, limit=100).collect()
+            out[s] = [r.asDict() for r in rows]
+        else:
+            rows = c.search(COLUMN, QUERIES[0], limit=100, strategy=s).collect()
+            out[s] = [r.asDict() for r in rows]
+    return out
+
+
 def _assert_matches_twin(spark, c: Collection, root: str, step: str) -> list[int]:
-    """Compare ``c`` with a memo-free twin; return the live doc keys."""
-    twin = Collection.load(spark, root, c.config.name)
+    """Compare ``c`` with a memo-free twin; return the live doc keys.
+    With embeddings on disk, ``c`` serves through every memo: no path
+    may serve a tombstoned, purged or unembedded key, or a key's old
+    content, and the rows in SAME_AS_TWIN equal the twin's."""
+    twin = _load(spark, root, c.config.name)
     live = _keys(c.docs())
     assert live == _keys(twin.docs()), step
     assert c._key_watermark() == twin._key_watermark(), step
@@ -49,33 +89,39 @@ def _assert_matches_twin(spark, c: Collection, root: str, step: str) -> list[int
         assert emb == _keys(twin.embeddings(COLUMN)), step
         tomb = twin._tombstones()
         dead = set() if tomb is None else set(_keys(tomb))
-        # the corpus stays under the limit: every live embedded key comes back
-        got = [
-            (r["key"], r["score"])
-            for r in c.search(COLUMN, "spark join window", limit=100).collect()
-        ]
-        want = [
-            (r["key"], r["score"])
-            for r in twin.search(COLUMN, "spark join window", limit=100).collect()
-        ]
-        assert got == want, step
-        hit_keys = {k for k, _ in got}
-        assert not hit_keys & dead, step
-        assert hit_keys == set(emb), step
-        assert hit_keys <= set(live), step
+        content = {
+            r["_key"]: r[COLUMN]
+            for r in twin.docs().select("_key", COLUMN).collect()
+        }
+        got = _serve(c, STRATEGIES + ("local", "local_hybrid", "many_dense"))
+        for s, rows in got.items():
+            hit_keys = {r["key"] for r in rows}
+            assert not hit_keys & dead, (step, s)
+            assert hit_keys <= set(emb) <= set(live), (step, s)
+            for r in rows:
+                assert r["content"] == content[r["key"]], (step, s, r["key"])
+        # exact top-100 over a smaller corpus: every live embedded key
+        assert {r["key"] for r in got["join"]} == set(emb), step
+        want = _serve(twin, SAME_AS_TWIN)
+        for s in SAME_AS_TWIN:
+            assert got[s] == want[s], (step, s)
     return live
 
 
 def test_write_sequence_matches_fresh_twin(spark, tmp_path):
     """A seeded interleaving of every write verb on one Collection: after
-    each step its live doc keys, live embedding keys, next key and
-    search hits equal those of a freshly loaded twin, and no search
-    returns a tombstoned key. Deletes aim at the current max key, so
-    the key-continuation rule (a tombstoned max stays reserved; a
-    purged one is free again) is exercised by compact and purge."""
+    each step its live doc keys, live embedding keys and next key equal
+    those of a freshly loaded twin, and it serves through every memo
+    (each search strategy, both driver-local ones, batched dense) with
+    no tombstoned or purged key and no stale content; exact paths and
+    file-backed indexes return the twin's rows. Deletes aim at the
+    current max key, so the key-continuation rule (a tombstoned max
+    stays reserved; a purged one is free again) is exercised by
+    compact and purge."""
     rng = random.Random(20261017)
     root = str(tmp_path / "root")
-    c = Collection.create(spark, root, "seq", [COLUMN], "stub://8")
+    Collection.create(spark, root, "seq", [COLUMN], "stub://8")
+    c = _load(spark, root, "seq")
     c.import_df(_frame(spark, _rows(rng, 12)))
     c.embed_column(COLUMN)
     live = _assert_matches_twin(spark, c, root, "initial import")
@@ -192,3 +238,65 @@ def test_embed_column_leaves_session_overwrite_mode(spark, tmp_path, sf_dir):
         assert _keys(c.embeddings("text")) == text_keys
     finally:
         spark.conf.set(key, before)
+
+
+def _frames(memos: dict) -> list:
+    """The cached DataFrames among one store entry's memos."""
+    from pyspark.sql import DataFrame
+
+    parts = [
+        part
+        for value in memos.values()
+        for part in (value if isinstance(value, tuple) else (value,))
+    ]
+    return [p for p in parts if isinstance(p, DataFrame) and p.is_cached]
+
+
+def test_invalidate_releases_every_cached_frame(spark, tmp_path):
+    """Serve every strategy once on a two-column collection, so the
+    store holds every memo kind; dropping one column's entry releases
+    each of its cached frames from Spark's CacheManager and keeps the
+    other column's and the docs-level memos, and the full drop leaves
+    the store and the CacheManager empty."""
+    rng = random.Random(5)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    root = str(tmp_path / "root")
+    Collection.create(spark, root, "rel", [COLUMN, "tag"], "stub://8")
+    c = _load(spark, root, "rel")
+    c.import_df(_frame(spark, _rows(rng, 30)).withColumn("tag", F.col("text")))
+    c.embed_all()
+
+    q = QUERIES[0]
+    c.search_many(COLUMN, QUERIES, limit=5, strategy="hamming").collect()
+    _serve(c, STRATEGIES + ("local", "local_hybrid", "many_dense"))
+    c.search(COLUMN, q, limit=5, strategy="auto").collect()
+    for k in ("auto", 2):
+        c.search_multi(COLUMN, [q], limit=5, group_col="grp", prefilter_k=k).collect()
+    c.search("tag", q, limit=5, strategy="hamming").collect()
+    assert set(c._memos[COLUMN]) == {
+        "serve", "raw_serve", "lexical", "idf_map", "local", "local_lexical",
+        "embeddings_ok", "rows", "pq", "ivf_pq", "hamming", "hamming_center",
+        ("maxsim_pool", "grp"),
+    }
+    assert set(c._memos[None]) == {"docs", ("groups", "grp")}
+
+    def held(frames) -> list[bool]:
+        return [cache.lookupCachedData(f._jdf).isDefined() for f in frames]
+
+    text_frames = _frames(c._memos[COLUMN])
+    tag_frames = _frames(c._memos["tag"])
+    # serve, lexical postings + dfreq, pq codes, hamming, maxsim pool
+    assert len(text_frames) == 6 and all(held(text_frames))
+    assert tag_frames and all(held(tag_frames))
+
+    c._invalidate_cache(COLUMN)
+    assert not c._memos.get(COLUMN)
+    assert not any(held(text_frames))
+    assert all(held(tag_frames))
+    assert set(c._memos[None]) == {"docs", ("groups", "grp")}
+
+    c._invalidate_cache()
+    assert not any(c._memos.values())
+    assert not any(held(tag_frames))
+    assert cache.isEmpty()

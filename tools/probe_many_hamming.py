@@ -61,7 +61,7 @@ def main() -> None:
     t0 = time.time()
     coll.build_hamming_index("text")
     out["index_build"] = round(time.time() - t0, 3)
-    idx = coll._hamming_index["text"]
+    idx = coll._hamming_view("text")
     out["index_partitions"] = idx.rdd.getNumPartitions()
     out["index_rows"] = idx.count()
 
